@@ -78,32 +78,6 @@ def warm_workers(spark, cores: int) -> None:
     df.groupBy("id").applyInPandas(f, "id long").count()
 
 
-def build_once(cores: int, tag: str, expand: int | None = None,
-               drange_size: int | None = None) -> dict:
-    """Fresh build at a given parallelism; returns timing + size facts."""
-    spark = get_spark(app_name=f"sparklucene-bench-{tag}", cores=cores,
-                      shuffle_partitions=max(cores, 8))
-    try:
-        warm_workers(spark, cores)
-        base = load_corpus(spark, SF_DIR)
-        n_base = base.count()
-        corpus = expand_corpus(base, expand or EXPAND, n_base)
-        corpus = corpus.repartition(max(cores * 2, 8)).cache()
-        n_docs = corpus.count()  # materialize cache before the clock starts
-        index_dir = f"/tmp/sparklucene-bench-{tag}"
-        shutil.rmtree(index_dir, ignore_errors=True)
-        t0 = time.perf_counter()
-        stats = build_index(spark, corpus, index_dir, resume=False,
-                            drange_size=drange_size)
-        build_sec = time.perf_counter() - t0
-        return {"cores": cores, "docs": int(n_docs), "build_sec": build_sec,
-                "docs_per_sec": n_docs / build_sec, "index_dir": index_dir,
-                "sum_dl": int(stats["sum_dl"]), "spark": spark}
-    except Exception:
-        spark.stop()
-        raise
-
-
 def build_reps(cores: int, tag: str, reps: int,
                expand: int | None = None,
                drange_size: int | None = None) -> dict:

@@ -97,6 +97,8 @@ def assign_doc_ids(df: DataFrame) -> DataFrame:
     the same rows. Read an immutable source — an Iceberg snapshot
     (time-travel/pinned snapshot-id) or a staged parquet dir; if the
     source offers no snapshot isolation, ``df.localCheckpoint()`` first.
+    A violation fails the rank job (a row whose bucket was empty at
+    count time has no offset) instead of silently dropping rows.
     """
     keys = ["repo", "path", "commit"]
     bcol, ocol = "_sl_idbkt", "_sl_idoff"
@@ -121,11 +123,15 @@ def assign_doc_ids(df: DataFrame) -> DataFrame:
         [(b, offsets[b]) for b in sorted(offsets)],
         f"{bcol} int, {ocol} long")
     w = Window.partitionBy(bcol).orderBy(*keys)
+    off = F.when(F.col(ocol).isNull(), F.raise_error(F.lit(
+        "assign_doc_ids: a row landed in a bucket that was empty when "
+        "the buckets were counted — the source changed between the two "
+        "passes (read a snapshot or localCheckpoint() it first)"))
+    ).otherwise(F.col(ocol))
     return (bucketed
-            .join(F.broadcast(offs), bcol)
+            .join(F.broadcast(offs), bcol, "left")
             .withColumn("doc_id",
-                        (F.row_number().over(w).cast("long") - 1
-                         + F.col(ocol)))
+                        (F.row_number().over(w).cast("long") - 1 + off))
             .drop(bcol, ocol))
 
 

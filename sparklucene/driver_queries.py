@@ -6997,7 +6997,7 @@ FROM feats ORDER BY ltr_score DESC, doc_id ASC LIMIT 10""")
 def _frange_entries() -> dict[str, tuple[Callable, str | None]]:
     """FunctionRangeQuery / ``{!frange}`` (round 4; u8:solr/core/.../
     search/function/FunctionRangeQuery.java): a non-scoring doc-set
-    filter by a function over doc attributes, cogrouped into the range
+    filter by a function over doc attributes, streamed into the range
     scorer (filter context — scores unchanged). Two entries: a scoring
     boolean under an attribute-range fq, and ``q=*:*`` under a computed-
     function fq (the classic frange shape)."""

@@ -284,12 +284,6 @@ def shard_of(h: int, n_shards: int) -> int:
     return (h * n_shards) >> 32
 
 
-def hash32_sql(col_expr: str) -> str:
-    """ANSI-ish SQL mirror of :func:`hash32` (works in Spark SQL via
-    conv(); DuckDB uses CAST('0x…' AS UBIGINT) — see oracle builders)."""
-    return f"CAST(conv(substring(sha2(CAST({col_expr} AS STRING), 256), 1, 8), 16, 10) AS BIGINT)"
-
-
 def _hash32_col(id_col: str, key_col: str | None):
     """Spark Column computing the composite ring hash."""
     def h(col, n):  # first n hex digits of sha256 -> long

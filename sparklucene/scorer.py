@@ -54,16 +54,18 @@ class RangeCell:
 
     Norm bytes travel inside the cell (impact-list design): scoring needs
     no docmeta lookup, so the whole query path is a single postings scan.
+    Byte fields may be memoryviews over Arrow buffers (read-only, never
+    copied); empty means absent.
     """
 
-    doc_bytes: bytes
-    tf_bytes: bytes
-    norm_bytes: bytes
+    doc_bytes: bytes | memoryview
+    tf_bytes: bytes | memoryview
+    norm_bytes: bytes | memoryview
     block_last: np.ndarray
     block_max_tf: np.ndarray
     block_min_norm: np.ndarray
-    pos_bytes: bytes = b""
-    pay_bytes: bytes = b""
+    pos_bytes: bytes | memoryview = b""
+    pay_bytes: bytes | memoryview = b""
     _docs: np.ndarray | None = field(default=None, repr=False)
     _tfs: np.ndarray | None = field(default=None, repr=False)
 

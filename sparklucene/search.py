@@ -26,6 +26,8 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -34,6 +36,7 @@ import threading
 from collections import OrderedDict
 
 from sparklucene.build import IndexPaths, load_stats
+from sparklucene.corpus import with_drange
 from sparklucene.query import (And, ConstantScore, DisMax, Filtered, Fuzzy,
                                MatchAllDocs, MatchNoDocs, MultiTermQuery,
                                Not, Or, Prefix, Query, Regexp, Term,
@@ -44,12 +47,12 @@ from sparklucene.query import (And, ConstantScore, DisMax, Filtered, Fuzzy,
 from sparklucene.scorer import GlobalStats, RangeCell, RangeScorer, TermStats
 
 RESULT_SCHEMA = "doc_id long, score double"
+BATCH_SCHEMA = "query string, doc_id long, score double"
 
-#: deletes at or below this count are collected + broadcast (Lucene's
-#: in-RAM live-docs bitset analog); above it every search path switches
-#: to a distributed shape (per-range cogroup on the scorer path,
-#: anti-join on the docmeta path) so the driver never materializes the
-#: deletes table
+#: deletes at or below this count may be collected to the driver
+#: (delete_docs' dedup + rewrite); above it delete_docs appends, so the
+#: driver never materializes the deletes table. Search never collects:
+#: deletes ride the postings stream / anti-join docmeta at any count.
 DELETES_BROADCAST_BOUND = 1_000_000
 
 #: generation-aware shared Index handles (see Index.shared) — LRU so
@@ -130,7 +133,7 @@ class Index:
         self._termstats: DataFrame | None = None
         self._tstats_memo: dict[str, TermStats | None] = {}
         self._deleted: list[int] | None = None
-        self._deleted_bc = None
+        self._deletes: DataFrame | None = None
         self._deleted_count: int | None = None
         self._expand_memo: dict[tuple, list[str]] = {}
         # lazy-init guard: shared handles are hit from fan-out THREADS;
@@ -163,13 +166,15 @@ class Index:
 
     def deletes_df(self) -> DataFrame | None:
         """The persisted deletes table as a DataFrame (no collect), or
-        None when no deletions exist — the input to the distributed
-        (> DELETES_BROADCAST_BOUND) search paths."""
-        path = os.path.join(self.paths.root, "deletes")
-        if not os.path.isdir(path):
-            return None
-        return self.spark.read.parquet(path).select(
-            F.col("doc_id").cast("long").alias("doc_id"))
+        None when no deletions exist — the scorer path's ``del`` sidecar
+        rows and the docmeta path's anti-join input."""
+        if self._deletes is None:
+            path = os.path.join(self.paths.root, "deletes")
+            if not os.path.isdir(path):
+                return None
+            self._deletes = self.spark.read.parquet(path).select(
+                F.col("doc_id").cast("long").alias("doc_id"))
+        return self._deletes
 
     def deleted_count(self) -> int:
         """Distinct persisted-deletion count (memoized; one tiny
@@ -185,8 +190,9 @@ class Index:
         Spark job per cold handle, zero per query (Lucene keeps the
         live-docs bitset in RAM per segment too). Hard-bounded: beyond
         DELETES_BROADCAST_BOUND callers must use :meth:`deletes_df`
-        (search() cogroups it per range; the docmeta path anti-joins) —
-        collecting a pathological deletes table would OOM the driver."""
+        (the scorer path streams it per range; the docmeta path
+        anti-joins) — collecting a pathological deletes table would OOM
+        the driver."""
         if self._deleted is None:
             df = self.deletes_df()
             if df is None:
@@ -202,21 +208,10 @@ class Index:
                     {int(r["doc_id"]) for r in df.collect()})
         return self._deleted
 
-    def deleted_broadcast(self):
-        """sc.broadcast of the live-docs exclusion array — shipped to
-        executors once per handle generation, never in a per-query UDF
-        closure."""
-        if self._deleted_bc is None:
-            self._deleted_bc = self.spark.sparkContext.broadcast(
-                np.asarray(self.deleted_ids(), dtype=np.int64))
-        return self._deleted_bc
-
     def invalidate_deletes(self) -> None:
         """Drop the memoized live-docs state (called by delete_docs)."""
-        if self._deleted_bc is not None:
-            self._deleted_bc.unpersist()
         self._deleted = None
-        self._deleted_bc = None
+        self._deletes = None
         self._deleted_count = None
 
     def expand_terms(self, q: MultiTermQuery,
@@ -343,6 +338,43 @@ _EMPTY_HL = ("CAST(array() AS "
 HL_SCHEMA = "doc_id long, term string, positions array<int>"
 
 
+def _cell_maker(batch: pa.RecordBatch):
+    """The one Arrow -> RangeCell constructor (scorer and highlighter):
+    ``make(row)`` returns ``(term, RangeCell)`` for a postings row of
+    ``batch``. Byte fields are memoryview slices of the batch's binary
+    buffers and block arrays numpy views of its list buffers — nothing
+    is copied until a cell decodes."""
+    def binary(name):
+        col = batch.column(name)
+        width = np.int64 if pa.types.is_large_binary(col.type) else np.int32
+        _, obuf, dbuf = col.buffers()
+        off = np.frombuffer(obuf, width)[
+            col.offset:col.offset + len(col) + 1].tolist()
+        data = memoryview(dbuf if dbuf is not None else b"")
+        valid = col.is_valid().to_numpy(zero_copy_only=False)
+        return lambda r: data[off[r]:off[r + 1]] if valid[r] else b""
+
+    def ints(name):
+        col = batch.column(name)
+        off = col.offsets.to_numpy().tolist()
+        vals = col.values.to_numpy()
+        return lambda r: vals[off[r]:off[r + 1]]
+
+    terms = batch.column("term").to_pylist()
+    doc, tf, norm, pos, pay, bmn = (binary(c) for c in (
+        "doc_bytes", "tf_bytes", "norm_bytes", "pos_bytes", "pay_bytes",
+        "block_min_norm"))
+    last, mtf = ints("block_last"), ints("block_max_tf")
+
+    def make(r: int) -> tuple[str, RangeCell]:
+        return terms[r], RangeCell(
+            doc_bytes=doc(r), tf_bytes=tf(r), norm_bytes=norm(r),
+            block_last=last(r), block_max_tf=mtf(r),
+            block_min_norm=np.frombuffer(bmn(r), dtype=np.uint8),
+            pos_bytes=pos(r), pay_bytes=pay(r))
+    return make
+
+
 def _highlight_positions(index: Index, terms: list[str],
                          winners: DataFrame) -> DataFrame:
     """Matched-term token positions for the <= k winner docs — the
@@ -352,47 +384,43 @@ def _highlight_positions(index: Index, terms: list[str],
     indexed).
 
     Shape at scale: term-pruned postings scan, restricted to the WINNERS'
-    doc-ranges by a broadcast join (<= k rows), positions decoded only
-    for winner docs inside each range's Arrow batch — cost is O(query
-    terms x winner ranges), independent of corpus size.
+    doc-ranges by a broadcast join against one (drange, winner ids) row
+    per range (<= k rows), positions decoded only for winner docs inside
+    each cell's Arrow batch — cost is O(query terms x winner ranges),
+    independent of corpus size, and no postings shuffle.
     """
     drs = int(index.stats["drange_size"])
-    win = winners.select("doc_id").withColumn(
-        "drange", (F.col("doc_id") / F.lit(drs)).cast("int"))
+    want = (with_drange(winners.select("doc_id"), drs)
+            .groupBy("drange").agg(F.collect_list("doc_id").alias("want")))
     cells = (index.postings()
              .filter(F.col("term").isin(sorted(set(terms))))
-             .join(F.broadcast(win), "drange"))
+             .join(F.broadcast(want), "drange"))
 
-    def emit(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        out: dict[str, list] = {"doc_id": [], "term": [], "positions": []}
-        for term, grp in pdf.groupby("term", sort=True):
-            r0 = grp.iloc[0]
-            cell = RangeCell(
-                doc_bytes=bytes(r0.doc_bytes), tf_bytes=bytes(r0.tf_bytes),
-                norm_bytes=bytes(r0.norm_bytes),
-                block_last=np.asarray(r0.block_last, dtype=np.int64),
-                block_max_tf=np.asarray(r0.block_max_tf, dtype=np.int32),
-                block_min_norm=np.frombuffer(bytes(r0.block_min_norm),
-                                             dtype=np.uint8),
-                pos_bytes=(bytes(r0.pos_bytes)
-                           if r0.pos_bytes is not None else b""))
-            if not cell.pos_bytes:
-                raise ValueError("highlighting requires an index built "
-                                 "with positions")
-            docs, tfs = cell.decode()
-            pos = cell.positions()
-            cum = np.concatenate(([0], np.cumsum(tfs)))
-            want = np.unique(grp["doc_id"].to_numpy(np.int64))
-            idx = np.searchsorted(docs, want)
-            for d, i in zip(want.tolist(), idx.tolist()):
-                if i < docs.size and docs[i] == d:
-                    out["doc_id"].append(d)
-                    out["term"].append(term)
-                    out["positions"].append(
-                        pos[cum[i]:cum[i + 1]].astype(np.int32))
-        return pd.DataFrame(out)
+    def emit(batches):
+        for b in batches:
+            make, wants = _cell_maker(b), b.column("want")
+            out_d, out_t, out_p = [], [], []
+            for r in range(b.num_rows):
+                term, cell = make(r)
+                if not cell.pos_bytes:
+                    raise ValueError("highlighting requires an index built "
+                                     "with positions")
+                docs, tfs = cell.decode()
+                pos = cell.positions()
+                cum = np.concatenate(([0], np.cumsum(tfs)))
+                want = np.unique(wants[r].values.to_numpy())
+                idx = np.searchsorted(docs, want)
+                for d, i in zip(want.tolist(), idx.tolist()):
+                    if i < docs.size and docs[i] == d:
+                        out_d.append(d)
+                        out_t.append(term)
+                        out_p.append(pos[cum[i]:cum[i + 1]].astype(np.int32))
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(out_d, pa.int64()), pa.array(out_t, pa.string()),
+                 pa.array(out_p, pa.list_(pa.int32()))],
+                names=["doc_id", "term", "positions"])
 
-    return cells.groupBy("drange").applyInPandas(emit, HL_SCHEMA)
+    return cells.mapInArrow(emit, HL_SCHEMA)
 
 
 def _as_query(query: str | Query) -> Query:
@@ -529,13 +557,13 @@ def _expand_multiterm(q: Query, index: Index, cap: int) -> Query:
 
 
 #: ranges per scoring task for narrow queries (see _scoring_parts)
-_RANGES_PER_TASK = int(os.environ.get("SPARKLUCENE_RANGES_PER_TASK", "12"))
+_RANGES_PER_TASK = 12
 
 
 def _scoring_parts(spark, n_ranges: int, est_cells: int) -> int:
     """Width of the scoring shuffle (hash-repartition on drange).
 
-    The scoring unit is the DOC-RANGE (applyInPandas groups by drange),
+    The scoring unit is the DOC-RANGE (the scorer walks drange runs),
     so partitions beyond ``n_ranges`` are empty — that caps the width.
     Two floors size the rest: ``est_cells/64`` grows the fan-out with
     per-range work (multi-term expansions decode terms x ranges cells),
@@ -549,8 +577,104 @@ def _scoring_parts(spark, n_ranges: int, est_cells: int) -> int:
     """
     return max(1, min(spark.sparkContext.defaultParallelism * 4,
                       n_ranges,
-                      max(-(-n_ranges // max(1, _RANGES_PER_TASK)),
+                      max(-(-n_ranges // _RANGES_PER_TASK),
                           -(-est_cells // 64))))
+
+
+#: sidecar row kinds on the scoring stream: deleted / filter-allowed docs
+_SIDES = ("del", "allow")
+_NO_DOCS = np.empty(0, np.int64)
+
+_BATCH_ARROW = pa.schema([("query", pa.string()), ("doc_id", pa.int64()),
+                          ("score", pa.float64())])
+
+
+def _ranges(batches):
+    """Walk a drange-sorted Arrow stream (see :func:`_score_plan`) and
+    yield ``(cells, sides)`` once per contiguous drange: ``cells`` maps
+    term -> RangeCell, ``sides`` maps each sidecar kind to a list of
+    int64 doc-id arrays (ids may repeat)."""
+    cur, cells, parts = None, {}, {k: [_NO_DOCS] for k in _SIDES}
+    for b in batches:
+        if not b.num_rows:
+            continue
+        dr = b.column("drange").to_numpy()
+        make = _cell_maker(b)
+        if "side" in b.schema.names:
+            side = b.column("side")
+            doc = b.column("doc_id").fill_null(0).to_numpy()
+            kind = {k: pc.fill_null(pc.equal(side, k), False).to_numpy(
+                zero_copy_only=False) for k in _SIDES}
+            is_cell = side.is_null().to_numpy(zero_copy_only=False)
+        else:
+            kind, is_cell = {}, np.ones(b.num_rows, dtype=bool)
+        cuts = (np.flatnonzero(np.diff(dr)) + 1).tolist()
+        for lo, hi in zip([0] + cuts, cuts + [b.num_rows]):
+            if dr[lo] != cur:
+                if cur is not None:
+                    yield cells, parts
+                cur, cells, parts = dr[lo], {}, {k: [_NO_DOCS] for k in _SIDES}
+            for r in np.flatnonzero(is_cell[lo:hi]).tolist():
+                term, cell = make(lo + r)
+                cells[term] = cell
+            for k, m in kind.items():
+                parts[k].append(doc[lo:hi][m[lo:hi]])
+    if cur is not None:
+        yield cells, parts
+
+
+def _score_plan(index: Index, named: dict[str, Query], k: int | None,
+                mode, prune: bool, gstats: GlobalStats, afters: dict,
+                exclude_docs: list[int] | None = None,
+                doc_filter: DataFrame | None = None) -> DataFrame:
+    """The scoring plan of :func:`search` and :func:`search_batch` ->
+    DataFrame(query, doc_id, score): each named query's per-range top-k
+    (every match when ``k`` is None). One term-pruned postings scan
+    carries the union of the queries' terms; persisted deletes and the
+    ``doc_filter`` include-set join it as sidecar rows (drange, doc_id,
+    side) keyed by the same doc-range expression, so each range scorer
+    sees exactly its own slice and nothing is collected or broadcast.
+    One drange Exchange feeds one Arrow scorer that scores every query
+    against the range's shared cells (decode memoizes per cell)."""
+    spark = index.spark
+    terms = sorted({t for q in named.values()
+                    for t in set(q.terms()) | set(q.neg_terms())})
+    drs = int(index.stats["drange_size"])
+    n_ranges = max(1, -(-int(index.stats["n_docs"]) // drs))
+    nparts = _scoring_parts(spark, n_ranges, n_ranges * max(1, len(terms)))
+    stream = index.postings().filter(F.col("term").isin(terms))
+    for side, docs in (("del", index.deletes_df()), ("allow", doc_filter)):
+        if docs is not None:
+            rows = with_drange(docs.select(
+                F.col("doc_id").cast("long").alias("doc_id")), drs)
+            stream = stream.unionByName(
+                rows.withColumn("side", F.lit(side)),
+                allowMissingColumns=True)
+    extra = np.asarray(sorted({int(d) for d in exclude_docs or ()}), np.int64)
+    filtered = doc_filter is not None
+    kk = k if k is not None else (1 << 31)
+    qitems = sorted(named.items())
+
+    def score(batches):
+        for cells, sides in _ranges(batches):
+            if not cells:
+                continue
+            deleted = np.unique(np.concatenate([extra, *sides["del"]]))
+            # a filtered range without allow rows admits nothing
+            allowed = (np.unique(np.concatenate(sides["allow"]))
+                       if filtered else None)
+            for n, q in qitems:
+                scorer = RangeScorer(cells, gstats, mode=mode, prune=prune,
+                                     deleted=deleted, allowed=allowed)
+                d, sc = scorer.topk(q, kk, after=afters.get(n))
+                yield pa.RecordBatch.from_arrays(
+                    [pa.repeat(pa.scalar(n), d.size),
+                     pa.array(d.astype(np.int64)),
+                     pa.array(sc.astype(np.float64))], schema=_BATCH_ARROW)
+
+    return (stream.repartition(nparts, "drange")
+            .sortWithinPartitions("drange")
+            .mapInArrow(score, BATCH_SCHEMA))
 
 
 def search(index: Index, query: str | Query, k: int | None = 10,
@@ -571,8 +695,8 @@ def search(index: Index, query: str | Query, k: int | None = 10,
     ``exclude_docs`` are live-docs deletions (Lucene's per-segment deleted
     bitset): masked out inside each range scorer BEFORE any top-k heap, so
     deleted docs can never shadow live results. Deletions persisted via
-    :func:`delete_docs` are applied automatically (broadcast once per
-    handle, not shipped per query).
+    :func:`delete_docs` are applied automatically (they ride the postings
+    stream per doc-range, never collected).
     ``after`` is a (score, doc_id) keyset cursor — each range collects
     only hits strictly after it and stays k-bounded (searchAfter).
     ``stats_override`` replaces the index-derived collection statistics
@@ -591,8 +715,8 @@ def search(index: Index, query: str | Query, k: int | None = 10,
     ``snippet`` column (token window around the first match) is added too.
     ``doc_filter`` is a doc-id INCLUDE set (one ``doc_id`` column) — only
     these docs may match, scores unchanged (Lucene filter context /
-    Solr ``fq={!frange}``; see :func:`frange_docs`). It is cogrouped with
-    the postings per doc-range — never collected or broadcast — so the
+    Solr ``fq={!frange}``; see :func:`frange_docs`). It rides the
+    postings stream per doc-range — never collected or broadcast — so the
     filter may be arbitrarily large (the FunctionRangeQuery doc set IS
     data-proportional). Pruning stays exact: filtering only removes
     candidates, so block upper bounds remain upper bounds.
@@ -606,12 +730,6 @@ def search(index: Index, query: str | Query, k: int | None = 10,
                          "round is k-bounded by design)")
     q = qualify(_as_query(query))
     q = _expand_multiterm(q, index, max_expansions)
-    # small deletes ride a broadcast bitset; pathological ones are
-    # cogrouped with the postings per doc-range instead (never collected)
-    del_cogroup = index.deleted_count() > DELETES_BROADCAST_BOUND
-    bdel = None if del_cogroup else index.deleted_broadcast()
-    extra = (np.asarray(sorted({int(d) for d in exclude_docs}), np.int64)
-             if exclude_docs else None)
     empty = spark.createDataFrame([], RESULT_SCHEMA)
     if highlight:
         empty = empty.withColumn("highlights", F.expr(_EMPTY_HL))
@@ -632,8 +750,6 @@ def search(index: Index, query: str | Query, k: int | None = 10,
         if highlight:  # MatchAll has no matched terms
             out = out.withColumn("highlights", F.expr(_EMPTY_HL))
         return _hydrate(out, hydrate)
-    all_terms = sorted(set(q.terms()) | set(q.neg_terms()))
-
     if stats_override is not None:
         # terms the override does not know (e.g. per-shard multi-term
         # expansions the merger never saw) fall back to LOCAL stats —
@@ -652,92 +768,10 @@ def search(index: Index, query: str | Query, k: int | None = 10,
                              term_stats=tstats,
                              field_stats=index.stats.get("fields"))
 
-    postings = index.postings().filter(F.col("term").isin(all_terms))
-    # size the scoring shuffle by ranges AND cells (see _scoring_parts);
-    # the explicit hash repartition also satisfies the groupBy
-    # distribution, so no second Exchange appears in the plan
-    n_ranges = max(1, -(-int(index.stats["n_docs"])
-                        // int(index.stats["drange_size"])))
-    est_cells = n_ranges * max(1, len(all_terms))
-    nparts = _scoring_parts(spark, n_ranges, est_cells)
-    postings = postings.repartition(nparts, "drange")
-
-    def _score_cells(pdf_postings: pd.DataFrame,
-                     range_deleted: np.ndarray | None,
-                     allowed: np.ndarray | None = None) -> pd.DataFrame:
-        if len(pdf_postings) == 0:
-            return pd.DataFrame({"doc_id": pd.Series(dtype=np.int64),
-                                 "score": pd.Series(dtype=np.float64)})
-        cells = {}
-        for r in pdf_postings.itertuples(index=False):
-            cells[r.term] = RangeCell(
-                doc_bytes=bytes(r.doc_bytes), tf_bytes=bytes(r.tf_bytes),
-                norm_bytes=bytes(r.norm_bytes),
-                block_last=np.asarray(r.block_last, dtype=np.int64),
-                block_max_tf=np.asarray(r.block_max_tf, dtype=np.int32),
-                block_min_norm=np.frombuffer(bytes(r.block_min_norm), dtype=np.uint8),
-                pos_bytes=bytes(r.pos_bytes) if r.pos_bytes is not None else b"",
-                pay_bytes=(bytes(pb) if (pb := getattr(r, "pay_bytes", None))
-                           is not None else b""),
-            )
-        deleted = bdel.value if range_deleted is None else range_deleted
-        if extra is not None:
-            deleted = np.union1d(deleted, extra)
-        scorer = RangeScorer(cells, gstats, mode=mode, prune=prune,
-                             deleted=deleted, allowed=allowed)
-        docs, scores = scorer.topk(q, k if k is not None else (1 << 31),
-                                   after=after)
-        return pd.DataFrame({"doc_id": docs.astype(np.int64),
-                             "score": scores.astype(np.float64)})
-
-    if doc_filter is not None:
-        # FILTER include-set: cogrouped with the postings per doc-range
-        # (the same shape as distributed live-docs). Huge deletes fold
-        # into the allowed set by anti-join so one cogroup carries both.
-        allow = doc_filter.select(
-            F.col("doc_id").cast("long").alias("doc_id")).distinct()
-        if del_cogroup:
-            allow = allow.join(index.deletes_df(), "doc_id", "left_anti")
-        drs = int(index.stats["drange_size"])
-        allowdf = (allow.withColumn(
-                       "drange", (F.col("doc_id") / F.lit(drs)).cast("int"))
-                   .repartition(nparts, "drange"))
-
-        def score_allowed(key: tuple, pdf_postings: pd.DataFrame,
-                          pdf_allow: pd.DataFrame) -> pd.DataFrame:
-            al = np.unique(pdf_allow["doc_id"].to_numpy(dtype=np.int64))
-            return _score_cells(
-                pdf_postings,
-                np.empty(0, np.int64) if del_cogroup else None, al)
-
-        candidates = (postings.groupby("drange")
-                      .cogroup(allowdf.groupby("drange"))
-                      .applyInPandas(score_allowed, schema=RESULT_SCHEMA))
-    elif del_cogroup:
-        # distributed live-docs: the deletes table is keyed by the SAME
-        # doc-range expression as the postings and cogrouped in, so each
-        # range scorer sees exactly its own slice — no driver collect,
-        # no broadcast of a huge set
-        drs = int(index.stats["drange_size"])
-        deldf = (index.deletes_df()
-                 .withColumn("drange",
-                             (F.col("doc_id") / F.lit(drs)).cast("int"))
-                 .repartition(nparts, "drange"))
-
-        def score_cogroup(key: tuple, pdf_postings: pd.DataFrame,
-                          pdf_del: pd.DataFrame) -> pd.DataFrame:
-            rdel = np.unique(pdf_del["doc_id"].to_numpy(dtype=np.int64))
-            return _score_cells(pdf_postings, rdel)
-
-        candidates = (postings.groupby("drange")
-                      .cogroup(deldf.groupby("drange"))
-                      .applyInPandas(score_cogroup, schema=RESULT_SCHEMA))
-    else:
-        def score_group(key: tuple, pdf_postings: pd.DataFrame) -> pd.DataFrame:
-            return _score_cells(pdf_postings, None)
-
-        candidates = (postings.groupBy("drange")
-                      .applyInPandas(score_group, schema=RESULT_SCHEMA))
+    candidates = _score_plan(
+        index, {"q": q}, k, mode, prune, gstats,
+        {"q": after} if after is not None else {},
+        exclude_docs, doc_filter).select("doc_id", "score")
     if k is None:
         return _hydrate(candidates, hydrate)
     topk = candidates.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
@@ -955,21 +989,12 @@ def _matchall_search(index: Index, q: Query, k: int | None, mode: str,
         base = base.join(
             doc_filter.select(F.col("doc_id").cast("long").alias("doc_id")),
             "doc_id", "left_semi")
-    if index.deleted_count() > DELETES_BROADCAST_BOUND:
-        # huge deletes: anti-join the persisted table directly (no collect)
+    if index.deletes_df() is not None:  # anti-join, never collected
         base = base.join(index.deletes_df(), "doc_id", "left_anti")
-        dele = {int(d) for d in exclude_docs} if exclude_docs else set()
-    else:
-        dele = set(index.deleted_ids())
-        if exclude_docs:
-            dele |= {int(d) for d in exclude_docs}
-    if dele:
-        if len(dele) <= 100_000:
-            base = base.filter(~F.col("doc_id").isin(sorted(dele)))
-        else:
-            dele_df = spark.createDataFrame([(d,) for d in sorted(dele)],
-                                            "doc_id long")
-            base = base.join(dele_df, "doc_id", "left_anti")
+    if exclude_docs:
+        base = base.join(spark.createDataFrame(
+            [(int(d),) for d in set(exclude_docs)], "doc_id long"),
+            "doc_id", "left_anti")
     if neg is not None:
         base = base.join(matches(index, neg, mode=mode).select("doc_id"),
                          "doc_id", "left_anti")
@@ -1172,8 +1197,8 @@ def frange_docs(attrs: DataFrame, value, lower: float | None = None,
     non-scoring fq semantics).
 
     Scale shape: one narrow filter over the attribute relation — the
-    predicate pushes into the attrs scan; the set is then cogrouped with
-    the postings, never collected.
+    predicate pushes into the attrs scan; the set then rides the postings
+    stream per doc-range, never collected.
     """
     col = F.expr(value) if isinstance(value, str) else value
     conds = []
@@ -1185,9 +1210,6 @@ def frange_docs(attrs: DataFrame, value, lower: float | None = None,
     for c in conds:
         out = out.filter(c)
     return out.select("doc_id")
-
-
-BATCH_SCHEMA = "query string, doc_id long, score double"
 
 
 def search_batch(index: Index, queries, k: int = 10,
@@ -1249,54 +1271,11 @@ def search_batch(index: Index, queries, k: int = 10,
         ma_df = ma_df.unionByName(p)
     if not live:
         return ma_df if ma_df is not None else empty
-    needed = sorted({t for q in live.values()
-                     for t in set(q.terms()) | set(q.neg_terms())})
     gstats = GlobalStats(doc_count=int(index.stats["doc_count"]),
                          sum_dl=int(index.stats["sum_dl"]),
                          term_stats=tstats,
                          field_stats=index.stats.get("fields"))
-    bdel = index.deleted_broadcast()
-    postings = index.postings().filter(F.col("term").isin(needed))
-    n_ranges = max(1, -(-int(index.stats["n_docs"])
-                        // int(index.stats["drange_size"])))
-    est_cells = n_ranges * max(1, len(needed))
-    nparts = _scoring_parts(spark, n_ranges, est_cells)
-    postings = postings.repartition(nparts, "drange")
-    qitems = sorted(live.items())
-
-    def score_group(key: tuple, pdf_postings: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf_postings) == 0:
-            return pd.DataFrame({"query": pd.Series(dtype=object),
-                                 "doc_id": pd.Series(dtype=np.int64),
-                                 "score": pd.Series(dtype=np.float64)})
-        cells = {}
-        for r in pdf_postings.itertuples(index=False):
-            cells[r.term] = RangeCell(
-                doc_bytes=bytes(r.doc_bytes), tf_bytes=bytes(r.tf_bytes),
-                norm_bytes=bytes(r.norm_bytes),
-                block_last=np.asarray(r.block_last, dtype=np.int64),
-                block_max_tf=np.asarray(r.block_max_tf, dtype=np.int32),
-                block_min_norm=np.frombuffer(bytes(r.block_min_norm),
-                                             dtype=np.uint8),
-                pos_bytes=(bytes(r.pos_bytes)
-                           if r.pos_bytes is not None else b""),
-                pay_bytes=(bytes(pb) if (pb := getattr(r, "pay_bytes", None))
-                           is not None else b""),
-            )
-        out = []
-        deleted = bdel.value
-        for n, q in qitems:
-            scorer = RangeScorer(cells, gstats, mode=mode, prune=prune,
-                                 deleted=deleted)
-            docs, scores = scorer.topk(q, k, after=afters.get(n))
-            out.append(pd.DataFrame({
-                "query": n, "doc_id": docs.astype(np.int64),
-                "score": scores.astype(np.float64)}))
-        return pd.concat(out, ignore_index=True) if out else \
-            pd.DataFrame({"query": [], "doc_id": [], "score": []})
-
-    candidates = (postings.groupBy("drange")
-                  .applyInPandas(score_group, schema=BATCH_SCHEMA))
+    candidates = _score_plan(index, live, k, mode, prune, gstats, afters)
     w = Window.partitionBy("query").orderBy(F.desc("score"),
                                             F.asc("doc_id"))
     scored = (candidates.withColumn("rn", F.row_number().over(w))

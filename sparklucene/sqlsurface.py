@@ -100,10 +100,3 @@ def register_corpus_view(spark: SparkSession, sf_dir: str,
     df = spark.read.parquet(f"{sf_dir}/documents.parquet")
     df.createOrReplaceTempView(name)
     return df
-
-
-def register_index_views(index) -> None:
-    """Expose the built index artifacts to SQL (postings/termstats/docmeta)."""
-    index.postings().createOrReplaceTempView("postings")
-    index.termstats().createOrReplaceTempView("termstats")
-    index.docmeta().createOrReplaceTempView("docmeta")

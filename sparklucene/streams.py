@@ -32,11 +32,6 @@ def select_stream(df: DataFrame, mapping: dict[str, Column | str]) -> DataFrame:
     return df.select(*cols)
 
 
-def sort_stream(df: DataFrame, *order: Column | str) -> DataFrame:
-    """SortStream: full re-sort of the stream."""
-    return df.orderBy(*order)
-
-
 def rank_stream(df: DataFrame, k: int, *order: Column | str) -> DataFrame:
     """RankStream (``top``): top-k by comparator — orderBy + limit lets
     Spark run per-partition top-k with a tiny final merge (TopDocs.merge
@@ -126,12 +121,6 @@ def cartesian_product(df: DataFrame, field: str,
     duplicated — Spark's ``explode``, a narrow rowwise expansion (no
     shuffle; output partitioning follows the input)."""
     return df.withColumn(out or field, F.explode(F.col(field)))
-
-
-def parallel_stream(df: DataFrame, n: int, *keys: str) -> DataFrame:
-    """ParallelStream: explicit hash re-partition of the dataflow across n
-    workers — Spark's repartition(n, keys) IS this operator, managed."""
-    return df.repartition(n, *[F.col(k) for k in keys])
 
 
 def random_stream(df: DataFrame, key_col: str, n: int,

@@ -38,10 +38,6 @@ def _hash60(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
-def hash60_sql(expr: str) -> str:
-    return f"('0x' || substring(md5({expr}), 1, 15))::BIGINT"
-
-
 def _gram_idxs(toks, n: int):
     """1-based start indexes of the doc's token n-grams — EMPTY when the
     doc has fewer than n tokens. (F.sequence(1, 0) yields a DESCENDING
@@ -738,6 +734,11 @@ def _url_host(url_col: str) -> Column:
     return F.lower(F.regexp_extract(F.col(url_col), _URL_HOST_RE, 1))
 
 
+_BLANK_DOMAIN = ("blocklist domains must be non-empty: an empty entry would "
+                 "match every hostless row in the expression form and none "
+                 "in the table form")
+
+
 def url_blocklist_filter(docs: DataFrame, blocklist: "tuple[str, ...]",
                          url_col: str = "url") -> DataFrame:
     """Domain blocklist filtering — the UT1/adult-list pass every web
@@ -755,8 +756,11 @@ def url_blocklist_filter(docs: DataFrame, blocklist: "tuple[str, ...]",
     function pins the expression form for operator-constant lists.
     A NULL url has no host, so ``blocked`` is NULL (three-valued, like
     the OR-chain itself) — pinned explicitly so the expression and
-    table forms agree even for an empty blocklist.
+    table forms agree even for an empty blocklist. Empty or
+    whitespace-only domains raise ValueError (both forms reject them).
     """
+    if any(not b.strip() for b in blocklist):
+        raise ValueError(_BLANK_DOMAIN)
     host = _url_host(url_col)
     blocked = F.lit(False)
     for b in sorted(set(blocklist)):
@@ -787,7 +791,14 @@ def url_blocklist_filter_table(docs: DataFrame, blocklist: DataFrame,
     propagates the NULL host). ``key_col`` must be a UNIQUE, NON-NULL
     row key (the corpus doc_id contract): duplicate keys would smear
     one row's hit onto its siblings and NULL keys never match the
-    hits join — both diverge from the per-row expression form."""
+    hits join — both diverge from the per-row expression form. Input
+    columns named like the working columns (``_k``, ``_sfx``, ``_blk``)
+    raise ValueError; an empty or whitespace-only blocklist domain fails
+    the job when the blocklist is read."""
+    clash = [c for c in ("_k", "_sfx", "_blk") if c in docs.columns]
+    if clash:
+        raise ValueError(f"input columns {clash} collide with "
+                         "url_blocklist_filter_table's working columns")
     with_host = docs.withColumn("domain", _url_host(url_col))
     labels = F.split(F.col("domain"), r"\.")
     sfx = F.transform(
@@ -797,7 +808,10 @@ def url_blocklist_filter_table(docs: DataFrame, blocklist: DataFrame,
     narrow = (with_host
               .select(F.col(key_col).alias("_k"), F.explode(sfx).alias("_sfx"))
               .filter(F.col("_sfx") != ""))
-    bl = blocklist.select(F.lower(F.col("domain")).alias("_sfx")).distinct()
+    dom = F.lower(F.col("domain"))
+    bl = blocklist.select(
+        F.when(dom.rlike(r"^\s*$"), F.raise_error(F.lit(_BLANK_DOMAIN)))
+        .otherwise(dom).alias("_sfx")).distinct()
     hits = (narrow.join(bl, "_sfx", "left_semi")
             .select(F.col("_k")).distinct()
             .withColumn("_blk", F.lit(True)))

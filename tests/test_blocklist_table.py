@@ -8,6 +8,7 @@ non-match, TLD-level block, schemeless (no host), and port/path noise.
 """
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from sparklucene.textops import url_blocklist_filter, url_blocklist_filter_table
@@ -43,6 +44,10 @@ def test_table_form_equals_expression_form(spark):
     assert tbl.count() == len(URLS)  # join-back never duplicates/drops
     blocked = {k for k, (_, b) in tbl_rows.items() if b}
     assert blocked == {0, 1, 2, 7, 8}
+    # the table form's working columns may not shadow input columns
+    for col in ("_k", "_sfx", "_blk"):
+        with pytest.raises(ValueError, match=col):
+            url_blocklist_filter_table(docs.withColumn(col, F.lit(1)), bl)
 
 
 def test_table_form_empty_blocklist(spark):
@@ -51,6 +56,14 @@ def test_table_form_empty_blocklist(spark):
     out = url_blocklist_filter_table(docs, bl)
     assert out.filter(F.col("blocked")).count() == 0
     assert out.count() == len(URLS)
+    # an empty / whitespace-only DOMAIN is rejected by both forms
+    for blank in ("", "  ", "\t"):
+        with pytest.raises(ValueError, match="must be non-empty"):
+            url_blocklist_filter(docs, ("bad.com", blank))
+        bad = spark.createDataFrame(pd.DataFrame({"domain": ["bad.com",
+                                                             blank]}))
+        with pytest.raises(Exception, match="must be non-empty"):
+            url_blocklist_filter_table(docs, bad).collect()
 
 
 def test_both_forms_null_url_yields_null_blocked(spark):

@@ -104,6 +104,34 @@ def test_assign_doc_ids_properties_random(spark):
         assert m1 == m2, f"seed {seed}: partitioning changed ids"
 
 
+def test_assign_doc_ids_source_changed_between_passes_raises(
+        spark, tmp_path):
+    """The count pass and the rank pass must see the same rows. A source
+    whose keys change after the count (a marker file flips them) puts
+    rows into buckets that were empty at count time: the rank job must
+    fail, not drop those rows."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from sparklucene.corpus import assign_doc_ids
+
+    flag = str(tmp_path / "changed")
+
+    @F.udf("string")
+    def repo_of(i):
+        return f"r{i}" + ("-v2" if os.path.exists(flag) else "")
+
+    df = spark.range(40).select(
+        repo_of("id").alias("repo"), F.lit("p").alias("path"),
+        F.lit("c").alias("commit"), F.lit("x").alias("lang"),
+        F.lit("body").alias("content"))
+    out = assign_doc_ids(df)  # runs the count pass
+    open(flag, "w").close()
+    with pytest.raises(Exception, match="source changed between"):
+        out.collect()
+
+
 def test_table_load_prunes_extra_columns(spark, corpus_view):
     spark.sql(
         "SELECT *, length(content) AS extra_len FROM corpus_tbl"

@@ -1,6 +1,6 @@
 """Round-3 robustness fixes (ADVICE.md r2): MatchAllDocs rewrite holes,
 phrase-weight empty-stats guard, compact_manifests snapshot race, lock
-dead-holder takeover, deletes-at-scale cogroup fallback, IVF zero-norm
+dead-holder takeover, deletes-at-scale distributed path, IVF zero-norm
 guards, ngram-Jaccard degenerate-block cap."""
 
 from __future__ import annotations
@@ -13,6 +13,7 @@ import subprocess
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from sparklucene.query import (And, DisMax, MatchAllDocs, MatchNoDocs, Not,
                                Or, Term, rewrite)
@@ -149,7 +150,7 @@ def test_lock_with_dead_holder_pid_is_taken_over(spark, tmp_path_factory):
 
 
 # ---------------------------------------------------------------------------
-# deletes at scale: cogroup fallback == broadcast path, collect guarded
+# deletes at scale: over-bound path == under-bound path, collect guarded
 # ---------------------------------------------------------------------------
 
 @pytest.fixture(scope="module")
@@ -175,15 +176,35 @@ def test_deletes_cogroup_fallback_matches_broadcast(spark, deletes_index,
 
     dst, victims = deletes_index
     q = Or((Term("merge"), Term("vector")))
+    idx1 = S.Index(spark, dst, cache=False)
     base = [(r["doc_id"], r["score"]) for r in
-            S.search(S.Index(spark, dst, cache=False), q, k=10).collect()]
+            S.search(idx1, q, k=10).collect()]
     assert base and not ({d for d, _ in base} & set(victims))
+    # an include-set holding live AND deleted docs: deletes still win
+    allow = idx1.docmeta().select("doc_id").filter(
+        (F.col("doc_id") % 3 != 0) | F.col("doc_id").isin(victims))
+    base_f = [(r["doc_id"], r["score"]) for r in
+              S.search(idx1, q, k=10, doc_filter=allow).collect()]
+    assert base_f and not ({d for d, _ in base_f} & set(victims))
+    assert all(d % 3 != 0 for d, _ in base_f)
     # force every search path onto the distributed (> bound) shape
     monkeypatch.setattr(S, "DELETES_BROADCAST_BOUND", 1)
     idx2 = S.Index(spark, dst, cache=False)
     got = [(r["doc_id"], r["score"]) for r in
            S.search(idx2, q, k=10).collect()]
     assert got == base
+    got_f = [(r["doc_id"], r["score"]) for r in
+             S.search(idx2, q, k=10, doc_filter=allow).collect()]
+    assert got_f == base_f
+    # search_batch over the same over-bound index == serial search
+    qs = {"o": q, "t": Term("vector"),
+          "a": And((Term("table"), Term("scan")))}
+    batch = S.search_batch(idx2, qs, k=10).toPandas()
+    for n, qq in qs.items():
+        want = S.search(idx2, qq, k=10).toPandas()
+        sub = (batch[batch["query"] == n][["doc_id", "score"]]
+               .reset_index(drop=True))
+        pd.testing.assert_frame_equal(sub, want, check_exact=True)
     # MatchAll path: anti-join branch
     n_all = S.search(idx2, MatchAllDocs(), k=None).count()
     n_docs = idx2.docmeta().count()
@@ -191,6 +212,34 @@ def test_deletes_cogroup_fallback_matches_broadcast(spark, deletes_index,
     # the driver-collect path refuses beyond the bound
     with pytest.raises(RuntimeError, match="DELETES_BROADCAST_BOUND"):
         S.Index(spark, dst, cache=False).deleted_ids()
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_scoring_plan_is_one_exchange_and_arrow_scorer(spark, deletes_index,
+                                                       monkeypatch):
+    """search() plans as postings (+ sidecar rows) -> one drange Exchange
+    -> one MapInArrow scorer, with or without deletes and filters."""
+    from sparklucene import search as S
+    from sparklucene.driver_queries import index_for
+
+    dst, _ = deletes_index
+    q = Or((Term("merge"), Term("vector")))
+    plain = index_for(spark, SF)
+    monkeypatch.setattr(S, "DELETES_BROADCAST_BOUND", 1)
+    # one range per task: a multi-way hash Exchange on this 8-range index
+    monkeypatch.setattr(S, "_RANGES_PER_TASK", 1)
+    deleted = S.Index(spark, dst, cache=False)
+    allow = plain.docmeta().select("doc_id").filter(F.col("doc_id") % 2 == 0)
+    for df in (S.search(plain, q, k=10), S.search(deleted, q, k=10),
+               S.search(plain, q, k=10, doc_filter=allow)):
+        plan = _plan(df)
+        assert plan.count("Exchange hashpartitioning(drange") == 1, plan
+        assert "MapInArrow" in plan and "FlatMapCoGroupsInPandas" not in plan
+    # no deletes and no filter: the scorer reads the postings scan alone
+    assert "Union" not in _plan(S.search(plain, q, k=10))
 
 
 # ---------------------------------------------------------------------------
