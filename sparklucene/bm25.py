@@ -30,7 +30,7 @@ import math
 
 import numpy as np
 
-from sparklucene.norms import LENGTH_TABLE, LENGTH_TABLE_F32
+from sparklucene.norms import LENGTH_TABLE_F32
 
 K1 = 1.2
 B = 0.75
@@ -147,27 +147,3 @@ def classic_score_sql(tf_expr: str, dlq_expr: str, df_expr: str,
     return (f"cast(({idf_e} * sqrt(cast({tf_expr} as double)))"
             f" / sqrt(cast({dlq_expr} as double)) as real)")
 
-
-def block_upper_bound_lucene8(max_tf: np.ndarray, min_norm: np.ndarray,
-                              df: int, doc_count: int, sum_ttf: int,
-                              boost: float = 1.0, k1: float = K1, b: float = B,
-                              ) -> np.ndarray:
-    """Score-safe per-block upper bounds for block-max WAND (float32).
-
-    Uses the same float32 cache as the scorer so ub >= any true score in
-    the block: tf/(tf+c) is increasing in tf, decreasing in c, and
-    LENGTH_TABLE is monotone in the norm byte, so (max_tf, min_norm)
-    maximizes the fraction; float32 rounding is monotone.
-    """
-    return score_lucene8(np.asarray(max_tf, dtype=np.int64),
-                         np.asarray(min_norm, dtype=np.uint8),
-                         df, doc_count, sum_ttf, boost, k1, b)
-
-
-def block_upper_bound_f64(max_tf: np.ndarray, min_norm_bytes: np.ndarray,
-                          df: int, doc_count: int, sum_dl: int,
-                          boost: float = 1.0, k1: float = K1, b: float = B,
-                          ) -> np.ndarray:
-    dlq = LENGTH_TABLE[np.asarray(min_norm_bytes, dtype=np.uint8)]
-    return score_f64(np.asarray(max_tf, dtype=np.int64), dlq, df, doc_count,
-                     sum_dl, boost, k1, b)

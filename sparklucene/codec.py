@@ -254,20 +254,3 @@ def decode_positions(pos_bytes: bytes, tfs: np.ndarray) -> np.ndarray:
     base = np.repeat(cs[seg_starts] - gaps[seg_starts], t)
     return cs - base
 
-
-def decode_block(doc_bytes: bytes, tf_bytes: bytes, block_idx: np.ndarray,
-                 ) -> tuple[np.ndarray, np.ndarray]:
-    """Decode only the selected 128-doc blocks (block-max skipping).
-
-    VByte is not random-access per block, so we decode the cell once and
-    slice; at 128-doc granularity with numpy this is still far cheaper
-    than scoring every doc, and the *scored* doc count (the WAND metric)
-    is what block selection reduces. A v2 layout can add per-block byte
-    offsets for true random access.
-    """
-    docs = decode_doc_ids(doc_bytes)
-    tfs = decode_tfs(tf_bytes)
-    keep = np.zeros(docs.size, dtype=bool)
-    for bi in np.asarray(block_idx, dtype=np.int64):
-        keep[bi * BLOCK_SIZE:(bi + 1) * BLOCK_SIZE] = True
-    return docs[keep], tfs[keep]

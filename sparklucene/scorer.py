@@ -150,6 +150,26 @@ class RangeScorer:
 
     # ---- scoring primitives -------------------------------------------
 
+    def _idf(self, df: int, n: int) -> float:
+        idf = bm25.idf_classic if self.mode == "classic" else bm25.idf
+        return idf(df, n)
+
+    def _sim(self, idf: float, boost: float, tfs: np.ndarray, nb: np.ndarray,
+             N: int, S: int) -> np.ndarray:
+        """The one similarity switch: float32 scores of (tf, norm byte)
+        postings under the mode, for a (summed) ``idf`` and query
+        ``boost``. Block bounds are the same call at (block max_tf, block
+        min_norm): every mode is monotone in both, and float rounding is
+        monotone, so the bound dominates every score in the block."""
+        if self.mode == "boolean":
+            # BooleanSimilarity: score = boost, tf/norm/idf ignored
+            return np.full(np.size(tfs), np.float32(boost), dtype=np.float32)
+        if self.mode == "lucene8":
+            return bm25.score_lucene8_w(idf, tfs, nb, N, S, boost=boost)
+        if self.mode == "classic":
+            return bm25.score_classic_w(boost * idf, tfs, LENGTH_TABLE[nb])
+        return bm25.score_f64_w(boost * idf, tfs, LENGTH_TABLE[nb], N, S)
+
     def _score_arrays(self, term: str, tfs: np.ndarray, nb: np.ndarray,
                       boost: float = 1.0) -> np.ndarray:
         """Scores for postings of ``term`` given aligned (tf, norm byte)."""
@@ -164,34 +184,23 @@ class RangeScorer:
             s = np.asarray(self.mode(tfs, LENGTH_TABLE[nb].astype(np.int64),
                                      ts.df, ts.cf, N, S), dtype=np.float64)
             return (np.float64(boost) * s).astype(np.float32)
-        if self.mode == "boolean":
-            # BooleanSimilarity: score = boost, tf/norm/idf ignored
-            return np.full(tfs.size, np.float32(boost), dtype=np.float32)
-        if self.mode == "lucene8":
-            return bm25.score_lucene8(tfs, nb, ts.df, N, S, boost=boost)
-        if self.mode == "classic":
-            return bm25.score_classic(tfs, LENGTH_TABLE[nb], ts.df, N,
-                                      boost=boost)
-        return bm25.score_f64(tfs, LENGTH_TABLE[nb], ts.df, N, S,
-                              boost=boost)
+        return self._sim(self._idf(ts.df, N), boost, tfs, nb, N, S)
 
     def _block_ubs(self, term: str, cell: RangeCell) -> np.ndarray:
-        ts = self.stats.term_stats[term]
         N, S = self.stats.stats_for(term)
-        if self.mode == "boolean":
-            return np.full(len(cell.block_last), np.float32(1.0),
-                           dtype=np.float32)
-        if self.mode == "lucene8":
-            return bm25.block_upper_bound_lucene8(
-                cell.block_max_tf, cell.block_min_norm, ts.df, N, S)
-        if self.mode == "classic":
-            # sqrt(tf)/sqrt(dlq) is monotone in (max_tf, min_norm) too
-            return bm25.score_classic(
-                np.asarray(cell.block_max_tf, dtype=np.int64),
-                LENGTH_TABLE[np.asarray(cell.block_min_norm, dtype=np.uint8)],
-                ts.df, N)
-        return bm25.block_upper_bound_f64(
-            cell.block_max_tf, cell.block_min_norm, ts.df, N, S)
+        return self._sim(self._idf(self.stats.term_stats[term].df, N), 1.0,
+                         np.asarray(cell.block_max_tf, dtype=np.int64),
+                         np.asarray(cell.block_min_norm, dtype=np.uint8), N, S)
+
+    def _live(self, docs: np.ndarray, *cols: np.ndarray
+              ) -> tuple[np.ndarray, ...]:
+        """``docs`` (sorted, unique) and its aligned ``cols`` without the
+        docs of the live-docs mask (deletions, filter complement and
+        MUST_NOT matches)."""
+        if self._neg_mask_docs is None or not self._neg_mask_docs.size:
+            return (docs, *cols)
+        keep = ~np.isin(docs, self._neg_mask_docs, assume_unique=True)
+        return (docs[keep], *(c[keep] for c in cols))
 
     def _filtered(self, term: str) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
         """Decoded (docs, tfs, norm bytes) with MUST_NOT docs masked out."""
@@ -199,12 +208,14 @@ class RangeScorer:
         if cell is None:
             return (np.empty(0, np.int64), np.empty(0, np.int64),
                     np.empty(0, np.uint8))
-        docs, tfs = cell.decode()
-        norms = cell.norms()
-        if self._neg_mask_docs is not None and self._neg_mask_docs.size:
-            keep = ~np.isin(docs, self._neg_mask_docs, assume_unique=True)
-            docs, tfs, norms = docs[keep], tfs[keep], norms[keep]
-        return docs, tfs, norms
+        return self._live(*cell.decode(), cell.norms())
+
+    def _df(self, term: str) -> int:
+        """Global df of ``term``; a term absent from term_stats (direct
+        scorer use, no prune_missing) falls back to its local posting
+        length."""
+        s = self.stats.term_stats.get(term)
+        return s.df if s is not None else self.cells[term].decode()[0].size
 
     def _term_scores(self, term: str, boost: float = 1.0
                      ) -> tuple[np.ndarray, np.ndarray]:
@@ -241,21 +252,10 @@ class RangeScorer:
         # blended df: explicit override (BlendedTermQuery rewrite) wins;
         # else stats when available, local posting length as the
         # direct-scorer fallback (the phrase matcher's convention)
-        df = q.blend_df if q.blend_df is not None else max(
-            (s.df if (s := self.stats.term_stats.get(t)) is not None
-             else self.cells[t].decode()[0].size) for t in present)
+        df = (q.blend_df if q.blend_df is not None
+              else max(self._df(t) for t in present))
         N, S = self.stats.stats_for(present[0])
-        if self.mode == "boolean":
-            return udocs, np.full(udocs.size, np.float32(q.boost),
-                                  dtype=np.float32)
-        if self.mode == "lucene8":
-            return udocs, bm25.score_lucene8(ftf, nb, df, N, S,
-                                             boost=q.boost)
-        if self.mode == "classic":
-            return udocs, bm25.score_classic(ftf, LENGTH_TABLE[nb], df, N,
-                                             boost=q.boost)
-        return udocs, bm25.score_f64(ftf, LENGTH_TABLE[nb], df, N, S,
-                                     boost=q.boost)
+        return udocs, self._sim(self._idf(df, N), q.boost, ftf, nb, N, S)
 
     # ---- top-level evaluation ------------------------------------------
 
@@ -354,7 +354,6 @@ class RangeScorer:
         # live-docs-during-collection behavior).
         alldocs, alltfs = cell.decode()
         allnorms = cell.norms()
-        neg = self._neg_mask_docs
         ubs = self._block_ubs(term, cell)
         order = np.argsort(-ubs.astype(np.float64), kind="stable")
         out_docs: list[np.ndarray] = []
@@ -369,10 +368,7 @@ class RangeScorer:
                 self.metrics.blocks_skipped += 1
                 continue
             sl = slice(b * BLOCK_SIZE, (b + 1) * BLOCK_SIZE)
-            bd, bt, bn = alldocs[sl], alltfs[sl], allnorms[sl]
-            if neg is not None and neg.size:
-                keep = ~np.isin(bd, neg, assume_unique=True)
-                bd, bt, bn = bd[keep], bt[keep], bn[keep]
+            bd, bt, bn = self._live(alldocs[sl], alltfs[sl], allnorms[sl])
             bd, s = self._cursor_mask(bd, self._score_arrays(term, bt, bn))
             out_docs.append(bd)
             out_scores.append(s)
@@ -384,7 +380,47 @@ class RangeScorer:
             return np.empty(0, np.int64), np.empty(0, np.float32)
         return np.concatenate(out_docs), np.concatenate(out_scores)
 
-    # ---- phrase: positional intersection -------------------------------
+    # ---- positional matchers: one front end ----------------------------
+
+    def _positional(self, terms, what: str, pack: bool = True
+                    ) -> dict[str, tuple[np.ndarray, ...]]:
+        """Decoded (docs, tfs, cum, positions) of each term (all present
+        in ``cells``); ``cum`` holds the per-doc segment bounds of the flat
+        position stream. Matchers that ``pack`` (doc, pos) into one uint64
+        key split it at bit 32, so the domain is guarded: large ids (e.g.
+        log-offset-derived) fail loudly instead of silently colliding."""
+        out = {}
+        for t in terms:
+            cell = self.cells[t]
+            if not cell.pos_bytes:
+                raise ValueError(
+                    f"{what} requires an index built with positions "
+                    "(build_index(..., store_positions=True))")
+            docs, tfs = cell.decode()
+            pos = cell.positions()
+            if pack and docs.size and (int(docs[-1]) >= 1 << 32 or (
+                    pos.size and int(pos.max()) >= 1 << 31)):
+                raise ValueError(
+                    f"{what} requires doc_id < 2^32 and token positions "
+                    f"< 2^31 (term {t!r}: max doc_id {int(docs[-1])}, "
+                    f"max pos {int(pos.max()) if pos.size else 0})")
+            out[t] = (docs, tfs, np.concatenate(([0], np.cumsum(tfs))), pos)
+        return out
+
+    def _conjunction(self, pos: dict) -> np.ndarray:
+        """Live docs holding every decoded term: df-ascending intersection
+        (ConjunctionDISI's cost order)."""
+        by_df = sorted(pos, key=self._df)
+        cand = pos[by_df[0]][0]
+        for t in by_df[1:]:
+            cand = cand[np.isin(cand, pos[t][0], assume_unique=True)]
+        return self._live(cand)[0]
+
+    def _norms_at(self, term: str, docs: np.ndarray) -> np.ndarray:
+        """Norm bytes of ``docs``, all present in ``term``'s cell (norms
+        are per-doc, so any cell holding the doc has the same byte)."""
+        cell = self.cells[term]
+        return cell.norms()[np.searchsorted(cell.decode()[0], docs)]
 
     def _phrase_scores(self, q: Phrase) -> tuple[np.ndarray, np.ndarray]:
         """ExactPhraseMatcher: docs where some base position carries
@@ -396,48 +432,13 @@ class RangeScorer:
         dterms = {t for _, t in q.slots}
         if any(t not in self.cells for t in dterms):
             return np.empty(0, np.int64), np.empty(0, np.float32)
-        decoded: dict[str, tuple[np.ndarray, np.ndarray, np.ndarray]] = {}
-        for t in dterms:
-            cell = self.cells[t]
-            docs, tfs = cell.decode()
-            if not cell.pos_bytes:
-                raise ValueError(
-                    "phrase query requires an index built with positions "
-                    "(build_index(..., store_positions=True))")
-            decoded[t] = (docs, tfs, cell.positions())
-        # candidate docs: df-ascending intersection (ConjunctionDISI
-        # order); a term absent from term_stats (direct scorer use, no
-        # prune_missing) sorts by its local posting length instead
-        by_df = sorted(dterms,
-                       key=lambda t: (s.df if (s := self.stats.term_stats
-                                               .get(t)) else
-                                      decoded[t][0].size))
-        cand = decoded[by_df[0]][0]
-        for t in by_df[1:]:
-            cand = cand[np.isin(cand, decoded[t][0], assume_unique=True)]
-        if self._neg_mask_docs is not None and self._neg_mask_docs.size:
-            cand = cand[~np.isin(cand, self._neg_mask_docs, assume_unique=True)]
+        pos = self._positional(dterms, "phrase query")
+        cand = self._conjunction(pos)
         if cand.size == 0:
             return cand, np.empty(0, np.float32)
-        # packed (doc, base) keys split a uint64 at bit 32 — guard the
-        # domain so large ids (e.g. log-offset-derived) fail loudly instead
-        # of silently colliding
-        for t in dterms:
-            d_t, _, p_t = decoded[t]
-            if d_t.size and (int(d_t[-1]) >= 1 << 32
-                             or (p_t.size and int(p_t.max()) >= 1 << 31)):
-                raise ValueError(
-                    "phrase matching requires doc_id < 2^32 and token "
-                    f"positions < 2^31 (term {t!r}: max doc_id "
-                    f"{int(d_t[-1])}, max pos "
-                    f"{int(p_t.max()) if p_t.size else 0})")
         keys = None
         for off, t in q.slots:
-            docs, tfs, pos = decoded[t]
-            docs_rep = np.repeat(docs, tfs)
-            ok = np.isin(docs_rep, cand, assume_unique=False) & (pos >= off)
-            k = (docs_rep[ok].astype(np.uint64) << np.uint64(32)) \
-                | (pos[ok] - off).astype(np.uint64)
+            k = _slot_keys(pos[t], cand, off)
             keys = k if keys is None else np.intersect1d(keys, k,
                                                          assume_unique=True)
             if keys.size == 0:
@@ -446,17 +447,15 @@ class RangeScorer:
                                  return_counts=True)
         self.metrics.docs_scored += int(pdocs.size)
         self.metrics.docs_total += int(pdocs.size)
-        # norms for the matching docs, from any slot term's postings
-        t0 = by_df[0]
-        d0, _, _ = decoded[t0]
-        nb = self.cells[t0].norms()[np.searchsorted(d0, pdocs)]
+        nb = self._norms_at(min(pos, key=self._df), pdocs)
         return pdocs, self._phrase_weighted(q, pfreq, nb)
 
     def _phrase_weighted(self, q: Phrase | MultiPhrase | Within,
                          pfreq: np.ndarray, nb: np.ndarray) -> np.ndarray:
-        """Phrase scoring with the mode's summed-idf weight. For a
-        MultiPhrase the idf sums over EVERY alternative of every slot
-        (MultiPhraseWeight collects all TermStatistics)."""
+        """Phrase scoring with the mode's summed-idf weight (the query
+        boost folded into it). For a MultiPhrase the idf sums over EVERY
+        alternative of every slot (MultiPhraseWeight collects all
+        TermStatistics)."""
         if callable(self.mode):
             raise NotImplementedError(
                 "phrase scoring under a user-supplied similarity is not "
@@ -487,14 +486,9 @@ class RangeScorer:
             # absent from term_stats: idf sum is 0 → weight 0 for all docs
             return np.zeros(pfreq.size, dtype=np.float32)
         N, S = self.stats.stats_for(slot_terms[0])
-        idf_fn = bm25.idf_classic if self.mode == "classic" else bm25.idf
-        idf_total = qboost * sum(idf_fn(self.stats.term_stats[t].df, N)
+        idf_total = qboost * sum(self._idf(self.stats.term_stats[t].df, N)
                                  for t in slot_terms)
-        if self.mode == "lucene8":
-            return bm25.score_lucene8_w(idf_total, pfreq, nb, N, S)
-        if self.mode == "classic":
-            return bm25.score_classic_w(idf_total, pfreq, LENGTH_TABLE[nb])
-        return bm25.score_f64_w(idf_total, pfreq, LENGTH_TABLE[nb], N, S)
+        return self._sim(idf_total, 1.0, pfreq, nb, N, S)
 
     def _multiphrase_scores(self, q: MultiPhrase
                             ) -> tuple[np.ndarray, np.ndarray]:
@@ -505,48 +499,25 @@ class RangeScorer:
         nothing (prune_missing already drops those)."""
         all_terms = sorted({t for _, alts in q.slots for t in alts})
         present = [t for t in all_terms if t in self.cells]
-        decoded: dict[str, tuple[np.ndarray, np.ndarray, np.ndarray]] = {}
-        for t in present:
-            cell = self.cells[t]
-            if not cell.pos_bytes:
-                raise ValueError("multi-phrase query requires an index "
-                                 "built with positions")
-            docs, tfs = cell.decode()
-            decoded[t] = (docs, tfs, cell.positions())
+        pos = self._positional(present, "multi-phrase query")
         # candidate docs: intersection over slots of the union of alts
         cand = None
         for _off, alts in q.slots:
-            alt_docs = [decoded[t][0] for t in alts if t in decoded]
+            alt_docs = [pos[t][0] for t in alts if t in pos]
             if not alt_docs:
                 return np.empty(0, np.int64), np.empty(0, np.float32)
             u = (alt_docs[0] if len(alt_docs) == 1
                  else np.unique(np.concatenate(alt_docs)))
             cand = u if cand is None else cand[np.isin(cand, u,
                                                        assume_unique=True)]
-        if self._neg_mask_docs is not None and self._neg_mask_docs.size:
-            cand = cand[~np.isin(cand, self._neg_mask_docs,
-                                 assume_unique=True)]
-        if cand is None or cand.size == 0:
+        cand = (self._live(cand)[0] if cand is not None
+                else np.empty(0, np.int64))
+        if cand.size == 0:
             return np.empty(0, np.int64), np.empty(0, np.float32)
-        for t in present:
-            d_t, _, p_t = decoded[t]
-            if d_t.size and (int(d_t[-1]) >= 1 << 32
-                             or (p_t.size and int(p_t.max()) >= 1 << 31)):
-                raise ValueError("multi-phrase matching requires doc_id < "
-                                 "2^32 and token positions < 2^31")
         keys = None
         for off, alts in q.slots:
-            slot_keys = []
-            for t in alts:
-                if t not in decoded:
-                    continue
-                docs, tfs, pos = decoded[t]
-                docs_rep = np.repeat(docs, tfs)
-                ok = np.isin(docs_rep, cand, assume_unique=False) & (pos >= off)
-                slot_keys.append((docs_rep[ok].astype(np.uint64)
-                                  << np.uint64(32))
-                                 | (pos[ok] - off).astype(np.uint64))
-            sk = np.unique(np.concatenate(slot_keys))
+            sk = np.unique(np.concatenate([_slot_keys(pos[t], cand, off)
+                                           for t in alts if t in pos]))
             keys = sk if keys is None else np.intersect1d(keys, sk,
                                                           assume_unique=True)
             if keys.size == 0:
@@ -560,7 +531,7 @@ class RangeScorer:
         nb = np.zeros(pdocs.size, dtype=np.uint8)
         filled = np.zeros(pdocs.size, dtype=bool)
         for t in sorted(present, key=lambda t: self.stats.term_stats[t].df):
-            d0 = decoded[t][0]
+            d0 = pos[t][0]
             idx = np.searchsorted(d0, pdocs)
             idx_c = np.clip(idx, 0, max(0, d0.size - 1))
             hit = (d0.size > 0) & (d0[idx_c] == pdocs) & ~filled
@@ -585,22 +556,9 @@ class RangeScorer:
         dterms = {t for _, t in q.slots}
         if any(t not in self.cells for t in dterms):
             return np.empty(0, np.int64), np.empty(0, np.float32)
-        decoded = {}
-        for t in dterms:
-            cell = self.cells[t]
-            docs, tfs = cell.decode()
-            if not cell.pos_bytes:
-                raise ValueError("sloppy phrase requires positions")
-            cum = np.concatenate(([0], np.cumsum(tfs)))
-            decoded[t] = (docs, cum, cell.positions())
-        cand = None
-        for t in dterms:
-            d = decoded[t][0]
-            cand = d if cand is None else cand[np.isin(cand, d,
-                                                       assume_unique=True)]
-        if self._neg_mask_docs is not None and self._neg_mask_docs.size:
-            cand = cand[~np.isin(cand, self._neg_mask_docs, assume_unique=True)]
-        if cand is None or cand.size == 0:
+        pos = self._positional(dterms, "sloppy phrase query")
+        cand = self._conjunction(pos)
+        if cand.size == 0:
             return np.empty(0, np.int64), np.empty(0, np.float32)
         # fully vectorized across ALL candidate docs (no per-doc Python
         # loop): nearest-position lookups use packed uint64 (doc, pos+BIAS)
@@ -609,26 +567,16 @@ class RangeScorer:
         BIAS = 1 << 20  # headroom for negative targets (base = p0 - off0)
         if any(off >= BIAS for off, _ in q.slots):
             raise ValueError("phrase slot offsets must be < 2^20")
-        for t in dterms:
-            d_t, _, p_t = decoded[t]
-            if d_t.size and (int(d_t[-1]) >= 1 << 32
-                             or (p_t.size and int(p_t.max()) >= 1 << 31)):
-                raise ValueError(
-                    "sloppy phrase matching requires doc_id < 2^32 and "
-                    "token positions < 2^31")
         (off0, t0), rest = q.slots[0], q.slots[1:]
-        docs0, cum0, pos0 = decoded[t0]
-        docs0_rep = np.repeat(docs0, np.diff(cum0))
-        m0 = np.isin(docs0_rep, cand, assume_unique=False)
-        anchor_docs = docs0_rep[m0]
-        anchors = pos0[m0] - off0
+        anchor_docs, anchors = _in_docs(pos[t0], cand)
+        anchors = anchors - off0
         if anchor_docs.size == 0:
             return np.empty(0, np.int64), np.empty(0, np.float32)
         adoc_keys = anchor_docs.astype(np.uint64) << np.uint64(32)
         total = np.zeros(anchors.size, dtype=np.int64)
         for off, t in rest:
-            docs_t, cum_t, pos_t = decoded[t]
-            key_t = ((np.repeat(docs_t, np.diff(cum_t)).astype(np.uint64)
+            docs_t, tfs_t, cum_t, pos_t = pos[t]
+            key_t = ((np.repeat(docs_t, tfs_t).astype(np.uint64)
                       << np.uint64(32))
                      | (pos_t + BIAS).astype(np.uint64))
             target = anchors + off
@@ -648,9 +596,7 @@ class RangeScorer:
         pfreq = np.zeros(pdocs.size, dtype=np.float64)
         np.add.at(pfreq, inv, np.ldexp(1.0, -total[m]))
         self.metrics.docs_scored += int(pdocs.size)
-        t_anchor = min(dterms, key=lambda t: self.stats.term_stats[t].df)
-        d0 = decoded[t_anchor][0]
-        nb = self.cells[t_anchor].norms()[np.searchsorted(d0, pdocs)]
+        nb = self._norms_at(min(pos, key=self._df), pdocs)
         return pdocs, self._phrase_weighted(q, pfreq, nb)
 
     def _within_scores(self, q: Within) -> tuple[np.ndarray, np.ndarray]:
@@ -663,37 +609,12 @@ class RangeScorer:
             raise ValueError("Within members must be distinct terms")
         if any(t not in self.cells for t in dterms):
             return np.empty(0, np.int64), np.empty(0, np.float32)
-        decoded: dict[str, tuple[np.ndarray, np.ndarray, np.ndarray]] = {}
-        for t in dterms:
-            cell = self.cells[t]
-            docs, tfs = cell.decode()
-            if not cell.pos_bytes:
-                raise ValueError("interval (Within) queries require an "
-                                 "index built with positions")
-            cum = np.concatenate(([0], np.cumsum(tfs)))
-            decoded[t] = (docs, cum, cell.positions())
-        cand = None
-        for t in dterms:
-            d = decoded[t][0]
-            cand = d if cand is None else cand[np.isin(cand, d,
-                                                       assume_unique=True)]
-        if self._neg_mask_docs is not None and self._neg_mask_docs.size:
-            cand = cand[~np.isin(cand, self._neg_mask_docs,
-                                 assume_unique=True)]
-        if cand is None or cand.size == 0:
+        pos = self._positional(dterms, "interval (Within) query")
+        cand = self._conjunction(pos)
+        if cand.size == 0:
             return np.empty(0, np.int64), np.empty(0, np.float32)
-        for t in dterms:
-            d_t, _, p_t = decoded[t]
-            if d_t.size and (int(d_t[-1]) >= 1 << 32
-                             or (p_t.size and int(p_t.max()) >= 1 << 31)):
-                raise ValueError("interval matching requires doc_id < 2^32 "
-                                 "and token positions < 2^31")
         t0 = q.members[0]
-        docs0, cum0, pos0 = decoded[t0]
-        docs0_rep = np.repeat(docs0, np.diff(cum0))
-        m0 = np.isin(docs0_rep, cand, assume_unique=False)
-        anchor_docs = docs0_rep[m0]
-        anchors = pos0[m0].astype(np.int64)
+        anchor_docs, anchors = _in_docs(pos[t0], cand)
         if anchor_docs.size == 0:
             return np.empty(0, np.int64), np.empty(0, np.float32)
         adoc_keys = anchor_docs.astype(np.uint64) << np.uint64(32)
@@ -701,8 +622,8 @@ class RangeScorer:
         if q.ordered:
             prev = anchors.copy()
             for t in q.members[1:]:
-                docs_t, cum_t, pos_t = decoded[t]
-                key_t = ((np.repeat(docs_t, np.diff(cum_t)).astype(np.uint64)
+                docs_t, tfs_t, cum_t, pos_t = pos[t]
+                key_t = ((np.repeat(docs_t, tfs_t).astype(np.uint64)
                           << np.uint64(32)) | pos_t.astype(np.uint64))
                 # first position of t strictly after prev in the same doc
                 j = np.searchsorted(key_t,
@@ -719,8 +640,8 @@ class RangeScorer:
             lo_p = anchors.copy()
             hi_p = anchors.copy()
             for t in q.members[1:]:
-                docs_t, cum_t, pos_t = decoded[t]
-                key_t = ((np.repeat(docs_t, np.diff(cum_t)).astype(np.uint64)
+                docs_t, tfs_t, cum_t, pos_t = pos[t]
+                key_t = ((np.repeat(docs_t, tfs_t).astype(np.uint64)
                           << np.uint64(32)) | pos_t.astype(np.uint64))
                 seg = np.searchsorted(docs_t, anchor_docs)
                 lo, hi = cum_t[seg], cum_t[seg + 1]
@@ -741,8 +662,8 @@ class RangeScorer:
         pdocs, pfreq = np.unique(anchor_docs[m], return_counts=True)
         self.metrics.docs_scored += int(pdocs.size)
         self.metrics.docs_total += int(pdocs.size)
-        nb = self.cells[t0].norms()[np.searchsorted(docs0, pdocs)]
-        return pdocs, self._phrase_weighted(q, pfreq, nb)
+        return pdocs, self._phrase_weighted(q, pfreq,
+                                            self._norms_at(t0, pdocs))
 
     def _span_scores(self, q: Span) -> tuple[np.ndarray, np.ndarray]:
         """Nested span-algebra matcher — the pinned spec lives in
@@ -751,45 +672,23 @@ class RangeScorer:
         freq = root spans per doc, weighted with the include-side
         summed-idf phrase weight. Norms come from any leaf cell holding
         the doc (norms are per-doc, cells inline them)."""
-        terms = leaf_terms(q.root)
-        norm_docs: list[np.ndarray] = []
-        norm_vals: list[np.ndarray] = []
-
-        def leaf(t: str):
-            cell = self.cells.get(t)
-            if cell is None:
-                return empty_spans()
-            if not cell.pos_bytes:
-                raise ValueError("span queries require an index built "
-                                 "with positions")
-            docs, tfs = cell.decode()
-            if docs.size and (int(docs[-1]) >= 1 << 32):
-                raise ValueError("span matching requires doc_id < 2^32")
-            pos = cell.positions()
-            if pos.size and int(pos.max()) >= 1 << 31:
-                raise ValueError("span matching requires token "
-                                 "positions < 2^31")
-            norm_docs.append(docs)
-            norm_vals.append(cell.norms())
-            starts = pos.astype(np.int64)
-            return (np.repeat(docs, tfs), starts, starts + 1)
-
-        # evaluate leaves once (dedup by term), then the tree
-        cache = {t: leaf(t) for t in terms}
-        d, s, e = eval_spans(q.root, lambda t: cache[t])
-        if self._neg_mask_docs is not None and self._neg_mask_docs.size:
-            keep = ~np.isin(d, self._neg_mask_docs, assume_unique=False)
-            d = d[keep]
-        if d.size == 0:
+        pos = self._positional([t for t in leaf_terms(q.root)
+                                if t in self.cells], "span query")
+        # leaves decode once per term, then the tree evaluates over them
+        leaves = {t: (np.repeat(d, tfs), p, p + 1)
+                  for t, (d, tfs, _, p) in pos.items()}
+        d, _, _ = eval_spans(q.root, lambda t: leaves[t] if t in leaves
+                             else empty_spans())
+        pdocs, pfreq = self._live(*np.unique(d, return_counts=True))
+        if pdocs.size == 0:
             return np.empty(0, np.int64), np.empty(0, np.float32)
-        pdocs, pfreq = np.unique(d, return_counts=True)
         self.metrics.docs_scored += int(pdocs.size)
         self.metrics.docs_total += int(pdocs.size)
-        all_nd = np.concatenate(norm_docs)
-        all_nv = np.concatenate(norm_vals)
-        und, first = np.unique(all_nd, return_index=True)
-        nb = all_nv[first][np.searchsorted(und, pdocs)]
-        return pdocs, self._phrase_weighted(q, pfreq, nb)
+        und, first = np.unique(np.concatenate([e[0] for e in pos.values()]),
+                               return_index=True)
+        nb = np.concatenate([self.cells[t].norms() for t in pos])[first]
+        return pdocs, self._phrase_weighted(
+            q, pfreq, nb[np.searchsorted(und, pdocs)])
 
     def _payload_scores(self, q: PayloadScore
                         ) -> tuple[np.ndarray, np.ndarray]:
@@ -818,11 +717,7 @@ class RangeScorer:
             factor = np.add.reduceat(pay, seg)
             if q.fn == "avg":
                 factor = factor / tfs.astype(np.float64)
-        norms = cell.norms()
-        if self._neg_mask_docs is not None and self._neg_mask_docs.size:
-            keep = ~np.isin(docs, self._neg_mask_docs, assume_unique=True)
-            docs, tfs = docs[keep], tfs[keep]
-            norms, factor = norms[keep], factor[keep]
+        docs, tfs, norms, factor = self._live(docs, tfs, cell.norms(), factor)
         if docs.size == 0:
             return docs, np.empty(0, np.float32)
         self.metrics.docs_scored += int(docs.size)
@@ -860,44 +755,34 @@ class RangeScorer:
             raise ValueError(
                 "PayloadCheck requires an index built with payloads=... "
                 f"(term {q.term!r} has no payload stream)")
-        pay = cell.payloads()
         docs_rep = np.repeat(docs, tfs)
-        pdocs, pfreq = np.unique(docs_rep[pay == np.uint8(q.payload)],
-                                 return_counts=True)
-        if self._neg_mask_docs is not None and self._neg_mask_docs.size:
-            keep = ~np.isin(pdocs, self._neg_mask_docs, assume_unique=True)
-            pdocs, pfreq = pdocs[keep], pfreq[keep]
+        pdocs, pfreq = self._live(*np.unique(
+            docs_rep[cell.payloads() == np.uint8(q.payload)],
+            return_counts=True))
         if pdocs.size == 0:
             return np.empty(0, np.int64), np.empty(0, np.float32)
         self.metrics.docs_scored += int(pdocs.size)
         self.metrics.docs_total += int(pdocs.size)
-        nb = cell.norms()[np.searchsorted(docs, pdocs)]
-        return pdocs, self._phrase_weighted(q, pfreq, nb)
+        return pdocs, self._phrase_weighted(q, pfreq,
+                                            self._norms_at(q.term, pdocs))
 
     def _spanfirst_scores(self, q: SpanFirst
                           ) -> tuple[np.ndarray, np.ndarray]:
         """SpanFirst matcher — the pinned spec lives on the SpanFirst
         dataclass: freq = positions of ``match`` strictly below ``end``,
         phrase-weighted. One posting cell, no packing needed."""
-        cell = self.cells.get(q.match)
-        if cell is None:
+        if q.match not in self.cells:
             return np.empty(0, np.int64), np.empty(0, np.float32)
-        if not cell.pos_bytes:
-            raise ValueError("SpanFirst queries require an index built "
-                             "with positions")
-        docs, tfs = cell.decode()
-        pos = cell.positions()
-        docs_rep = np.repeat(docs, tfs)
-        pdocs, pfreq = np.unique(docs_rep[pos < q.end], return_counts=True)
-        if self._neg_mask_docs is not None and self._neg_mask_docs.size:
-            keep = ~np.isin(pdocs, self._neg_mask_docs, assume_unique=True)
-            pdocs, pfreq = pdocs[keep], pfreq[keep]
+        docs, tfs, _, pos = self._positional(
+            [q.match], "SpanFirst query", pack=False)[q.match]
+        pdocs, pfreq = self._live(*np.unique(np.repeat(docs, tfs)[pos < q.end],
+                                             return_counts=True))
         if pdocs.size == 0:
             return np.empty(0, np.int64), np.empty(0, np.float32)
         self.metrics.docs_scored += int(pdocs.size)
         self.metrics.docs_total += int(pdocs.size)
-        nb = cell.norms()[np.searchsorted(docs, pdocs)]
-        return pdocs, self._phrase_weighted(q, pfreq, nb)
+        return pdocs, self._phrase_weighted(q, pfreq,
+                                            self._norms_at(q.match, pdocs))
 
     # ---- generic clause scoring (phrase-aware booleans) -----------------
 
@@ -1033,7 +918,8 @@ class RangeScorer:
         msm = q.min_should_match
         if (not self.prune or msm > 1 or len(terms) == 1
                 or self._after is not None):
-            return self._or_exhaustive(terms, msm)
+            # exhaustive: term-sorted accumulation (terms is sorted)
+            return _union_sum([self._term_scores(t) for t in terms], msm)
 
         term_ub = {t: float(self._block_ubs(t, self.cells[t]).max(initial=0.0))
                    for t in terms}
@@ -1091,38 +977,8 @@ class RangeScorer:
         minimumShouldMatch counting (exhaustive — pruning needs term-only
         clauses)."""
         parts = [(repr(c), self._clause_scores(c)) for c in q.clauses]
-        nonempty = [(r, ds) for r, ds in parts if ds[0].size]
-        if not nonempty:
-            return np.empty(0, np.int64), np.empty(0, np.float32)
-        docs = np.unique(np.concatenate([d for _, (d, _s) in nonempty]))
-        total = np.zeros(docs.size, dtype=np.float64)
-        count = np.zeros(docs.size, dtype=np.int64)
-        for _, (d, s) in sorted(nonempty, key=lambda x: x[0]):
-            idx = np.searchsorted(docs, d)
-            total[idx] += s.astype(np.float64)
-            count[idx] += 1
-        if q.min_should_match > 1:
-            m = count >= q.min_should_match
-            docs, total = docs[m], total[m]
-        return docs, total.astype(np.float32)
-
-    def _or_exhaustive(self, terms: list[str], msm: int) -> tuple[np.ndarray, np.ndarray]:
-        per_term = {t: self._term_scores(t) for t in terms}
-        nonempty = {t: v for t, v in per_term.items() if v[0].size}
-        if not nonempty:
-            return np.empty(0, np.int64), np.empty(0, np.float32)
-        docs = np.unique(np.concatenate([d for d, _ in nonempty.values()]))
-        total = np.zeros(docs.size, dtype=np.float64)
-        count = np.zeros(docs.size, dtype=np.int64)
-        for t in sorted(nonempty):
-            d, s = nonempty[t]
-            idx = np.searchsorted(docs, d)
-            total[idx] += s.astype(np.float64)
-            count[idx] += 1
-        if msm > 1:
-            m = count >= msm
-            docs, total = docs[m], total[m]
-        return docs, total.astype(np.float32)
+        return _union_sum([ds for _, ds in sorted(parts, key=lambda x: x[0])],
+                          q.min_should_match)
 
     def _probe(self, term: str, candidates: np.ndarray
                ) -> tuple[np.ndarray, np.ndarray]:
@@ -1142,10 +998,7 @@ class RangeScorer:
             keep[b * BLOCK_SIZE:(b + 1) * BLOCK_SIZE] = True
         d, t, nb = docs[keep], tfs[keep], norms[keep]
         m = np.isin(d, candidates, assume_unique=True)
-        d, t, nb = d[m], t[m], nb[m]
-        if self._neg_mask_docs is not None and self._neg_mask_docs.size:
-            m2 = ~np.isin(d, self._neg_mask_docs, assume_unique=True)
-            d, t, nb = d[m2], t[m2], nb[m2]
+        d, t, nb = self._live(d[m], t[m], nb[m])
         if d.size == 0:
             return d, np.empty(0, np.float32)
         return d, self._score_arrays(term, t, nb)
@@ -1158,3 +1011,45 @@ def _take_topk(docs: np.ndarray, scores: np.ndarray, k: int
     so the sort is partition-local and small)."""
     order = np.lexsort((docs, -scores.astype(np.float64)))
     return docs[order][:k], scores[order][:k]
+
+
+def _union_sum(parts: list[tuple[np.ndarray, np.ndarray]], msm: int
+               ) -> tuple[np.ndarray, np.ndarray]:
+    """Union of (docs, float32 scores) parts, summed per doc in a float64
+    accumulator in the given part order (the oracle's order, so sums are
+    bit-identical); docs matched by fewer than ``msm`` parts drop out
+    (minimumShouldMatch)."""
+    parts = [(d, s) for d, s in parts if d.size]
+    if not parts:
+        return np.empty(0, np.int64), np.empty(0, np.float32)
+    docs = np.unique(np.concatenate([d for d, _ in parts]))
+    total = np.zeros(docs.size, dtype=np.float64)
+    count = np.zeros(docs.size, dtype=np.int64)
+    for d, s in parts:
+        idx = np.searchsorted(docs, d)
+        total[idx] += s.astype(np.float64)
+        count[idx] += 1
+    if msm > 1:
+        m = count >= msm
+        docs, total = docs[m], total[m]
+    return docs, total.astype(np.float32)
+
+
+def _in_docs(entry: tuple[np.ndarray, ...], cand: np.ndarray
+             ) -> tuple[np.ndarray, np.ndarray]:
+    """(doc, position) of every occurrence of a decoded term
+    (:meth:`RangeScorer._positional`) inside the candidate docs."""
+    docs, tfs, _, pos = entry
+    rep = np.repeat(docs, tfs)
+    m = np.isin(rep, cand)
+    return rep[m], pos[m]
+
+
+def _slot_keys(entry: tuple[np.ndarray, ...], cand: np.ndarray, off: int
+               ) -> np.ndarray:
+    """Packed uint64 (doc << 32 | base) keys of a phrase slot at offset
+    ``off``: base = position - off, for occurrences in candidate docs."""
+    d, p = _in_docs(entry, cand)
+    ok = p >= off
+    return ((d[ok].astype(np.uint64) << np.uint64(32))
+            | (p[ok] - off).astype(np.uint64))

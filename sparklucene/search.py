@@ -1568,6 +1568,43 @@ def explain_terms(index: Index, corpus: DataFrame, terms: "tuple[str, ...]",
         .orderBy("doc_id", "term"))
 
 
+def _term_occurrences(index: Index, query_term: str,
+                      doc_ids: "tuple[int, ...] | None",
+                      payloads: bool) -> DataFrame:
+    """(doc_id, pos[, payload]) for every occurrence of one term, decoded
+    from the index: term pushdown on the postings scan, then each cell of
+    an Arrow batch decodes through the scorer's own cell constructor."""
+    schema = "doc_id long, pos long" + (", payload long" if payloads else "")
+
+    def gen(batches):
+        for b in batches:
+            make = _cell_maker(b)
+            for r in range(b.num_rows):
+                cell = make(r)[1]
+                if not cell.pos_bytes:
+                    raise ValueError(f"term {query_term!r} has no position "
+                                     "stream (index built without positions)")
+                docs, tfs = cell.decode()
+                cols = {"doc_id": np.repeat(docs, tfs),
+                        "pos": cell.positions()}
+                if payloads:
+                    pay = cell.payloads()
+                    if pay.size != cols["pos"].size:
+                        raise ValueError(
+                            "payload stream misaligned with positions: "
+                            f"{pay.size} payloads vs {cols['pos'].size} "
+                            "positions")
+                    cols["payload"] = pay.astype(np.int64)
+                yield pa.RecordBatch.from_pydict(cols)
+
+    out = (index.postings().filter(F.col("term") == query_term)
+           .mapInArrow(gen, schema))
+    if doc_ids is not None:
+        ids = sorted({int(d) for d in doc_ids})
+        out = out.filter(F.col("doc_id").isin(ids))
+    return out.orderBy("doc_id", "pos")
+
+
 def term_positions(index: Index, query_term: str,
                    doc_ids: "tuple[int, ...] | None" = None) -> DataFrame:
     """Positions decoded FROM THE INDEX — Lucene's PostingsEnum with
@@ -1583,35 +1620,7 @@ def term_positions(index: Index, query_term: str,
     Arrow-batched decode per (term, drange) cell, narrow explode — the
     exact shape the phrase scorer uses.
     """
-    import pandas as pd
-
-    from sparklucene.codec import decode_doc_ids, decode_positions, decode_tfs
-
-    ids = None if doc_ids is None else {int(d) for d in doc_ids}
-    rows = index.postings().filter(F.col("term") == query_term) \
-        .select("doc_bytes", "tf_bytes", "pos_bytes")
-
-    def gen(pdfs):
-        import numpy as np
-        for pdf in pdfs:
-            out_d, out_p = [], []
-            for db, tb, pb in zip(pdf["doc_bytes"], pdf["tf_bytes"],
-                                  pdf["pos_bytes"]):
-                docs = decode_doc_ids(bytes(db))
-                tfs = decode_tfs(bytes(tb))
-                pos = decode_positions(bytes(pb), tfs)
-                d_rep = np.repeat(docs, tfs)
-                out_d.append(d_rep)
-                out_p.append(pos)
-            if out_d:
-                d = np.concatenate(out_d)
-                p = np.concatenate(out_p)
-                yield pd.DataFrame({"doc_id": d, "pos": p})
-
-    out = rows.mapInPandas(gen, "doc_id long, pos long")
-    if ids is not None:
-        out = out.filter(F.col("doc_id").isin(sorted(ids)))
-    return out.orderBy("doc_id", "pos")
+    return _term_occurrences(index, query_term, doc_ids, payloads=False)
 
 
 def term_payloads(index: Index, query_term: str,
@@ -1622,38 +1631,7 @@ def term_payloads(index: Index, query_term: str,
     stream; emitted as (doc_id, pos, payload). The codec round-trip twin
     of :func:`term_positions` for the payload plane. Same scale shape:
     term pushdown + Arrow-batched cell decode."""
-    import pandas as pd
-
-    from sparklucene.codec import decode_doc_ids, decode_positions, decode_tfs
-
-    ids = None if doc_ids is None else {int(d) for d in doc_ids}
-    rows = index.postings().filter(F.col("term") == query_term) \
-        .select("doc_bytes", "tf_bytes", "pos_bytes", "pay_bytes")
-
-    def gen(pdfs):
-        import numpy as np
-        for pdf in pdfs:
-            frames = []
-            for db, tb, pb, yb in zip(pdf["doc_bytes"], pdf["tf_bytes"],
-                                      pdf["pos_bytes"], pdf["pay_bytes"]):
-                docs = decode_doc_ids(bytes(db))
-                tfs = decode_tfs(bytes(tb))
-                pos = decode_positions(bytes(pb), tfs)
-                pay = np.frombuffer(bytes(yb), dtype=np.uint8)
-                if pay.size != pos.size:
-                    raise ValueError(
-                        "payload stream misaligned with positions: "
-                        f"{pay.size} payloads vs {pos.size} positions")
-                frames.append(pd.DataFrame(
-                    {"doc_id": np.repeat(docs, tfs), "pos": pos,
-                     "payload": pay.astype(np.int64)}))
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-
-    out = rows.mapInPandas(gen, "doc_id long, pos long, payload long")
-    if ids is not None:
-        out = out.filter(F.col("doc_id").isin(sorted(ids)))
-    return out.orderBy("doc_id", "pos")
+    return _term_occurrences(index, query_term, doc_ids, payloads=True)
 
 
 def terms_enum(index: Index, field: str | None = None,

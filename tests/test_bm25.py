@@ -6,7 +6,9 @@ import duckdb
 import numpy as np
 
 from sparklucene import bm25
+from sparklucene.codec import BLOCK_SIZE, encode_postings
 from sparklucene.norms import LENGTH_TABLE, int_to_byte4
+from sparklucene.scorer import GlobalStats, RangeCell, RangeScorer, TermStats
 
 
 def test_idf_monotonic_decreasing_in_df():
@@ -77,17 +79,24 @@ def test_sql_score_bit_exact_vs_numpy():
 
 
 def test_block_upper_bound_is_safe():
+    """Block bounds (RangeScorer._block_ubs: the scorer's own similarity
+    switch at (block max_tf, block min_norm)) dominate every posting score
+    of their block, in every mode."""
     rng = np.random.default_rng(2)
     for _ in range(50):
-        n = 128
+        n = int(rng.integers(1, 600))
+        docs = np.sort(rng.choice(1000, n, replace=False))
         tfs = rng.integers(1, 40, n)
         nb = int_to_byte4(rng.integers(1, 3000, n))
-        df, N, sumdl = int(rng.integers(1, 999)), 1000, 500_000
-        s = bm25.score_lucene8(tfs, nb, df, N, sumdl)
-        ub = bm25.block_upper_bound_lucene8(
-            np.array([tfs.max()]), np.array([nb.min()]), df, N, sumdl)
-        assert (s <= ub[0]).all()
-        s64 = bm25.score_f64(tfs, LENGTH_TABLE[nb], df, N, sumdl)
-        ub64 = bm25.block_upper_bound_f64(
-            np.array([tfs.max()]), np.array([nb.min()]), df, N, sumdl)
-        assert (s64 <= ub64[0]).all()
+        c = encode_postings(docs, tfs, nb)
+        cell = RangeCell(c.doc_bytes, c.tf_bytes, c.norm_bytes,
+                         c.block_last_doc, c.block_max_tf, c.block_min_norm)
+        stats = GlobalStats(1000, 500_000, {"t": TermStats(
+            df=int(rng.integers(n, 1000)), cf=int(tfs.sum()))})
+        block = np.arange(n) // BLOCK_SIZE
+        for mode in ("lucene8", "f64", "classic", "boolean"):
+            scorer = RangeScorer({"t": cell}, stats, mode=mode)
+            ub = scorer._block_ubs("t", cell)
+            assert ub.size == block[-1] + 1
+            s = scorer._score_arrays("t", tfs, nb)
+            assert (s <= ub[block]).all(), mode

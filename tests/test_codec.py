@@ -4,9 +4,9 @@
 import numpy as np
 import pytest
 
-from sparklucene.codec import (BLOCK_SIZE, decode_block, decode_doc_ids,
-                               decode_tfs, delta_decode, delta_encode,
-                               encode_postings, vbyte_decode, vbyte_encode)
+from sparklucene.codec import (BLOCK_SIZE, decode_doc_ids, decode_tfs,
+                               delta_decode, delta_encode, encode_postings,
+                               vbyte_decode, vbyte_encode)
 
 
 def test_vbyte_known_values():
@@ -56,15 +56,6 @@ def test_postings_roundtrip(seed):
         assert cell.block_last_doc[bi] == docs[sl][-1]
         assert cell.block_max_tf[bi] == tfs[sl].max()
         assert cell.block_min_norm[bi] == norms[sl].min()
-
-
-def test_decode_block_selects_exact_blocks():
-    docs = np.arange(1, 1001, dtype=np.int64) * 3
-    tfs = np.ones(1000, dtype=np.int64)
-    cell = encode_postings(docs, tfs)
-    d, t = decode_block(cell.doc_bytes, cell.tf_bytes, np.array([0, 3]))
-    expect = np.concatenate([docs[:128], docs[3 * 128:4 * 128]])
-    assert (d == expect).all() and t.size == d.size
 
 
 def test_delta_requires_sorted():

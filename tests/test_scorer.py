@@ -13,12 +13,13 @@ from sparklucene.norms import int_to_byte4
 from sparklucene.oracle import build_oracle_index, search_oracle
 from sparklucene.query import (And, ConstantScore, DisMax, Filtered,
                                MatchAllDocs, MultiPhrase, Not, Or, Phrase,
-                               Term, parse)
+                               Span, SpanFirst, Synonym, Term, Within, parse)
 from sparklucene.scorer import GlobalStats, RangeCell, RangeScorer, TermStats
+from sparklucene.spans import SpanNearNode, SpanNotNode, SpanOrNode, SpanTerm
 
 
 def _scorer_from_oracle(oidx, mode="lucene8", prune=True, deleted=None,
-                        allowed=None):
+                        allowed=None, positions=True):
     cells = {}
     for term, g in oidx.tf.groupby("term"):
         g = g.sort_values("doc_id")
@@ -30,7 +31,8 @@ def _scorer_from_oracle(oidx, mode="lucene8", prune=True, deleted=None,
         c = encode_postings(d, t, nb, pos)
         cells[term] = RangeCell(c.doc_bytes, c.tf_bytes, c.norm_bytes,
                                 c.block_last_doc, c.block_max_tf,
-                                c.block_min_norm, c.pos_bytes)
+                                c.block_min_norm,
+                                c.pos_bytes if positions else b"")
     cf_by_term = oidx.tf.groupby("term")["tf"].sum()
     stats = GlobalStats(
         doc_count=oidx.doc_count, sum_dl=oidx.sum_dl,
@@ -86,6 +88,16 @@ QUERIES = [
     MultiPhrase(((0, ("table",)), (1, ("hash", "scan")))),
     And((MultiPhrase(((0, ("fast", "slow")), (1, ("join", "merge")))),
          Term("table"))),
+    # matchers whose weighting goes through the shared similarity switch
+    Synonym(("merge", "join"), boost=2.5),
+    Synonym(("merge", "join"), blend_df=40),
+    Within(("merge", "join"), 4),
+    Within(("merge", "join"), 4, ordered=True),
+    SpanFirst("merge", 5),
+    Span(SpanNotNode(SpanNearNode((SpanOrNode((SpanTerm("fast"),
+                                               SpanTerm("slow"))),
+                                   SpanTerm("join")), 2, in_order=False),
+                     SpanTerm("scan"))),
 ]
 
 
@@ -99,9 +111,44 @@ def test_pruned_equals_exhaustive_equals_oracle(oidx, mode, k):
         de, ve = se.topk(q, k)
         assert dp.tolist() == de.tolist(), f"prune changed ids for {q}"
         assert (vp == ve).all(), f"prune changed scores for {q}"
+        assert sp.metrics.docs_total == se.metrics.docs_total, q
+        assert sp.metrics.docs_scored <= se.metrics.docs_scored, q
         want = search_oracle(oidx, q, k, mode=mode)
         assert dp.tolist() == want["doc_id"].tolist(), f"ids vs oracle for {q}"
         assert (vp == want["score"].to_numpy()).all(), f"scores vs oracle for {q}"
+
+
+POSITIONAL = {
+    "phrase": Phrase(((0, "merge"), (1, "join"))),
+    "sloppy phrase": Phrase(((0, "merge"), (1, "join")), slop=2),
+    "multi-phrase": MultiPhrase(((0, ("fast", "slow")), (1, ("join",)))),
+    "within": Within(("merge", "join"), 4),
+    "span": Span(SpanNearNode((SpanTerm("merge"), SpanTerm("join")), 1)),
+    "spanfirst": SpanFirst("merge", 5),
+}
+
+
+def test_positional_preconditions(corpus_pdf):
+    """Positional matchers raise on cells without a position stream; the
+    (doc, pos) key-packing matchers raise on doc ids >= 2^32, while
+    SpanFirst (no packed keys) still answers there."""
+    oidx = build_oracle_index(corpus_pdf)
+    no_pos = _scorer_from_oracle(oidx, positions=False)
+    for q in POSITIONAL.values():
+        with pytest.raises(ValueError, match="positions"):
+            no_pos.topk(q, 10)
+    big = corpus_pdf.assign(doc_id=corpus_pdf["doc_id"] + (1 << 32))
+    big_oidx = build_oracle_index(big)
+    for name, q in POSITIONAL.items():
+        scorer = _scorer_from_oracle(big_oidx)
+        if name == "spanfirst":
+            d, v = scorer.topk(q, 10)
+            want = search_oracle(big_oidx, q, 10)
+            assert d.size and d.tolist() == want["doc_id"].tolist()
+            assert (v == want["score"].to_numpy()).all()
+        else:
+            with pytest.raises(ValueError, match="doc_id < 2\\^32"):
+                scorer.topk(q, 10)
 
 
 def test_pruning_actually_prunes(oidx):
