@@ -5,7 +5,8 @@ Default mode (driver contract): runs at $SPARK_GRAFT_SF_DIR (default
   {"metric": ..., "value": <total sec>, "unit": "sec",
    "queries": {name: sec, ...}, "sf": ...,
    "index": {docs, docs_per_sec, build_sec, ...},
-   "latency": {p50_sec, p99_sec}}
+   "latency": {p50_sec, p99_sec},
+   "floor": {empty_job_sec, udf_job_sec}}
 
 Scaling mode (BASELINE.md two-cluster-size criterion): SCALING=1 python
 bench.py re-runs the same build at two parallelism levels (default
@@ -186,6 +187,30 @@ def run_queries(spark, index_dir: str) -> tuple[dict, dict]:
     return per_query, lat
 
 
+def spark_floor(spark) -> dict:
+    """Spark's fixed per-job cost, median of QUERY_REPS warm runs each:
+    a JVM-only job and a 1-partition no-op Arrow UDF job whose worker
+    imports the engine (as every engine UDF does). Every search pays at
+    least the UDF job."""
+    def noop(batches):
+        import sparklucene  # noqa: F401
+        yield from batches
+
+    udf_job = spark.range(0, 1, 1, 1).mapInArrow(noop, "id long")
+
+    def median_sec(action) -> float:
+        action()  # warm
+        ts = []
+        for _ in range(QUERY_REPS):
+            t0 = time.perf_counter()
+            action()
+            ts.append(time.perf_counter() - t0)
+        return round(float(np.median(ts)), 4)
+
+    return {"empty_job_sec": median_sec(lambda: spark.range(1).count()),
+            "udf_job_sec": median_sec(udf_job.collect)}
+
+
 def run_wand_ablation(spark, index_dir: str) -> dict:
     """WAND/MAXSCORE on vs off. Results are identical (asserted in tests);
     the honest benefit metric is DOCS SCORED, measured by running the real
@@ -266,6 +291,7 @@ def main() -> None:
     b32 = build_reps(CPUS, f"c{CPUS}", breps)
     spark = b32.pop("spark")
     per_query, lat = run_queries(spark, b32["index_dir"])
+    floor = spark_floor(spark)
 
     out = {
         "metric": "index-build docs/sec + BM25 top-10 latency (sf%s corpus x%d)"
@@ -275,6 +301,7 @@ def main() -> None:
         "queries": {k: round(v, 4) for k, v in per_query.items()},
         "latency": {k: (round(v, 4) if isinstance(v, float) else v)
                     for k, v in lat.items()},
+        "floor": floor,
         "index": {k: (round(v, 3) if isinstance(v, float) else v)
                   for k, v in b32.items() if k != "index_dir"},
     }

@@ -16,4 +16,8 @@ Reference semantics (public Apache Lucene 8.x knowledge):
 
 __version__ = "0.1.0"
 
-from sparklucene import analysis, bm25, codec, norms  # noqa: F401
+from sparklucene import _zipstat, analysis, bm25, codec, norms  # noqa: F401
+
+# every engine UDF unpickles references to sparklucene.*, so each reused
+# Python worker installs this during its first engine task
+_zipstat.install()

@@ -730,11 +730,16 @@ def search(index: Index, query: str | Query, k: int | None = 10,
                          "round is k-bounded by design)")
     q = qualify(_as_query(query))
     q = _expand_multiterm(q, index, max_expansions)
-    empty = spark.createDataFrame([], RESULT_SCHEMA)
-    if highlight:
-        empty = empty.withColumn("highlights", F.expr(_EMPTY_HL))
-    if isinstance(q, MatchNoDocs):
+
+    def no_hits() -> DataFrame:
+        # built only here: createDataFrame costs ~20 ms of driver planning
+        empty = spark.createDataFrame([], RESULT_SCHEMA)
+        if highlight:
+            empty = empty.withColumn("highlights", F.expr(_EMPTY_HL))
         return _hydrate(empty, hydrate)
+
+    if isinstance(q, MatchNoDocs):
+        return no_hits()
     pos_terms = q.terms()
     all_terms = sorted(set(pos_terms) | set(q.neg_terms()))
     tstats = index.term_stats_for(all_terms)
@@ -742,7 +747,7 @@ def search(index: Index, query: str | Query, k: int | None = 10,
     # BooleanWeight null-scorer behavior)
     q = prune_missing(q, set(tstats))
     if isinstance(q, MatchNoDocs):
-        return _hydrate(empty, hydrate)
+        return no_hits()
     if isinstance(q, MatchAllDocs) or (
             isinstance(q, Not) and isinstance(q.positive, MatchAllDocs)):
         out = _matchall_search(index, q, k, mode, None, exclude_docs,
@@ -1261,7 +1266,6 @@ def search_batch(index: Index, queries, k: int = 10,
             matchall[n] = q
             continue
         live[n] = q
-    empty = spark.createDataFrame([], BATCH_SCHEMA)
     ma_parts = [
         _matchall_search(index, q, k, mode, None, None, afters.get(n))
         .select(F.lit(n).alias("query"), "doc_id", "score")
@@ -1270,7 +1274,8 @@ def search_batch(index: Index, queries, k: int = 10,
     for p in ma_parts[1:]:
         ma_df = ma_df.unionByName(p)
     if not live:
-        return ma_df if ma_df is not None else empty
+        return (ma_df if ma_df is not None
+                else spark.createDataFrame([], BATCH_SCHEMA))
     gstats = GlobalStats(doc_count=int(index.stats["doc_count"]),
                          sum_dl=int(index.stats["sum_dl"]),
                          term_stats=tstats,

@@ -308,3 +308,48 @@ def test_top_terms_scoring_rewrite(built, oidx):
                 mode="f64").toPandas()
     assert not np.allclose(np.sort(cs["score"].to_numpy())[::-1],
                            np.sort(tt["score"].to_numpy())[::-1])
+
+
+def test_no_hit_results_keep_the_hit_schemas(built):
+    """The empty result (built only on the MatchNoDocs returns) has the
+    schema of a hit result: with and without highlights and hydration,
+    for search() and search_batch()."""
+    from sparklucene.query import MatchNoDocs
+    from sparklucene.search import search_batch
+
+    idx, corpus, _ = built
+    for kw in ({}, {"highlight": True}, {"hydrate": corpus},
+               {"highlight": True, "hydrate": corpus}):
+        hit = search(idx, "merge", k=5, **kw)
+        assert hit.count() > 0
+        for none in ("zzz_absent_term", MatchNoDocs()):
+            out = search(idx, none, k=5, **kw)
+            assert out.schema == hit.schema, (kw, none)
+            assert out.count() == 0
+    hit = search_batch(idx, {"a": "merge"}, k=5)
+    out = search_batch(idx, {"a": "zzz_absent_term", "b": MatchNoDocs()},
+                       k=5)
+    assert out.schema == hit.schema
+    assert out.count() == 0
+
+
+def test_workers_run_the_stat_keyed_zip_invalidation(spark, built):
+    """After an engine job, a Python worker that imports the package runs
+    ``sparklucene._zipstat.invalidate_caches`` as the zipimporter method
+    (what keeps PySpark's per-task ``importlib.invalidate_caches()`` from
+    re-reading pyspark.zip and the Spark jar)."""
+    import pyarrow as pa
+
+    def probe(batches):
+        import zipimport
+
+        import sparklucene  # noqa: F401
+
+        for _ in batches:
+            pass
+        fn = zipimport.zipimporter.invalidate_caches
+        yield pa.RecordBatch.from_pydict(
+            {"fn": [f"{fn.__module__}.{fn.__qualname__}"]})
+
+    rows = spark.range(0, 1, 1, 1).mapInArrow(probe, "fn string").collect()
+    assert [r["fn"] for r in rows] == ["sparklucene._zipstat.invalidate_caches"]
