@@ -6,8 +6,9 @@ Catalyst:
 
   phase 0  parse + rewrite (driver, tiny AST)
   phase 1  stats gather: termstats rows for the query terms (predicate
-           pushdown on the term-sorted Parquet), collected + broadcast —
-           Lucene's TermStates.build
+           pushdown on the term-sorted Parquet), collected to the driver
+           and shipped inside the scorer closure — Lucene's
+           TermStates.build (phases 0-1 are :func:`_plan`)
   phase 2  scatter: postings rows for the query terms (term-pruned scan;
            norm bytes are inlined in the cells, so no docmeta join) are
            grouped by doc-range; each task runs the vectorized
@@ -31,6 +32,7 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+import dataclasses
 import os
 import threading
 from collections import OrderedDict
@@ -48,12 +50,6 @@ from sparklucene.scorer import GlobalStats, RangeCell, RangeScorer, TermStats
 
 RESULT_SCHEMA = "doc_id long, score double"
 BATCH_SCHEMA = "query string, doc_id long, score double"
-
-#: deletes at or below this count may be collected to the driver
-#: (delete_docs' dedup + rewrite); above it delete_docs appends, so the
-#: driver never materializes the deletes table. Search never collects:
-#: deletes ride the postings stream / anti-join docmeta at any count.
-DELETES_BROADCAST_BOUND = 1_000_000
 
 #: generation-aware shared Index handles (see Index.shared) — LRU so
 #: long sessions touching many index dirs don't pin every postings
@@ -132,7 +128,6 @@ class Index:
         self._postings: DataFrame | None = None
         self._termstats: DataFrame | None = None
         self._tstats_memo: dict[str, TermStats | None] = {}
-        self._deleted: list[int] | None = None
         self._deletes: DataFrame | None = None
         self._deleted_count: int | None = None
         self._expand_memo: dict[tuple, list[str]] = {}
@@ -185,32 +180,8 @@ class Index:
                                    else df.distinct().count())
         return self._deleted_count
 
-    def deleted_ids(self) -> list[int]:
-        """Persisted deletions (live-docs). Memoized on the handle — one
-        Spark job per cold handle, zero per query (Lucene keeps the
-        live-docs bitset in RAM per segment too). Hard-bounded: beyond
-        DELETES_BROADCAST_BOUND callers must use :meth:`deletes_df`
-        (the scorer path streams it per range; the docmeta path
-        anti-joins) — collecting a pathological deletes table would OOM
-        the driver."""
-        if self._deleted is None:
-            df = self.deletes_df()
-            if df is None:
-                self._deleted = []
-            else:
-                n = self.deleted_count()
-                if n > DELETES_BROADCAST_BOUND:
-                    raise RuntimeError(
-                        f"{n} deletes exceed DELETES_BROADCAST_BOUND "
-                        f"({DELETES_BROADCAST_BOUND}) — this path must use "
-                        "deletes_df() (distributed), not a driver collect")
-                self._deleted = sorted(
-                    {int(r["doc_id"]) for r in df.collect()})
-        return self._deleted
-
     def invalidate_deletes(self) -> None:
         """Drop the memoized live-docs state (called by delete_docs)."""
-        self._deleted = None
         self._deletes = None
         self._deleted_count = None
 
@@ -556,6 +527,45 @@ def _expand_multiterm(q: Query, index: Index, cap: int) -> Query:
     return q
 
 
+def _plan(index: Index, queries: dict, max_expansions: int = 1024,
+          stats_override: GlobalStats | None = None
+          ) -> tuple[dict[str, Query], dict[str, Query], GlobalStats]:
+    """Phases 0-1 for named queries -> ``(live, matchall, gstats)``.
+
+    Every query is parsed, qualified and multi-term expanded; one
+    term-stats lookup covers the union of their terms. Unindexed terms
+    then prune away (Lucene BooleanWeight null-scorer behavior: AND
+    dies, OR drops them) and queries that match nothing are dropped.
+    ``MatchAllDocs`` / ``Not(MatchAllDocs, x)`` go to ``matchall`` (the
+    docmeta branch), the rest to ``live`` (the range scorer). ``gstats``
+    holds the collection statistics the scorer uses; with
+    ``stats_override``, local stats fill only the terms it lacks."""
+    named = {str(n): _expand_multiterm(qualify(_as_query(q)), index,
+                                       max_expansions)
+             for n, q in queries.items()}
+    tstats = index.term_stats_for(sorted(
+        {t for q in named.values() for t in (*q.terms(), *q.neg_terms())}))
+    live: dict[str, Query] = {}
+    matchall: dict[str, Query] = {}
+    for n, q in named.items():
+        q = prune_missing(q, set(tstats))
+        if isinstance(q, MatchNoDocs):
+            continue
+        pos = q.positive if isinstance(q, Not) else q
+        (matchall if isinstance(pos, MatchAllDocs) else live)[n] = q
+    if stats_override is None:
+        return live, matchall, GlobalStats(
+            doc_count=int(index.stats["doc_count"]),
+            sum_dl=int(index.stats["sum_dl"]), term_stats=tstats,
+            field_stats=index.stats.get("fields"))
+    # terms the override does not know (e.g. per-shard multi-term
+    # expansions the merger never saw) fall back to LOCAL stats —
+    # mirrors ExactStatsCache, which only merges stats for the terms of
+    # the rewritten query it was shown
+    return live, matchall, dataclasses.replace(
+        stats_override, term_stats={**tstats, **stats_override.term_stats})
+
+
 #: ranges per scoring task for narrow queries (see _scoring_parts)
 _RANGES_PER_TASK = 12
 
@@ -728,72 +738,35 @@ def search(index: Index, query: str | Query, k: int | None = 10,
     if highlight and k is None:
         raise ValueError("highlight requires a bounded k (the positions "
                          "round is k-bounded by design)")
-    q = qualify(_as_query(query))
-    q = _expand_multiterm(q, index, max_expansions)
-
-    def no_hits() -> DataFrame:
-        # built only here: createDataFrame costs ~20 ms of driver planning
-        empty = spark.createDataFrame([], RESULT_SCHEMA)
-        if highlight:
-            empty = empty.withColumn("highlights", F.expr(_EMPTY_HL))
-        return _hydrate(empty, hydrate)
-
-    if isinstance(q, MatchNoDocs):
-        return no_hits()
-    pos_terms = q.terms()
-    all_terms = sorted(set(pos_terms) | set(q.neg_terms()))
-    tstats = index.term_stats_for(all_terms)
-    # unindexed terms: empty scorers — AND dies, OR drops them (Lucene
-    # BooleanWeight null-scorer behavior)
-    q = prune_missing(q, set(tstats))
-    if isinstance(q, MatchNoDocs):
-        return no_hits()
-    if isinstance(q, MatchAllDocs) or (
-            isinstance(q, Not) and isinstance(q.positive, MatchAllDocs)):
-        out = _matchall_search(index, q, k, mode, None, exclude_docs,
+    live, matchall, gstats = _plan(index, {"q": query}, max_expansions,
+                                   stats_override)
+    if live:
+        out = _score_plan(
+            index, live, k, mode, prune, gstats,
+            {"q": after} if after is not None else {},
+            exclude_docs, doc_filter).select("doc_id", "score")
+        if k is None:
+            return _hydrate(out, hydrate)
+        out = out.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    elif matchall:
+        out = _matchall_search(index, matchall["q"], k, mode, exclude_docs,
                                after, doc_filter)
-        if highlight:  # MatchAll has no matched terms
-            out = out.withColumn("highlights", F.expr(_EMPTY_HL))
-        return _hydrate(out, hydrate)
-    if stats_override is not None:
-        # terms the override does not know (e.g. per-shard multi-term
-        # expansions the merger never saw) fall back to LOCAL stats —
-        # mirrors ExactStatsCache, which only merges stats for the terms
-        # of the rewritten query it was shown
-        ts = dict(stats_override.term_stats)
-        for t, s in tstats.items():
-            ts.setdefault(t, s)
-        gstats = GlobalStats(doc_count=stats_override.doc_count,
-                             sum_dl=stats_override.sum_dl,
-                             term_stats=ts,
-                             field_stats=stats_override.field_stats)
     else:
-        gstats = GlobalStats(doc_count=int(index.stats["doc_count"]),
-                             sum_dl=int(index.stats["sum_dl"]),
-                             term_stats=tstats,
-                             field_stats=index.stats.get("fields"))
-
-    candidates = _score_plan(
-        index, {"q": q}, k, mode, prune, gstats,
-        {"q": after} if after is not None else {},
-        exclude_docs, doc_filter).select("doc_id", "score")
-    if k is None:
-        return _hydrate(candidates, hydrate)
-    topk = candidates.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-    if highlight:
-        hterms = sorted({t for t in q.terms() if FIELD_SEP not in t})
-        if hterms:
-            hl = _highlight_positions(index, hterms, topk)
-            agg = (hl.groupBy("doc_id")
-                   .agg(F.array_sort(F.collect_list(
-                       F.struct("term", "positions"))).alias("highlights")))
-            topk = (topk.join(agg, "doc_id", "left")
-                    .withColumn("highlights",
-                                F.coalesce(F.col("highlights"),
-                                           F.expr(_EMPTY_HL))))
-        else:
-            topk = topk.withColumn("highlights", F.expr(_EMPTY_HL))
-    return _hydrate(topk, hydrate)
+        # built only here: createDataFrame costs ~20 ms of driver planning
+        out = spark.createDataFrame([], RESULT_SCHEMA)
+    hterms = sorted({t for q in live.values() for t in q.terms()
+                     if FIELD_SEP not in t})
+    if highlight and hterms:
+        hl = _highlight_positions(index, hterms, out)
+        agg = (hl.groupBy("doc_id")
+               .agg(F.array_sort(F.collect_list(
+                   F.struct("term", "positions"))).alias("highlights")))
+        out = (out.join(agg, "doc_id", "left")
+               .withColumn("highlights",
+                           F.coalesce(F.col("highlights"), F.expr(_EMPTY_HL))))
+    elif highlight:  # no hits, MatchAll, or no default-field terms
+        out = out.withColumn("highlights", F.expr(_EMPTY_HL))
+    return _hydrate(out, hydrate)
 
 
 def highlight_passages(index: Index, query: "str | Query", k: int = 10,
@@ -818,21 +791,19 @@ def highlight_passages(index: Index, query: "str | Query", k: int = 10,
     window / row_number; nothing corpus-proportional.
     """
     from sparklucene.bm25 import idf as _bm25_idf
-    from pyspark.sql import Window as _W
     topk = search(index, query, k=k, mode=mode)
-    q = qualify(_as_query(query))
-    hterms = sorted({t for t in q.terms() if FIELD_SEP not in t})
-    tstats = index.term_stats_for(hterms)
-    hterms = [t for t in hterms if t in tstats]
-    spark = index.spark
-    out_schema = ("doc_id long, window_start long, n_matches long, "
-                  "passage_score double")
+    # the search above planned the same query: expansions and term stats
+    # are memoized on the handle, so this re-plan runs no Spark job
+    live, _, gstats = _plan(index, {"q": query})
+    hterms = sorted({t for q in live.values() for t in q.terms()
+                     if FIELD_SEP not in t})
     if not hterms:
-        return spark.createDataFrame([], out_schema)
-    n = int(index.stats["doc_count"])
+        return index.spark.createDataFrame(
+            [], "doc_id long, window_start long, n_matches long, "
+                "passage_score double")
+    n, ts = gstats.doc_count, gstats.term_stats
     wmap = F.create_map(*[x for t in hterms
-                          for x in (F.lit(t),
-                                    F.lit(_bm25_idf(tstats[t].df, n)))])
+                          for x in (F.lit(t), F.lit(_bm25_idf(ts[t].df, n)))])
     hl = _highlight_positions(index, hterms, topk)
     occ = (hl.select("doc_id", "term",
                      F.explode("positions").alias("pos"))
@@ -843,8 +814,8 @@ def highlight_passages(index: Index, query: "str | Query", k: int = 10,
                 F.sum("w").cast("float").cast("double")
                 .alias("passage_score")))
     rk = F.row_number().over(
-        _W.partitionBy("doc_id").orderBy(F.desc("passage_score"),
-                                         F.asc("window_start")))
+        Window.partitionBy("doc_id").orderBy(F.desc("passage_score"),
+                                             F.asc("window_start")))
     return (pas.withColumn("rk", rk)
             .filter(F.col("rk") <= n_passages).drop("rk")
             .orderBy("doc_id", F.desc("passage_score"), "window_start"))
@@ -971,7 +942,6 @@ def common_terms_query(index: Index, terms: list[str],
 
 
 def _matchall_search(index: Index, q: Query, k: int | None, mode: str,
-                     hydrate: DataFrame | None,
                      exclude_docs: list[int] | None,
                      after: tuple[float, int] | None,
                      doc_filter: DataFrame | None = None) -> DataFrame:
@@ -1009,9 +979,8 @@ def _matchall_search(index: Index, q: Query, k: int | None, mode: str,
                            | ((F.col("score") == F.lit(a_s))
                               & (F.col("doc_id") > F.lit(a_d))))
     if k is None:
-        return _hydrate(base, hydrate)
-    return _hydrate(base.orderBy(F.desc("score"), F.asc("doc_id")).limit(k),
-                    hydrate)
+        return base
+    return base.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
 def boost_by(index: Index, query: str | Query, attrs: DataFrame,
@@ -1249,25 +1218,9 @@ def search_batch(index: Index, queries, k: int = 10,
     unknown = set(afters) - {str(n) for n in queries}
     if unknown:
         raise ValueError(f"afters for unknown queries: {sorted(unknown)}")
-    named = {str(n): _expand_multiterm(qualify(_as_query(q)), index,
-                                       max_expansions)
-             for n, q in queries.items()}
-    all_terms = sorted({t for q in named.values()
-                        for t in set(q.terms()) | set(q.neg_terms())})
-    tstats = index.term_stats_for(all_terms)
-    live: dict[str, Query] = {}
-    matchall: dict[str, Query] = {}
-    for n, q in named.items():
-        q = prune_missing(q, set(tstats))
-        if isinstance(q, MatchNoDocs):
-            continue
-        if isinstance(q, MatchAllDocs) or (
-                isinstance(q, Not) and isinstance(q.positive, MatchAllDocs)):
-            matchall[n] = q
-            continue
-        live[n] = q
+    live, matchall, gstats = _plan(index, queries, max_expansions)
     ma_parts = [
-        _matchall_search(index, q, k, mode, None, None, afters.get(n))
+        _matchall_search(index, q, k, mode, None, afters.get(n))
         .select(F.lit(n).alias("query"), "doc_id", "score")
         for n, q in sorted(matchall.items())]
     ma_df = ma_parts[0] if ma_parts else None
@@ -1276,10 +1229,6 @@ def search_batch(index: Index, queries, k: int = 10,
     if not live:
         return (ma_df if ma_df is not None
                 else spark.createDataFrame([], BATCH_SCHEMA))
-    gstats = GlobalStats(doc_count=int(index.stats["doc_count"]),
-                         sum_dl=int(index.stats["sum_dl"]),
-                         term_stats=tstats,
-                         field_stats=index.stats.get("fields"))
     candidates = _score_plan(index, live, k, mode, prune, gstats, afters)
     w = Window.partitionBy("query").orderBy(F.desc("score"),
                                             F.asc("doc_id"))
@@ -1291,20 +1240,16 @@ def search_batch(index: Index, queries, k: int = 10,
 def delete_docs(index: Index, doc_ids: list[int]) -> int:
     """Persist deletions (delete = hide-at-search; reinsert = delete +
     stream the new version via streaming.py — the reference's
-    delete+reinsert update model). Returns total deleted count."""
+    delete+reinsert update model). Returns total deleted count.
+
+    Append-only: each call adds one file and never rewrites or removes
+    an existing one, so another open handle that already listed the
+    deletes keeps reading them. Duplicates are harmless — every reader
+    dedupes via union1d / distinct / anti-join."""
     path = os.path.join(index.paths.root, "deletes")
     new = sorted({int(d) for d in doc_ids})
-    if index.deleted_count() <= DELETES_BROADCAST_BOUND:
-        existing = set(index.deleted_ids())
-        allids = sorted(existing | set(new))
-        (index.spark.createDataFrame([(d,) for d in allids], "doc_id long")
-         .coalesce(1).write.mode("overwrite").parquet(path))
-        index.invalidate_deletes()
-        return len(allids)
-    # at-scale path: append-only (duplicates are harmless — every reader
-    # dedupes via union1d / distinct / anti-join); never collect the table
     (index.spark.createDataFrame([(d,) for d in new], "doc_id long")
-     .write.mode("append").parquet(path))
+     .coalesce(1).write.mode("append").parquet(path))
     index.invalidate_deletes()
     return index.deleted_count()
 
@@ -1319,8 +1264,8 @@ def delete_by_query(index: Index, query: "str | Query",
     The match set is appended to the deletes relation AS A DATAFRAME —
     never collected to the driver, so a query matching billions of docs
     costs one distributed write; duplicate ids across calls are harmless
-    (every reader dedupes, same contract as the at-scale
-    :func:`delete_docs` path). Returns the total deleted count."""
+    (every reader dedupes, same contract as :func:`delete_docs`).
+    Returns the total deleted count."""
     m = matches(index, query, mode=mode).select("doc_id")
     path = os.path.join(index.paths.root, "deletes")
     m.write.mode("append").parquet(path)

@@ -333,6 +333,24 @@ def test_no_hit_results_keep_the_hit_schemas(built):
     assert out.count() == 0
 
 
+def test_highlight_passages_cover_multi_term_queries(built):
+    """highlight_passages plans like search(): a multi-term query's
+    expanded terms are highlighted. With every passage kept, each
+    winner's n_matches sum to its positions in search(highlight=True)."""
+    from sparklucene.query import Prefix, Wildcard
+    from sparklucene.search import highlight_passages
+
+    idx = built[0]
+    for q in (Prefix("merg"), Wildcard("merg*"), "merg*"):
+        pas = highlight_passages(idx, q, k=5, n_passages=10_000).toPandas()
+        hl = search(idx, q, k=5, mode="f64", highlight=True).collect()
+        want = {r["doc_id"]: sum(len(h["positions"]) for h in r["highlights"])
+                for r in hl}
+        assert len(want) == 5 and all(want.values()), q
+        got = pas.groupby("doc_id")["n_matches"].sum().to_dict()
+        assert got == want, q
+
+
 def test_workers_run_the_stat_keyed_zip_invalidation(spark, built):
     """After an engine job, a Python worker that imports the package runs
     ``sparklucene._zipstat.invalidate_caches`` as the zipimporter method

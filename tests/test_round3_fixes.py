@@ -150,7 +150,8 @@ def test_lock_with_dead_holder_pid_is_taken_over(spark, tmp_path_factory):
 
 
 # ---------------------------------------------------------------------------
-# deletes at scale: over-bound path == under-bound path, collect guarded
+# persisted deletes: every search path honours them, nothing collected;
+# delete_docs only appends
 # ---------------------------------------------------------------------------
 
 @pytest.fixture(scope="module")
@@ -170,8 +171,7 @@ def deletes_index(spark, tmp_path_factory):
     return dst, victims
 
 
-def test_deletes_cogroup_fallback_matches_broadcast(spark, deletes_index,
-                                                    monkeypatch):
+def test_deletes_cogroup_fallback_matches_broadcast(spark, deletes_index):
     from sparklucene import search as S
 
     dst, victims = deletes_index
@@ -187,8 +187,7 @@ def test_deletes_cogroup_fallback_matches_broadcast(spark, deletes_index,
               S.search(idx1, q, k=10, doc_filter=allow).collect()]
     assert base_f and not ({d for d, _ in base_f} & set(victims))
     assert all(d % 3 != 0 for d, _ in base_f)
-    # force every search path onto the distributed (> bound) shape
-    monkeypatch.setattr(S, "DELETES_BROADCAST_BOUND", 1)
+    # a fresh handle re-reads the persisted deletes
     idx2 = S.Index(spark, dst, cache=False)
     got = [(r["doc_id"], r["score"]) for r in
            S.search(idx2, q, k=10).collect()]
@@ -196,7 +195,7 @@ def test_deletes_cogroup_fallback_matches_broadcast(spark, deletes_index,
     got_f = [(r["doc_id"], r["score"]) for r in
              S.search(idx2, q, k=10, doc_filter=allow).collect()]
     assert got_f == base_f
-    # search_batch over the same over-bound index == serial search
+    # search_batch over the same deletes == serial search
     qs = {"o": q, "t": Term("vector"),
           "a": And((Term("table"), Term("scan")))}
     batch = S.search_batch(idx2, qs, k=10).toPandas()
@@ -209,9 +208,33 @@ def test_deletes_cogroup_fallback_matches_broadcast(spark, deletes_index,
     n_all = S.search(idx2, MatchAllDocs(), k=None).count()
     n_docs = idx2.docmeta().count()
     assert n_all == n_docs - len(victims)
-    # the driver-collect path refuses beyond the bound
-    with pytest.raises(RuntimeError, match="DELETES_BROADCAST_BOUND"):
-        S.Index(spark, dst, cache=False).deleted_ids()
+
+
+def test_delete_docs_keeps_other_open_handles_readable(spark,
+                                                       tmp_path_factory):
+    """delete_docs only appends: a second handle that listed the deletes
+    before another delete keeps answering (an overwrite would remove the
+    file it listed and abort its next query with FILE_NOT_EXIST)."""
+    from sparklucene import search as S
+    from sparklucene.driver_queries import index_for
+
+    dst = str(tmp_path_factory.mktemp("delhandles") / "index")
+    shutil.copytree(index_for(spark, SF).paths.root, dst)
+    a = S.Index(spark, dst, cache=False)
+    b = S.Index(spark, dst, cache=False)
+    q = Or((Term("merge"), Term("vector")))
+    hits = [int(r["doc_id"]) for r in S.search(a, q, k=6).collect()]
+    assert S.delete_docs(a, hits[:2]) == 2
+    first = {int(r["doc_id"]) for r in S.search(b, q, k=10).collect()}
+    assert not first & set(hits[:2])
+    assert S.delete_docs(a, hits[1:4]) == 4
+    assert S.delete_docs(a, hits[4:]) == 6
+    again = {int(r["doc_id"]) for r in S.search(b, q, k=10).collect()}
+    assert len(again) == 10 and not again & set(hits[:2])
+    fresh = S.Index(spark, dst, cache=False)
+    assert fresh.deleted_count() == 6
+    got = {int(r["doc_id"]) for r in S.search(fresh, q, k=10).collect()}
+    assert not got & set(hits)
 
 
 def _plan(df) -> str:
@@ -228,7 +251,6 @@ def test_scoring_plan_is_one_exchange_and_arrow_scorer(spark, deletes_index,
     dst, _ = deletes_index
     q = Or((Term("merge"), Term("vector")))
     plain = index_for(spark, SF)
-    monkeypatch.setattr(S, "DELETES_BROADCAST_BOUND", 1)
     # one range per task: a multi-way hash Exchange on this 8-range index
     monkeypatch.setattr(S, "_RANGES_PER_TASK", 1)
     deleted = S.Index(spark, dst, cache=False)
@@ -248,7 +270,7 @@ def test_scoring_plan_is_one_exchange_and_arrow_scorer(spark, deletes_index,
 
 def test_search_batch_matchall_and_cursors_equal_serial(spark):
     from sparklucene.driver_queries import index_for
-    from sparklucene.query import And, Phrase
+    from sparklucene.query import And, Phrase, Prefix, Wildcard
     from sparklucene.search import search, search_after, search_batch
 
     idx = index_for(spark, SF)
@@ -257,7 +279,12 @@ def test_search_batch_matchall_and_cursors_equal_serial(spark):
           "a": And((Term("table"), Term("scan"))),
           "p": Phrase(((0, "merge"), (1, "join"))),
           "ma": MatchAllDocs(),
-          "nma": Not(MatchAllDocs(), Term("vector"))}
+          "nma": Not(MatchAllDocs(), Term("vector")),
+          # planner cases: expansions, and absent terms that prune
+          "pre": Prefix("merg"),
+          "wc": Wildcard("j?in*"),
+          "a0": And((Term("merge"), Term("zzz_absent_term"))),
+          "o1": Or((Term("vector"), Term("zzz_absent_term")))}
     # page-2 cursors for two of them, from serial page 1
     afters = {}
     for n in ("t", "o"):
