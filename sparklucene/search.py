@@ -5,10 +5,10 @@ knowledge of QueryComponent.distributedProcess / TopDocs.merge) onto
 Catalyst:
 
   phase 0  parse + rewrite (driver, tiny AST)
-  phase 1  stats gather: termstats rows for the query terms (predicate
-           pushdown on the term-sorted Parquet), collected to the driver
-           and shipped inside the scorer closure — Lucene's
-           TermStates.build (phases 0-1 are :func:`_plan`)
+  phase 1  stats gather: df/cf for the query terms by binary search in
+           the handle's driver-held dictionary (no Spark job), shipped
+           inside the scorer closure — Lucene's TermStates.build
+           (phases 0-1 are :func:`_plan`)
   phase 2  scatter: postings rows for the query terms (term-pruned scan;
            norm bytes are inlined in the cells, so no docmeta join) are
            grouped by doc-range; each task runs the vectorized
@@ -29,9 +29,11 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+import bisect
 import dataclasses
 import os
 import threading
@@ -75,19 +77,80 @@ def _dir_mtime(path: str) -> int:
     return best
 
 
+class _TermDictionary:
+    """The termstats ``(term, df, cf)`` as one term-sorted Arrow table on
+    the driver — Lucene's in-heap terms index over the sorted term file.
+    Lookups binary-search the raw UTF-8 bytes of the term column (byte
+    order is Spark's string order and Python's code-point order), so a
+    term costs O(log vocab) slices and no Spark job."""
+
+    def __init__(self, table: pa.Table):
+        table = table.drop_null()
+        self.terms = table["term"].combine_chunks()
+        # the build writes range-partitioned, sorted files, so the
+        # sort is normally skipped (a 10^6-term check is ~10 ms)
+        ordered = pc.less_equal(self.terms[:-1], self.terms[1:])
+        if not pc.all(ordered).as_py():
+            table = table.sort_by("term")
+            self.terms = table["term"].combine_chunks()
+        self.df = table["df"].combine_chunks().to_numpy(zero_copy_only=False)
+        self.cf = table["cf"].combine_chunks().to_numpy(zero_copy_only=False)
+        width = (np.int64 if pa.types.is_large_string(self.terms.type)
+                 else np.int32)
+        _, obuf, dbuf = self.terms.buffers()
+        n, o = len(self.terms), self.terms.offset
+        self._off = np.frombuffer(obuf, width)[o:o + n + 1] if n else ()
+        self._data = dbuf.to_pybytes() if dbuf is not None else b""
+        self._rows = range(n)
+
+    def _key(self, i: int, width: int | None = None) -> bytes:
+        lo, hi = self._off[i], self._off[i + 1]
+        return self._data[lo:hi if width is None else min(hi, lo + width)]
+
+    def find(self, term: str) -> int | None:
+        """Row of ``term``, or None when it is not in the dictionary."""
+        b = term.encode()
+        i = bisect.bisect_left(self._rows, b, key=self._key)
+        return i if i < len(self._rows) and self._key(i) == b else None
+
+    def prefix(self, p: str) -> tuple[int, int]:
+        """Row span of the terms starting with ``p`` (truncation to the
+        prefix's length keeps the order, so two bisects find it)."""
+        b = p.encode()
+        key = lambda i: self._key(i, len(b))  # noqa: E731
+        return (bisect.bisect_left(self._rows, b, key=key),
+                bisect.bisect_right(self._rows, b, key=key))
+
+    def bound(self, t: str, upper: bool, inclusive: bool) -> int:
+        """Span edge for a range bound: the first row above ``t`` for an
+        inclusive upper / exclusive lower bound, else the first row at
+        or above it."""
+        b = t.encode()
+        side = (bisect.bisect_right if upper == inclusive
+                else bisect.bisect_left)
+        return side(self._rows, b, key=self._key)
+
+    def slice(self, lo: int, hi: int) -> pa.Array:
+        """The terms of rows ``[lo, hi)`` (empty when inverted)."""
+        return self.terms.slice(lo, max(0, hi - lo))
+
+
 class Index:
     """Handle to a built index directory (SURVEY.md §1.2 layout).
 
     ``cache=True`` persists the postings/termstats DataFrames across
     queries (Solr's searcher-held segment readers analog) — repeated
-    queries skip the parquet scan entirely.
+    queries skip the parquet scan entirely. Query planning reads the
+    term dictionary instead: the termstats held term-sorted on the
+    driver (read once per handle, lazily), so term stats and most
+    multi-term expansions run no Spark job.
     """
 
     @staticmethod
     def shared(spark: SparkSession, index_dir: str) -> "Index":
         """A generation-aware cached handle (Solr's core container keeps
         its searcher open between commits; reopening per request throws
-        away the persisted postings cache and the term-stats memo).
+        away the persisted postings cache and the term dictionary).
 
         The cache key includes the index GENERATION — mtimes of
         stats.json (rewritten by every merge/build) and the deletes dir
@@ -127,10 +190,10 @@ class Index:
         self._cache = cache
         self._postings: DataFrame | None = None
         self._termstats: DataFrame | None = None
-        self._tstats_memo: dict[str, TermStats | None] = {}
+        self._dict: _TermDictionary | None = None
         self._deletes: DataFrame | None = None
         self._deleted_count: int | None = None
-        self._expand_memo: dict[tuple, list[str]] = {}
+        self._expand_memo: dict[tuple, list[str]] = {}  # Regexp / Fuzzy
         # lazy-init guard: shared handles are hit from fan-out THREADS;
         # without it two racing threads both persist() and one cached
         # DataFrame leaks in executor storage for the session lifetime
@@ -185,26 +248,53 @@ class Index:
         self._deletes = None
         self._deleted_count = None
 
+    def _dictionary(self) -> _TermDictionary:
+        """The driver-held term dictionary, read with pyarrow from
+        ``paths.termstats`` on first use (no Spark job) and kept for the
+        handle's lifetime — a handle sees one index generation."""
+        if self._dict is None:
+            with self._init_lock:
+                if self._dict is None:
+                    self._dict = _TermDictionary(pq.read_table(
+                        self.paths.termstats, columns=["term", "df", "cf"]))
+        return self._dict
+
     def expand_terms(self, q: MultiTermQuery,
                      max_expansions: int = 1024) -> list[str]:
-        """Expand a multi-term query against the termstats DICTIONARY
-        (never the postings table — the dictionary is ~n_ranges times
-        smaller). Prefix/range predicates push down to the term-sorted
-        Parquet (FST-seek analog); the expansion is capped like Lucene's
-        maxClauseCount and memoized per handle (repeated
-        prefix/wildcard/fuzzy queries pay no Spark action)."""
-        import re as _re
-
-        memo_key = (repr(q), max_expansions)
-        hit = self._expand_memo.get(memo_key)
-        if hit is not None:
-            return hit
-
-        term = F.col("term")
+        """Expand a multi-term query against the term DICTIONARY (never
+        the postings table) -> the sorted matching terms. Prefix,
+        Wildcard, TermRange and TermInSet are a slice of the driver-held
+        sorted dictionary (a Wildcard is the slice of its literal prefix,
+        filtered by ``match_like``) and run no Spark job. Regexp and
+        Fuzzy keep their JVM predicates (Java regex dialect, Spark's
+        ``levenshtein``, the Damerau ``pandas_udf``) over the termstats
+        table, memoized per handle. The expansion is capped like
+        Lucene's maxClauseCount."""
         fk = field_key(q.field, "")  # "" for default field, "name\x1f" else
+        if isinstance(q, (Regexp, Fuzzy)):
+            terms = self._expand_jvm(q, fk, max_expansions)
+        else:
+            terms = self._expand_sorted(q, fk)
+            if not fk:
+                # default-field expansion must not sweep up other fields'
+                # qualified keys (they sort between ASCII letters)
+                terms = terms.filter(pc.invert(
+                    pc.match_substring(terms, FIELD_SEP)))
+            terms = terms.to_pylist() if len(terms) <= max_expansions else None
+        if terms is None:
+            raise ValueError(
+                f"{type(q).__name__} expands to more than {max_expansions} "
+                "terms (maxClauseCount analog) — narrow the pattern or "
+                "raise max_expansions")
+        return terms
+
+    def _expand_sorted(self, q: MultiTermQuery, fk: str) -> pa.Array:
+        """Prefix / Wildcard / TermRange / TermInSet as rows of the
+        sorted dictionary (field prefix included, in term order)."""
+        d = self._dictionary()
         if isinstance(q, Prefix):
-            pred = term.startswith(fk + q.prefix)
-        elif isinstance(q, Wildcard):
+            return d.slice(*d.prefix(fk + q.prefix))
+        if isinstance(q, Wildcard):
             pat = []
             for ch in fk + q.pattern:
                 if ch == "*":
@@ -215,15 +305,37 @@ class Index:
                     pat.append("\\" + ch)
                 else:
                     pat.append(ch)
-            pred = term.like("".join(pat))
-            # literal prefix before the first wildcard narrows the scan
+            # the literal prefix before the first wildcard narrows the scan
             lit_prefix = (fk + q.pattern).split("*")[0].split("?")[0]
-            if lit_prefix:
-                pred = term.startswith(lit_prefix) & pred
-        elif isinstance(q, Regexp):
+            cand = d.slice(*d.prefix(lit_prefix))
+            return cand.filter(pc.match_like(cand, "".join(pat)))
+        if isinstance(q, TermRange):
+            lo, hi = d.prefix(fk) if fk else (0, len(d.terms))
+            if q.lo is not None:
+                lo = max(lo, d.bound(fk + q.lo, False, q.include_lo))
+            if q.hi is not None:
+                hi = min(hi, d.bound(fk + q.hi, True, q.include_hi))
+            return d.slice(lo, hi)
+        if isinstance(q, TermInSet):
+            rows = {d.find(fk + t) for t in q.in_terms} - {None}
+            return d.terms.take(pa.array(sorted(rows), pa.int64()))
+        raise TypeError(f"unknown multi-term query {type(q)}")
+
+    def _expand_jvm(self, q: Regexp | Fuzzy, fk: str,
+                    max_expansions: int) -> list[str] | None:
+        """Regexp / Fuzzy expansion as a Spark job over the termstats
+        table (memoized per handle); None when it overflows."""
+        import re as _re
+
+        memo_key = (repr(q), max_expansions)
+        hit = self._expand_memo.get(memo_key)
+        if hit is not None:
+            return hit
+        term = F.col("term")
+        if isinstance(q, Regexp):
             # RegexpQuery anchors to the FULL term (Lucene semantics)
             pred = term.rlike(f"^{_re.escape(fk)}(?:{q.pattern})$")
-        elif isinstance(q, Fuzzy):
+        else:
             body = term.substr(F.lit(len(fk) + 1), F.length(term)) if fk \
                 else term
             pl = int(q.prefix_length or 0)
@@ -246,25 +358,10 @@ class Index:
                 pred = term.startswith(fk + q.term[:pl]) & pred
             elif fk:
                 pred = term.startswith(fk) & pred
-        elif isinstance(q, TermRange):
-            pred = term.startswith(fk) if fk else F.lit(True)
-            if q.lo is not None:
-                lo = fk + q.lo
-                pred = pred & (term >= lo if q.include_lo else term > lo)
-            if q.hi is not None:
-                hi = fk + q.hi
-                pred = pred & (term <= hi if q.include_hi else term < hi)
-        elif isinstance(q, TermInSet):
-            pred = term.isin([fk + t for t in q.in_terms])
-        else:  # pragma: no cover
-            raise TypeError(f"unknown multi-term query {type(q)}")
         if not fk:
-            # default-field expansion must not sweep up other fields'
-            # qualified keys (they sort between ASCII letters)
             pred = pred & ~term.contains(FIELD_SEP)
         base = self.termstats().select("term").filter(pred)
         if isinstance(q, Fuzzy) and q.transpositions:
-            import pandas as pd
             from pyspark.sql.functions import pandas_udf
 
             pl = int(q.prefix_length or 0)
@@ -278,28 +375,22 @@ class Index:
             base = base.filter(_dam(F.col("term")) <= k)
         rows = base.limit(max_expansions + 1).collect()
         if len(rows) > max_expansions:
-            raise ValueError(
-                f"{type(q).__name__} expands to more than {max_expansions} "
-                "terms (maxClauseCount analog) — narrow the pattern or "
-                "raise max_expansions")
+            return None
         out = sorted(r["term"] for r in rows)
         self._expand_memo[memo_key] = out
         return out
 
     def term_stats_for(self, terms: list[str]) -> dict[str, TermStats]:
-        """df/cf per term (Lucene TermStates.build). Memoized per handle —
-        repeated queries on overlapping vocabularies pay no Spark action
-        (misses are remembered too, as None)."""
-        missing = [t for t in terms if t not in self._tstats_memo]
-        if missing:
-            rows = (self.termstats()
-                    .filter(F.col("term").isin(missing))
-                    .collect())
-            found = {r["term"]: TermStats(df=r["df"], cf=r["cf"]) for r in rows}
-            for t in missing:
-                self._tstats_memo[t] = found.get(t)
-        return {t: s for t in terms
-                if (s := self._tstats_memo.get(t)) is not None}
+        """df/cf per term (Lucene TermStates.build): a binary search per
+        term in the driver-held dictionary, no Spark job. Terms absent
+        from the dictionary are left out of the result."""
+        d = self._dictionary()
+        out: dict[str, TermStats] = {}
+        for t in terms:
+            i = d.find(t)
+            if i is not None:
+                out[t] = TermStats(df=int(d.df[i]), cf=int(d.cf[i]))
+        return out
 
 
 #: typed empty highlights literal (schema-stable across no-hit paths)
@@ -792,8 +883,9 @@ def highlight_passages(index: Index, query: "str | Query", k: int = 10,
     """
     from sparklucene.bm25 import idf as _bm25_idf
     topk = search(index, query, k=k, mode=mode)
-    # the search above planned the same query: expansions and term stats
-    # are memoized on the handle, so this re-plan runs no Spark job
+    # the search above planned the same query: term stats and expansions
+    # come from the handle's dictionary (Regexp / Fuzzy from its memo),
+    # so this re-plan runs no Spark job
     live, _, gstats = _plan(index, {"q": query})
     hterms = sorted({t for q in live.values() for t in q.terms()
                      if FIELD_SEP not in t})
@@ -920,9 +1012,9 @@ def common_terms_query(index: Index, terms: list[str],
       * no high terms -> And(low);  no low terms -> Or(high, msm=1)
         (Lucene falls back to plain boolean over the one group).
 
-    Plan shape: one memoized dictionary lookup per distinct term
-    (k-bounded collect); the resulting query runs the normal MAXSCORE
-    path — no new scorer machinery.
+    Plan shape: one binary search in the driver-held dictionary per
+    distinct term (no Spark job); the resulting query runs the normal
+    MAXSCORE path — no new scorer machinery.
     """
     uniq = sorted(set(terms))
     if not uniq:
@@ -1031,9 +1123,9 @@ def complex_phrase(index: Index, slots, field: str | None = None,
     empty-rewrite behavior. Alternatives are sorted per slot so the
     summed-idf phrase weight is order-pinned.
 
-    Scale shape: slot expansion is a dictionary-pushdown scan (memoized
-    per handle); the search itself runs the MultiPhrase positional plan —
-    postings touched only for the expanded terms.
+    Scale shape: slot expansion reads the term dictionary (see
+    ``Index.expand_terms``); the search itself runs the MultiPhrase
+    positional plan — postings touched only for the expanded terms.
     """
     from sparklucene.query import (MatchNoDocs, MultiPhrase,
                                    MultiTermQuery as MTQ)
@@ -1085,8 +1177,8 @@ def span_multi_term(index: Index, q, field: str | None = None,
     over the expansions (pre-order dedup) — the analog of Lucene scoring
     the rewritten SpanOr through SpanWeight.
 
-    Scale shape: expansion is a dictionary-pushdown scan capped at
-    ``max_expansions`` (maxClauseCount analog, memoized per handle);
+    Scale shape: expansion reads the term dictionary (see
+    ``Index.expand_terms``), capped at ``max_expansions``;
     postings are touched only for the expanded terms, inside the
     ordinary per-range span matcher — no extra shuffle.
     """

@@ -282,8 +282,10 @@ def test_percentile_sketch_label_rounding(spark):
 
 def test_shared_handle_generation_key_uses_ns_and_size(spark, tmp_path):
     """A rebuild that lands inside one coarse-mtime tick still flips
-    Index.shared's generation key (mtime_ns + stats.json size)."""
+    Index.shared's generation key (mtime_ns + stats.json size). Each
+    handle keeps the term dictionary of its own generation."""
     from sparklucene.build import build_index
+    from sparklucene.query import Prefix
     from sparklucene.search import Index
 
     d = str(tmp_path / "genkey-idx")
@@ -291,6 +293,9 @@ def test_shared_handle_generation_key_uses_ns_and_size(spark, tmp_path):
         [(0, "alpha beta"), (1, "beta gamma")], "doc_id long, content string")
     build_index(spark, corpus, d, drange_size=8)
     h1 = Index.shared(spark, d)
+    old = {t: (s.df, s.cf)
+           for t, s in h1.term_stats_for(["gamma", "delta"]).items()}
+    assert old == {"gamma": (1, 1)}
     # rebuild with one more doc; force the stats.json mtime back to the
     # FIRST build's second-resolution timestamp to simulate a
     # same-tick rebuild on a coarse-mtime filesystem
@@ -301,6 +306,10 @@ def test_shared_handle_generation_key_uses_ns_and_size(spark, tmp_path):
     h2 = Index.shared(spark, d)
     assert h2 is not h1  # generation changed -> fresh handle
     assert h2.stats["n_docs"] == 3
+    assert {t: (s.df, s.cf) for t, s in
+            h1.term_stats_for(["gamma", "delta"]).items()} == old
+    assert h2.term_stats_for(["delta"])["delta"].df == 1
+    assert h2.expand_terms(Prefix("del")) == ["delta"]
 
 
 # -- 11. pipeline-stack review fixes ------------------------------------
