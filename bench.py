@@ -220,8 +220,8 @@ def run_wand_ablation(spark, index_dir: str) -> dict:
     import pyarrow.parquet as pq
 
     from sparklucene.build import IndexPaths, load_stats
-    from sparklucene.scorer import (GlobalStats, RangeCell, RangeScorer,
-                                    TermStats)
+    from sparklucene.scorer import GlobalStats, RangeScorer, TermStats
+    from sparklucene.search import _cell_maker
 
     paths = IndexPaths(index_dir)
     st = load_stats(index_dir)
@@ -233,7 +233,7 @@ def run_wand_ablation(spark, index_dir: str) -> dict:
         q = QUERIES[name]
         terms = set(q.terms()) | set(q.neg_terms())
         mask = np.isin(np.asarray(tbl["term"]), sorted(terms))
-        sub = tbl.filter(mask).to_pylist()
+        sub = tbl.filter(mask)
         tstats = {t: TermStats(s.df, s.cf)
                   for t, s in idx.term_stats_for(sorted(terms)).items()}
         gstats = GlobalStats(int(st["doc_count"]), int(st["sum_dl"]), tstats)
@@ -241,13 +241,11 @@ def run_wand_ablation(spark, index_dir: str) -> dict:
         for prune in (True, False):
             scored = total = 0
             by_range: dict[int, dict] = {}
-            for r in sub:
-                by_range.setdefault(r["drange"], {})[r["term"]] = RangeCell(
-                    r["doc_bytes"], r["tf_bytes"], r["norm_bytes"],
-                    np.asarray(r["block_last"], dtype=np.int64),
-                    np.asarray(r["block_max_tf"], dtype=np.int32),
-                    np.frombuffer(r["block_min_norm"], dtype=np.uint8),
-                    r["pos_bytes"] or b"")
+            for batch in sub.to_batches():
+                make = _cell_maker(batch)
+                for r, dr in enumerate(batch.column("drange").to_pylist()):
+                    term, cell = make(r)
+                    by_range.setdefault(dr, {})[term] = cell
             for cells in by_range.values():
                 sc = RangeScorer(cells, gstats, prune=prune)
                 sc.topk(q, 10)

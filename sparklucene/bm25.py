@@ -26,6 +26,7 @@ Two precision modes (SURVEY.md §4.3 + oracle-parity note):
 
 from __future__ import annotations
 
+import functools
 import math
 
 import numpy as np
@@ -46,12 +47,18 @@ def avgdl_f32(sum_ttf: int, doc_count: int) -> np.float32:
     return np.float32(sum_ttf / float(doc_count))
 
 
+@functools.lru_cache(maxsize=64)
 def norm_cache_f32(avgdl: np.float32, k1: float = K1, b: float = B) -> np.ndarray:
-    """Lucene's per-scorer float[256] cache, float32 arithmetic per-op."""
+    """Lucene's per-scorer float[256] cache, float32 arithmetic per-op.
+    Memoized per (avgdl, k1, b) — a scorer asks for it on every scoring
+    call — so the table is returned read-only."""
     k1f = np.float32(k1)
     bf = np.float32(b)
     one = np.float32(1.0)
-    return (k1f * ((one - bf) + bf * LENGTH_TABLE_F32 / np.float32(avgdl))).astype(np.float32)
+    cache = (k1f * ((one - bf) + bf * LENGTH_TABLE_F32
+                    / np.float32(avgdl))).astype(np.float32)
+    cache.setflags(write=False)
+    return cache
 
 
 def score_lucene8(tfs: np.ndarray, norm_bytes: np.ndarray, df: int,

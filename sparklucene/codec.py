@@ -12,6 +12,12 @@ Reimplements from public knowledge of Apache Lucene 8.x:
 All encode/decode paths are vectorized numpy — no per-element Python in
 the hot loop. Cells are ``bytes`` so posting lists travel through Spark
 as packed binary columns (shuffle volume ~ index size, SURVEY.md §7.4.5).
+
+Decoding works per value, not per byte: a buffer without a continuation
+bit (every tf stream, most dense doc-gap and position streams) is one
+widening copy; otherwise each value starts from its last byte and the
+values longer than j bytes OR in byte ``end - j``, one vectorized round
+per extra byte width (see :func:`vbyte_decode`).
 """
 
 from __future__ import annotations
@@ -49,22 +55,35 @@ def vbyte_encode(values: np.ndarray) -> bytes:
     return out.tobytes()
 
 
-def vbyte_decode(buf: bytes) -> np.ndarray:
-    """Vectorized VByte decode -> uint64 array."""
+def vbyte_decode(buf: bytes | memoryview) -> np.ndarray:
+    """Vectorized VByte decode -> uint64 array, by value rather than by
+    byte. A buffer with no continuation bit set holds one byte per value
+    and decodes as a plain widening copy (every tf stream, most dense
+    doc-gap streams). Otherwise each value's last byte (continuation bit
+    clear) seeds it, and round j = 1 .. longest-1 shifts the values
+    longer than j bytes left by 7 and ORs in their byte ``end - j``, so
+    the rounds shrink to the long values. A buffer that ends mid-value
+    (its last byte has the continuation bit) is corrupt and raises
+    ``ValueError``, which CheckIndex reports as a decode error."""
     raw = np.frombuffer(buf, dtype=np.uint8)
-    if raw.size == 0:
-        return np.empty(0, dtype=np.uint64)
-    is_last = (raw & 0x80) == 0
-    ends = np.flatnonzero(is_last)
-    starts = np.concatenate(([0], ends[:-1] + 1))
-    payload = (raw & 0x7F).astype(np.uint64)
-    # byte position within its value
-    pos_in_val = np.arange(raw.size, dtype=np.int64)
-    pos_in_val -= np.repeat(starts, ends - starts + 1)
-    shifted = payload << (np.uint64(7) * pos_in_val.astype(np.uint64))
-    # segment sum via cumsum difference
-    cs = np.concatenate(([np.uint64(0)], np.cumsum(shifted, dtype=np.uint64)))
-    return cs[ends + 1] - cs[starts]
+    if raw.size == 0 or raw.max() < 0x80:
+        return raw.astype(np.uint64)
+    if raw[-1] >= 0x80:
+        raise ValueError("truncated VByte stream: the last byte has the "
+                         "continuation bit set")
+    ends = np.flatnonzero(raw < 0x80)
+    lens = np.empty_like(ends)  # bytes per value
+    lens[:1] = ends[:1] + 1
+    np.subtract(ends[1:], ends[:-1], out=lens[1:])
+    out = raw[ends].astype(np.uint64)
+    j = 1
+    sel = np.flatnonzero(lens > j)
+    while sel.size:
+        out[sel] = ((out[sel] << np.uint64(7))
+                    | (raw[ends[sel] - j] & 0x7F).astype(np.uint64))
+        j += 1
+        sel = sel[lens[sel] > j]
+    return out
 
 
 def delta_encode(sorted_values: np.ndarray) -> np.ndarray:
@@ -234,18 +253,20 @@ def encode_postings_batch(starts: np.ndarray, docs: np.ndarray, tfs: np.ndarray,
 
 
 def decode_doc_ids(doc_bytes: bytes) -> np.ndarray:
-    return delta_decode(vbyte_decode(doc_bytes)).astype(np.int64)
+    # an int64 cumsum over the uint64 gaps wraps like the uint64 one, so
+    # the ids come out bit-equal to a uint64 cumsum cast, with one pass
+    return np.cumsum(vbyte_decode(doc_bytes).view(np.int64))
 
 
 def decode_tfs(tf_bytes: bytes) -> np.ndarray:
-    return vbyte_decode(tf_bytes).astype(np.int64)
+    return vbyte_decode(tf_bytes).view(np.int64)
 
 
 def decode_positions(pos_bytes: bytes, tfs: np.ndarray) -> np.ndarray:
     """Flat absolute positions; per-posting segments of lengths ``tfs``
     (deltas reset at each posting's first position). Vectorized segmented
     cumsum — no per-doc Python loop."""
-    gaps = vbyte_decode(pos_bytes).astype(np.int64)
+    gaps = vbyte_decode(pos_bytes).view(np.int64)
     if gaps.size == 0:
         return gaps
     t = np.asarray(tfs, dtype=np.int64)

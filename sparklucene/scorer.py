@@ -11,13 +11,18 @@ Pruning design (SURVEY.md §7.4.3 — block-at-a-time, score-safe):
     (block max_tf, block min_norm), which dominates every true score in
     the block under monotone float rounding — pruning can never change
     the top-k set (asserted exhaustive-vs-pruned in tests);
-  * Term: process 128-doc blocks in descending upper-bound order,
-    maintain the running k-heap threshold θ, stop when ub <= θ;
+  * Term: visit 128-doc blocks in descending upper-bound order, in a
+    few vectorized rounds that grow 4x (the first holds k hits). After
+    each round θ is the kth best score and only hits >= θ are kept (a
+    buffer of about k), and the next round takes only blocks whose
+    bound is >= θ — the rest are skipped with one searchsorted;
   * Or (sum of SHOULD): MAXSCORE — seed θ by fully scoring the
     highest-upper-bound term, split terms into essential/non-essential by
     ascending prefix-sum of term upper bounds vs θ, score essential terms
     fully, then probe non-essential terms only for surviving candidates
-    (decoding only the blocks that can contain them);
+    (gathering only the blocks that can contain them). With no
+    non-essential term every term is already scored, and the result is
+    the plain union sum;
   * And: df-ascending intersection (ConjunctionDISI's cost ordering) with
     block-level skip (searchsorted on block last_doc) before decode;
   * minimumShouldMatch > 1 disables θ seeding (a single-term kth-best is
@@ -28,6 +33,14 @@ Pruning design (SURVEY.md §7.4.3 — block-at-a-time, score-safe):
 Scores: float32 per (term, doc), summed per doc in a float64 accumulator
 in sorted-term order, cast to float32 — both precision modes (lucene8 /
 f64) share this combiner, matching the brute-force oracle bit-for-bit.
+When the summed docs are dense (span <= 4x the posting count, always so
+inside a dense doc range) the accumulator is an array over the doc-id
+span, so no sort-based union is built; each doc still adds its parts in
+the same order, so the sums are the same bits.
+
+Top-k selection is threshold-first: the kth best score is found before
+any sort (a floor from 128-score chunk maxima, then ``np.partition``),
+and only hits at or above it — ties included — are lexsorted.
 """
 
 from __future__ import annotations
@@ -192,14 +205,21 @@ class RangeScorer:
                          np.asarray(cell.block_max_tf, dtype=np.int64),
                          np.asarray(cell.block_min_norm, dtype=np.uint8), N, S)
 
+    def _live_mask(self, docs: np.ndarray) -> np.ndarray | None:
+        """Boolean keep-mask of ``docs`` (sorted, unique) under the
+        live-docs mask (deletions, filter complement and MUST_NOT
+        matches); None when nothing is masked."""
+        if self._neg_mask_docs is None or not self._neg_mask_docs.size:
+            return None
+        return ~np.isin(docs, self._neg_mask_docs, assume_unique=True)
+
     def _live(self, docs: np.ndarray, *cols: np.ndarray
               ) -> tuple[np.ndarray, ...]:
         """``docs`` (sorted, unique) and its aligned ``cols`` without the
-        docs of the live-docs mask (deletions, filter complement and
-        MUST_NOT matches)."""
-        if self._neg_mask_docs is None or not self._neg_mask_docs.size:
+        docs of the live-docs mask."""
+        keep = self._live_mask(docs)
+        if keep is None:
             return (docs, *cols)
-        keep = ~np.isin(docs, self._neg_mask_docs, assume_unique=True)
         return (docs[keep], *(c[keep] for c in cols))
 
     def _filtered(self, term: str) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
@@ -340,45 +360,55 @@ class RangeScorer:
         cell = self.cells.get(term)
         if cell is None:
             return np.empty(0, np.int64), np.empty(0, np.float32)
-        docs, tfs, norms = self._filtered(term)
-        if docs.size == 0:
-            return docs, np.empty(0, np.float32)
-        if not self.prune or docs.size <= k:
+        cols = (*cell.decode(), cell.norms())
+        live = self._live_mask(cols[0])
+        n_live = cols[0].size if live is None else int(live.sum())
+        if n_live == 0:
+            return np.empty(0, np.int64), np.empty(0, np.float32)
+        if not self.prune or n_live <= k or k < 1:
+            docs, tfs, norms = cols if live is None else (c[live] for c in cols)
             return self._cursor_mask(docs, self._score_arrays(term, tfs, norms))
-        # block-at-a-time with descending-ub order and running θ; under a
-        # cursor, θ is the kth best among QUALIFIED hits only (collecting
-        # unqualified scores into θ would over-prune lower-scoring blocks
-        # that still hold page-2 docs). Deletions mask per block BEFORE
-        # collection — removing candidates never invalidates a block's
-        # upper bound, so pruning stays exact under deletes (Lucene's
-        # live-docs-during-collection behavior).
-        alldocs, alltfs = cell.decode()
-        allnorms = cell.norms()
+        # blocks in descending-bound order, scored in rounds that grow 4x,
+        # starting with enough blocks to hold k hits. θ is the kth best
+        # score so far, and only hits scoring >= θ are kept, so the kept
+        # set stays about k long and a round costs O(k + round). The
+        # bounds are sorted, so the blocks still worth scoring are a
+        # prefix of the rest: those with bound >= θ (strict skip: a
+        # bound or a score that ties θ can still win the doc-id
+        # tie-break). Under a cursor, θ is over QUALIFIED hits only
+        # (unqualified scores would over-prune blocks that hold page-2
+        # docs); deletions mask postings before collection, which never
+        # invalidates a block's bound.
         ubs = self._block_ubs(term, cell)
         order = np.argsort(-ubs.astype(np.float64), kind="stable")
-        out_docs: list[np.ndarray] = []
-        out_scores: list[np.ndarray] = []
-        theta = -np.inf
-        n_collected = 0
-        # map original positions: block b covers alldocs[b*128:(b+1)*128]
-        for b in order:
-            # strict <: a block whose ub ties θ can still hold a doc that
-            # wins the (score, doc_id asc) tie-break — never skip it
-            if n_collected >= k and ubs[b] < theta:
-                self.metrics.blocks_skipped += 1
-                continue
-            sl = slice(b * BLOCK_SIZE, (b + 1) * BLOCK_SIZE)
-            bd, bt, bn = self._live(alldocs[sl], alltfs[sl], allnorms[sl])
+        neg_ubs = -ubs[order]  # ascending
+        if live is not None:
+            cols = (*cols, live)
+        docs, scores = np.empty(0, np.int64), np.empty(0, np.float32)
+        theta = None
+        pos, step = 0, -(-k // BLOCK_SIZE)
+        while pos < order.size:
+            stop = order.size if theta is None else int(
+                np.searchsorted(neg_ubs, -theta, side="right"))
+            if stop <= pos:
+                break
+            blocks = order[pos:min(stop, pos + step)]
+            bd, bt, bn, *bl = _block_rows(cols, blocks)
+            if bl:
+                bd, bt, bn = bd[bl[0]], bt[bl[0]], bn[bl[0]]
             bd, s = self._cursor_mask(bd, self._score_arrays(term, bt, bn))
-            out_docs.append(bd)
-            out_scores.append(s)
-            n_collected += bd.size
-            if n_collected >= k:
-                allsc = np.concatenate(out_scores)
-                theta = np.partition(allsc, allsc.size - k)[allsc.size - k]
-        if not out_docs:
-            return np.empty(0, np.int64), np.empty(0, np.float32)
-        return np.concatenate(out_docs), np.concatenate(out_scores)
+            if theta is not None:
+                keep = s >= theta
+                bd, s = bd[keep], s[keep]
+            docs, scores = np.concatenate((docs, bd)), np.concatenate((scores, s))
+            if scores.size >= k:
+                theta = np.partition(scores, scores.size - k)[scores.size - k]
+                keep = scores >= theta
+                docs, scores = docs[keep], scores[keep]
+            pos += blocks.size
+            step *= 4
+        self.metrics.blocks_skipped += int(order.size - pos)
+        return docs, scores
 
     # ---- positional matchers: one front end ----------------------------
 
@@ -929,8 +959,7 @@ class RangeScorer:
         sdocs, sscores = self._term_scores(seed)
         theta = 0.0
         if sdocs.size >= k:
-            theta = float(np.partition(sscores.astype(np.float64),
-                                       sscores.size - k)[sscores.size - k])
+            theta = float(_take_topk(sdocs, sscores, k)[1][k - 1])
         # strict <: prefix == θ can still tie into the top-k on doc_id
         prefix = np.cumsum([term_ub[t] for t in by_ub])
         n_noness = int(np.searchsorted(prefix, theta, side="left"))
@@ -942,6 +971,10 @@ class RangeScorer:
         acc: dict[str, tuple[np.ndarray, np.ndarray]] = {seed: (sdocs, sscores)}
         for t in sorted(essential - {seed}):
             acc[t] = self._term_scores(t)
+        if not non_essential:
+            # every term is scored in full: the union is the exhaustive
+            # sum (same order, same bits), with no candidate pass
+            return _union_sum([acc[t] for t in terms], 1)
         cand = np.unique(np.concatenate([d for d, _ in acc.values()])) \
             if acc else np.empty(0, np.int64)
         partial = np.zeros(cand.size, dtype=np.float64)
@@ -968,8 +1001,8 @@ class RangeScorer:
             d, s = acc.get(t, probe_scores.get(t))
             mask = np.isin(d, cand, assume_unique=True)
             d2, s2 = d[mask], s[mask]
-            idx = np.searchsorted(cand, d2)
-            np.add.at(total, idx, s2.astype(np.float64))
+            # a term's docs are unique, so an indexed += adds each once
+            total[np.searchsorted(cand, d2)] += s2.astype(np.float64)
         return cand, total.astype(np.float32)
 
     def _or_generic(self, q: Or) -> tuple[np.ndarray, np.ndarray]:
@@ -982,21 +1015,16 @@ class RangeScorer:
 
     def _probe(self, term: str, candidates: np.ndarray
                ) -> tuple[np.ndarray, np.ndarray]:
-        """Scores of ``term`` restricted to candidate docs, decoding only
-        blocks that can contain them (skip-list analog: searchsorted on
-        block last_doc)."""
+        """Scores of ``term`` restricted to candidate docs, gathering and
+        scoring only the blocks that can contain them (skip-list analog:
+        searchsorted on block last_doc)."""
         cell = self.cells.get(term)
         if cell is None or candidates.size == 0:
             return np.empty(0, np.int64), np.empty(0, np.float32)
         need = np.unique(np.searchsorted(cell.block_last, candidates))
         need = need[need < cell.block_last.size]
         self.metrics.blocks_skipped += int(cell.block_last.size - need.size)
-        docs, tfs = cell.decode()
-        norms = cell.norms()
-        keep = np.zeros(docs.size, dtype=bool)
-        for b in need:
-            keep[b * BLOCK_SIZE:(b + 1) * BLOCK_SIZE] = True
-        d, t, nb = docs[keep], tfs[keep], norms[keep]
+        d, t, nb = _block_rows((*cell.decode(), cell.norms()), need)
         m = np.isin(d, candidates, assume_unique=True)
         d, t, nb = self._live(d[m], t[m], nb[m])
         if d.size == 0:
@@ -1004,13 +1032,57 @@ class RangeScorer:
         return d, self._score_arrays(term, t, nb)
 
 
+def _block_rows(cols: tuple[np.ndarray, ...], blocks: np.ndarray
+                ) -> list[np.ndarray]:
+    """The postings of ``blocks`` (128-posting block numbers) in each of
+    the aligned ``cols``, block by block. Complete blocks are rows of a
+    zero-copy (blocks, 128) view, so a gather copies whole rows; the
+    partial last block, when asked for, is appended as a slice."""
+    n = cols[0].size
+    full = n // BLOCK_SIZE
+    inner = blocks[blocks < full]
+    out = [c[:full * BLOCK_SIZE].reshape(full, BLOCK_SIZE)
+           .take(inner, axis=0).ravel() for c in cols]
+    if inner.size < blocks.size:
+        out = [np.concatenate((o, c[full * BLOCK_SIZE:]))
+               for o, c in zip(out, cols)]
+    return out
+
+
+def _kth_floor(scores: np.ndarray, k: int) -> np.float32 | None:
+    """A lower bound on the kth best of ``scores`` (0 < k <= size), read
+    off the maxima of its 128-score chunks: the k chunks with the best
+    maxima each hold a score >= the kth best maximum. None when fewer
+    than k chunks are full or a chunk maximum is NaN."""
+    full = scores.size // BLOCK_SIZE
+    if full < k:
+        return None
+    m = scores[:full * BLOCK_SIZE].reshape(full, BLOCK_SIZE).max(axis=1)
+    if np.isnan(m).any():
+        return None
+    return np.partition(m, full - k)[full - k]
+
+
 def _take_topk(docs: np.ndarray, scores: np.ndarray, k: int
                ) -> tuple[np.ndarray, np.ndarray]:
-    """Exact (score desc, doc_id asc) top-k; full lexsort keeps tie
-    handling trivially correct (a doc-range holds <= drange_size docs,
-    so the sort is partition-local and small)."""
-    order = np.lexsort((docs, -scores.astype(np.float64)))
-    return docs[order][:k], scores[order][:k]
+    """Exact (score desc, doc_id asc) top-k. A chunk-maxima floor
+    (:func:`_kth_floor`) first drops scores that cannot reach the top k;
+    ``np.partition`` then finds the kth best score, and only the hits
+    scoring at least that (all its ties included) are lexsorted. A NaN
+    kth score (fewer than k comparable scores) sorts everything."""
+    if 0 < k < docs.size:
+        floor = _kth_floor(scores, k)
+        if floor is not None:
+            keep = scores >= floor
+            docs, scores = docs[keep], scores[keep]
+    neg = -scores.astype(np.float64)
+    if 0 < k < docs.size:
+        kth = np.partition(neg, k - 1)[k - 1]
+        if not np.isnan(kth):
+            keep = neg <= kth
+            docs, scores, neg = docs[keep], scores[keep], neg[keep]
+    order = np.lexsort((docs, neg))[:k]
+    return docs[order], scores[order]
 
 
 def _union_sum(parts: list[tuple[np.ndarray, np.ndarray]], msm: int
@@ -1018,10 +1090,24 @@ def _union_sum(parts: list[tuple[np.ndarray, np.ndarray]], msm: int
     """Union of (docs, float32 scores) parts, summed per doc in a float64
     accumulator in the given part order (the oracle's order, so sums are
     bit-identical); docs matched by fewer than ``msm`` parts drop out
-    (minimumShouldMatch)."""
+    (minimumShouldMatch). When the parts' doc-id span is at most 4x
+    their posting count (always so inside a dense doc range) the sums
+    and counts go into arrays over [min, max] and the docs are read off
+    them; a sparse span keeps the sort-based union."""
     parts = [(d, s) for d, s in parts if d.size]
     if not parts:
         return np.empty(0, np.int64), np.empty(0, np.float32)
+    lo = min(int(d.min()) for d, _ in parts)
+    span = max(int(d.max()) for d, _ in parts) - lo + 1
+    if span <= 4 * sum(d.size for d, _ in parts):
+        total = np.zeros(span, dtype=np.float64)
+        count = np.zeros(span, dtype=np.int32)
+        for d, s in parts:
+            i = d - lo
+            total[i] += s.astype(np.float64)
+            count[i] += 1
+        hit = np.flatnonzero(count >= max(msm, 1))
+        return hit + lo, total[hit].astype(np.float32)
     docs = np.unique(np.concatenate([d for d, _ in parts]))
     total = np.zeros(docs.size, dtype=np.float64)
     count = np.zeros(docs.size, dtype=np.int64)

@@ -14,7 +14,8 @@ from sparklucene.oracle import build_oracle_index, search_oracle
 from sparklucene.query import (And, ConstantScore, DisMax, Filtered,
                                MatchAllDocs, MultiPhrase, Not, Or, Phrase,
                                Span, SpanFirst, Synonym, Term, Within, parse)
-from sparklucene.scorer import GlobalStats, RangeCell, RangeScorer, TermStats
+from sparklucene.scorer import (GlobalStats, RangeCell, RangeScorer, TermStats,
+                                _take_topk, _union_sum)
 from sparklucene.spans import SpanNearNode, SpanNotNode, SpanOrNode, SpanTerm
 
 
@@ -199,3 +200,169 @@ def test_random_synthetic_corpora():
             want = search_oracle(oidx, q, k, mode="lucene8")
             assert d.tolist() == want["doc_id"].tolist(), (q, k, trial)
             assert (v == want["score"].to_numpy()).all(), (q, k, trial)
+
+
+# ---- selection, accumulation and the vectorized block-max loop -----------
+
+def _lexsort_topk(docs, scores, k):
+    """Reference: full (score desc, doc asc) lexsort, NaN scores last."""
+    order = np.lexsort((docs, -scores.astype(np.float64)))
+    return docs[order][:k], scores[order][:k]
+
+
+def _assert_same_topk(docs, scores, k):
+    gd, gs = _take_topk(docs, scores, k)
+    wd, ws = _lexsort_topk(docs, scores, k)
+    assert gd.tolist() == wd.tolist(), k
+    assert gs.tobytes() == ws.tobytes(), k
+
+
+@pytest.mark.parametrize("n", [0, 1, 7, 128, 1000, 20_000])
+def test_take_topk_equals_full_lexsort(n):
+    rng = np.random.default_rng(n)
+    docs = rng.permutation(n * 3)[:n].astype(np.int64)
+    for scores in (rng.random(n).astype(np.float32),
+                   # few distinct values: heavy ties everywhere
+                   rng.integers(0, 4, n).astype(np.float32),
+                   # boolean mode: every score equal
+                   np.full(n, np.float32(1.0)),
+                   np.zeros(n, np.float32) * -1.0):
+        for k in (1, 2, 10, 100, n, n + 5):
+            _assert_same_topk(docs, scores, k)
+
+
+def test_take_topk_nan_scores_rank_last():
+    rng = np.random.default_rng(3)
+    n = 5000
+    docs = np.arange(n, dtype=np.int64)
+    scores = rng.random(n).astype(np.float32)
+    scores[rng.integers(0, n, 400)] = np.nan
+    for k in (1, 10, 200):
+        _assert_same_topk(docs, scores, k)
+    few = np.full(n, np.nan, np.float32)
+    few[[5, 900, 4000]] = [0.5, 2.0, 0.5]
+    for k in (1, 3, 4, 10):  # k beyond the comparable scores
+        _assert_same_topk(docs, few, k)
+
+
+def test_callable_similarity_with_nan_scores_matches_lexsort(oidx):
+    def nan_on_tf2(tf, dl, df, cf, n, s):
+        out = tf / (tf + dl.astype(np.float64))
+        return np.where(tf == 2, np.nan, out)
+
+    for q in (Term("merge"), Or((Term("merge"), Term("join"))),
+              Or((Term("merge"), Term("join"), Term("scan")),
+                 min_should_match=2)):
+        for k in (1, 10, 1000):
+            sc = _scorer_from_oracle(oidx, mode=nan_on_tf2)
+            docs, scores = sc._clause_scores(q)
+            assert np.isnan(scores).any(), q
+            got = _scorer_from_oracle(oidx, mode=nan_on_tf2).topk(q, k)
+            want = _lexsort_topk(docs, scores, k)
+            assert got[0].tolist() == want[0].tolist(), (q, k)
+            assert got[1].tobytes() == want[1].tobytes(), (q, k)
+
+
+def _sorted_union_sum(parts, msm):
+    """Reference: the sort-based union (unique + searchsorted)."""
+    parts = [(d, s) for d, s in parts if d.size]
+    if not parts:
+        return np.empty(0, np.int64), np.empty(0, np.float32)
+    docs = np.unique(np.concatenate([d for d, _ in parts]))
+    total = np.zeros(docs.size)
+    count = np.zeros(docs.size, np.int64)
+    for d, s in parts:
+        i = np.searchsorted(docs, d)
+        total[i] += s.astype(np.float64)
+        count[i] += 1
+    m = count >= msm
+    return docs[m], total[m].astype(np.float32)
+
+
+@pytest.mark.parametrize("msm", [1, 2, 3])
+def test_union_sum_dense_and_sparse_paths_match_sort_path(msm):
+    import tracemalloc
+
+    rng = np.random.default_rng(msm)
+    base = 1 << 33
+    # dense: 3 parts over a 20k-doc span with ~60% occupancy each
+    dense = []
+    for _ in range(3):
+        d = base + np.flatnonzero(rng.random(20_000) < 0.6)
+        dense.append((d, rng.random(d.size).astype(np.float32)))
+    # sparse: a 2^40-wide span over a handful of docs
+    sparse = [(np.array([0, 1 << 40], np.int64),
+               np.array([0.25, 1.5], np.float32)),
+              (np.array([7, 1 << 40], np.int64),
+               np.array([0.125, 3.0], np.float32)),
+              (np.array([0, 7, 1 << 40], np.int64),
+               np.array([1.0, 2.0, 4.0], np.float32))]
+    for parts in (dense, sparse, dense[:1], [sparse[0], (np.empty(0, np.int64),
+                                                        np.empty(0, np.float32))]):
+        tracemalloc.start()
+        gd, gs = _union_sum(parts, msm)
+        peak = tracemalloc.get_traced_memory()[1]
+        tracemalloc.stop()
+        wd, ws = _sorted_union_sum(parts, msm)
+        assert gd.tolist() == wd.tolist()
+        assert gs.tobytes() == ws.tobytes()
+        if parts[0][0].size < 10:
+            assert peak < 1 << 20, peak  # the 2^40 span is never allocated
+
+
+@pytest.mark.parametrize("mode", ["lucene8", "f64", "classic", "boolean"])
+def test_dense_single_term_pruned_equals_exhaustive(mode):
+    """A 50+-block dense cell, no deletes, no cursor: the vectorized
+    block-max rounds give the exhaustive top-k bit for bit."""
+    rng = np.random.default_rng(11)
+    n = 57 * 128 + 37
+    docs = np.sort(rng.choice(n * 5 // 4, n, replace=False)).astype(np.int64)
+    tfs = np.minimum(rng.zipf(1.7, n), 40).astype(np.int64)
+    tfs[rng.integers(0, n, 30)] = 60  # a few competitive outliers
+    norms = rng.integers(1, 120, n).astype(np.uint8)
+    c = encode_postings(docs, tfs, norms)
+    stats = GlobalStats(doc_count=n * 5 // 4, sum_dl=n * 60,
+                        term_stats={"t": TermStats(df=n, cf=int(tfs.sum()))})
+
+    def scorer(prune):
+        cell = RangeCell(c.doc_bytes, c.tf_bytes, c.norm_bytes,
+                         c.block_last_doc, c.block_max_tf, c.block_min_norm)
+        return RangeScorer({"t": cell}, stats, mode=mode, prune=prune)
+
+    assert c.block_last_doc.size >= 50
+    for k in (1, 10, 100, 1000):
+        sp, se = scorer(True), scorer(False)
+        dp, vp = sp.topk(Term("t"), k)
+        de, ve = se.topk(Term("t"), k)
+        assert dp.tolist() == de.tolist(), k
+        assert vp.tobytes() == ve.tobytes(), k
+        assert sp.metrics.docs_total == se.metrics.docs_total == n
+        assert sp.metrics.docs_scored <= se.metrics.docs_scored, k
+        if mode == "lucene8" and k == 10:
+            assert sp.metrics.blocks_skipped > 0
+
+
+@pytest.mark.parametrize("mode", ["lucene8", "f64", "classic"])
+def test_block_whose_bound_ties_theta_is_still_scored(mode):
+    """Block 1 (bound s(tf=3)) is visited first and sets θ = s(tf=2);
+    block 0's bound is exactly s(tf=2), and its doc 5 ties θ with a
+    smaller doc id, so it wins the tie-break and must not be skipped."""
+    docs = np.arange(2 * 128, dtype=np.int64)
+    tfs = np.ones(docs.size, dtype=np.int64)
+    tfs[5] = 2
+    tfs[[130, 131, 140]] = 2
+    tfs[200] = 3
+    norms = np.full(docs.size, 10, dtype=np.uint8)
+    c = encode_postings(docs, tfs, norms)
+    stats = GlobalStats(doc_count=1000, sum_dl=20_000,
+                        term_stats={"t": TermStats(df=256,
+                                                   cf=int(tfs.sum()))})
+    got = {}
+    for prune in (True, False):
+        cell = RangeCell(c.doc_bytes, c.tf_bytes, c.norm_bytes,
+                         c.block_last_doc, c.block_max_tf, c.block_min_norm)
+        got[prune] = RangeScorer({"t": cell}, stats, mode=mode,
+                                 prune=prune).topk(Term("t"), 3)
+    assert got[False][0].tolist() == [200, 5, 130]
+    assert got[True][0].tolist() == got[False][0].tolist()
+    assert got[True][1].tobytes() == got[False][1].tobytes()
