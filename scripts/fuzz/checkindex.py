@@ -32,8 +32,6 @@ only catch these via file checksums, out of scope for a columnar-store
 layout where parquet already checksums pages) — must NOT crash the
 verify job (decode_error rows instead of stack traces, the round-4
 advisory's exact scenario); detection is tallied.
-
-Usage: python scripts/checkindex_fuzz_campaign.py [n_seeds] [seed0]
 """
 from __future__ import annotations
 
@@ -41,26 +39,21 @@ import glob
 import os
 import random
 import shutil
-import sys
+from collections import Counter
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
+from scripts.fuzz import Mismatch, expect
+from sparklucene.build import build_index
+from sparklucene.checkindex import verify_index
+from sparklucene.codec import decode_doc_ids, decode_tfs, vbyte_encode
+from sparklucene.search import Index
 
-from sparklucene.build import build_index  # noqa: E402
-from sparklucene.checkindex import verify_index  # noqa: E402
-from sparklucene.codec import (decode_doc_ids, decode_tfs,  # noqa: E402
-                               delta_encode, vbyte_encode)
-from sparklucene.search import Index  # noqa: E402
-from sparklucene.session import get_spark  # noqa: E402
-
-N_SEEDS = int(sys.argv[1]) if len(sys.argv) > 1 else 8
-SEED0 = int(sys.argv[2]) if len(sys.argv) > 2 else 240_000
-SCRATCH = os.path.join(REPO, ".cache", "checkindex-fuzz")
+SEEDS = (8, 240_000)
+SPARK = True
 
 VOC = ["fast", "slow", "join", "merge", "hash", "scan", "key", "data",
        "index", "block", "term", "codec", "sort", "tree"]
@@ -220,85 +213,49 @@ MUTATIONS = [
 ]
 
 
-def fail(seed: int, what: str, detail: str) -> None:
-    print(f"FAIL seed={seed} {what}: {detail}", flush=True)
-    sys.exit(1)
-
-
-def main() -> None:
-    spark = get_spark(app_name="checkindex-fuzz", cores=8,
-                      shuffle_partitions=8)
-    spark.sparkContext.setLogLevel("ERROR")
-    shutil.rmtree(SCRATCH, ignore_errors=True)
-    checks = flagged = undetected_ok = 0
-    for seed in range(SEED0, SEED0 + N_SEEDS):
-        rng = random.Random(seed)
-        clean_dir = os.path.join(SCRATCH, f"clean-{seed}")
-        build_index(spark, spark.createDataFrame(rand_corpus(rng)),
-                    clean_dir, drange_size=rng.choice([16, 64]))
-        v0 = verify_index(Index(spark, clean_dir)).toPandas()
-        if len(v0):
-            fail(seed, "clean", f"healthy index flagged: {v0}")
-        checks += 1
-        base = read_parquet_dir(os.path.join(clean_dir, "postings"))
-        schema = base.schema
-        for name, expected, fn in MUTATIONS:
-            pdf = base.to_pandas()
-            i = rng.randrange(len(pdf))
-            if fn(pdf, i, rng) is False:     # mutation inapplicable
-                continue
-            bad_dir = os.path.join(SCRATCH, f"bad-{seed}-{name}")
-            shutil.copytree(clean_dir, bad_dir)
-            write_parquet_dir(
-                os.path.join(bad_dir, "postings"),
-                pa.Table.from_pandas(pdf.reset_index(drop=True),
-                                     schema=schema,
-                                     preserve_index=False))
-            try:
-                viol = verify_index(Index(spark, bad_dir)).toPandas()
-            except Exception as exc:
-                fail(seed, name, f"verify_index CRASHED: {exc!r}")
-            got = set(viol["check"])
-            if expected is not None:
-                if not got:
-                    fail(seed, name, "corruption not flagged at all")
-                if not (got & expected):
-                    fail(seed, name,
-                         f"flagged {got}, expected one of {expected}")
-                flagged += 1
-            else:
-                flagged += 1 if got else 0
-                undetected_ok += 0 if got else 1
-            checks += 1
-            shutil.rmtree(bad_dir, ignore_errors=True)
-        # termstats-side mutation: bump df of a random dictionary row
-        ts_dir = os.path.join(clean_dir, "termstats")
-        tst = read_parquet_dir(ts_dir)
-        tpdf = tst.to_pandas()
-        j = rng.randrange(len(tpdf))
-        tpdf.at[j, "df"] = int(tpdf.at[j, "df"]) + 1
-        bad_dir = os.path.join(SCRATCH, f"bad-{seed}-termstats")
+def check(ctx, seed: int) -> Counter:
+    spark = ctx.spark
+    n: Counter = Counter()
+    rng = random.Random(seed)
+    clean_dir = os.path.join(ctx.tmp, "clean")
+    build_index(spark, spark.createDataFrame(rand_corpus(rng)),
+                clean_dir, drange_size=rng.choice([16, 64]))
+    v0 = verify_index(Index(spark, clean_dir)).toPandas()
+    expect(n, "clean", not len(v0), lambda: f"healthy index flagged: {v0}")
+    base = read_parquet_dir(os.path.join(clean_dir, "postings"))
+    for name, expected, fn in MUTATIONS:
+        pdf = base.to_pandas()
+        i = rng.randrange(len(pdf))
+        if fn(pdf, i, rng) is False:     # mutation inapplicable
+            continue
+        bad_dir = os.path.join(ctx.tmp, f"bad-{name}")
         shutil.copytree(clean_dir, bad_dir)
-        write_parquet_dir(os.path.join(bad_dir, "termstats"),
-                          pa.Table.from_pandas(tpdf, schema=tst.schema,
-                                               preserve_index=False))
-        viol = verify_index(Index(spark, bad_dir)).toPandas()
-        if "dictionary_agreement" not in set(viol["check"]):
-            fail(seed, "termstats_df_bump",
-                 f"not flagged (got {set(viol['check'])})")
-        checks += 1
-        flagged += 1
+        write_parquet_dir(
+            os.path.join(bad_dir, "postings"),
+            pa.Table.from_pandas(pdf.reset_index(drop=True),
+                                 schema=base.schema, preserve_index=False))
+        try:
+            got = set(verify_index(Index(spark, bad_dir)).toPandas()["check"])
+        except Exception as exc:
+            raise Mismatch(name, f"verify_index crashed: {exc!r}") from exc
+        if expected is not None:
+            expect(n, name, got & expected,
+                   lambda: f"flagged {got or 'nothing'}, "
+                   f"expected one of {expected}")
+        else:  # no-crash leg: detection tallied, not required
+            n["flagged" if got else "silent_by_design"] += 1
         shutil.rmtree(bad_dir, ignore_errors=True)
-        shutil.rmtree(clean_dir, ignore_errors=True)
-        print(f"seed {seed}: ok ({checks} checks, {flagged} flagged, "
-              f"{undetected_ok} undetectable-by-design)", flush=True)
-    print(f"PASS {N_SEEDS} seeds, {checks} corruption checks, "
-          f"{flagged} flagged, {undetected_ok} silent (norm/pos value "
-          f"flips — no redundancy, parquet page checksums own these)",
-          flush=True)
-    spark.stop()
-    shutil.rmtree(SCRATCH, ignore_errors=True)
-
-
-if __name__ == "__main__":
-    main()
+    # termstats-side mutation: bump df of a random dictionary row
+    tst = read_parquet_dir(os.path.join(clean_dir, "termstats"))
+    tpdf = tst.to_pandas()
+    j = rng.randrange(len(tpdf))
+    tpdf.at[j, "df"] = int(tpdf.at[j, "df"]) + 1
+    bad_dir = os.path.join(ctx.tmp, "bad-termstats")
+    shutil.copytree(clean_dir, bad_dir)
+    write_parquet_dir(os.path.join(bad_dir, "termstats"),
+                      pa.Table.from_pandas(tpdf, schema=tst.schema,
+                                           preserve_index=False))
+    got = set(verify_index(Index(spark, bad_dir)).toPandas()["check"])
+    expect(n, "termstats_df_bump", "dictionary_agreement" in got,
+           lambda: f"not flagged (got {got})")
+    return n

@@ -8,23 +8,19 @@ computes the target month-length via day-before-next-month rather than
 calendar.monthrange, and rounding rebuilds the datetime from formatted
 prefixes rather than .replace — same pinned Java Calendar.add
 semantics (single-jump day clamp), different code paths.
-
-Usage: python scripts/datemath_fuzz_campaign.py [n_seeds] [seed0]
 """
 from __future__ import annotations
 
-import os
 import random
-import sys
+import re
+from collections import Counter
 from datetime import datetime, timedelta
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
+from scripts.fuzz import Mismatch, expect
+from sparklucene.datemath import parse_date_math
 
-from sparklucene.datemath import parse_date_math  # noqa: E402
-
-N_SEEDS = int(sys.argv[1]) if len(sys.argv) > 1 else 2000
-SEED0 = int(sys.argv[2]) if len(sys.argv) > 2 else 91_000
+SEEDS = (2000, 91_000)
+SPARK = False
 
 UNIT_ALIASES = {
     "year": ["YEAR", "YEARS"],
@@ -87,66 +83,51 @@ def gen_anchor(rng: random.Random) -> tuple[str, datetime]:
             now.replace(microsecond=ms * 1000))
 
 
-def main() -> int:
-    n_fail = 0
-    n_reject = 0
-    for seed in range(SEED0, SEED0 + N_SEEDS):
-        rng = random.Random(seed)
-        expr, dt = gen_anchor(rng)
-        for _ in range(rng.randint(0, 6)):
-            unit = rng.choice(CANON)
-            alias = rng.choice(UNIT_ALIASES[unit])
-            if rng.random() < 0.4:
-                expr += f"/{alias}"
-                dt = mirror_round(dt, unit)
-            else:
-                sign = rng.choice("+-")
-                n = rng.choice([0, 1, 2, 7, 13, 25, 100])
-                expr += f"{sign}{n}{alias}"
-                dt = mirror_add(dt, n if sign == "+" else -n, unit)
-        try:
-            got = parse_date_math(expr, now=dt if "NOW" in expr else None)
-        except ValueError:
-            got = None
-        # recompute with the true anchor (dt was mutated above)
-        rng2 = random.Random(seed)
-        _expr2, anchor = gen_anchor(rng2)
-        exp = anchor
-        i = len("NOW") if expr.startswith("NOW") else expr.index("Z") + 1
-        rest = expr[i:]
-        import re
-        for m in re.finditer(r"/([A-Z]+)|([+-])(\d+)([A-Z]+)", rest):
-            if m.group(1):
-                cu = next(k for k, v in UNIT_ALIASES.items()
-                          if m.group(1) in v)
-                exp = mirror_round(exp, cu)
-            else:
-                cu = next(k for k, v in UNIT_ALIASES.items()
-                          if m.group(4) in v)
-                n = int(m.group(3))
-                exp = mirror_add(exp, n if m.group(2) == "+" else -n, cu)
-        got = parse_date_math(expr, now=anchor)
-        if got != exp:
-            n_fail += 1
-            print(f"seed {seed}: FAIL {expr!r}: {got} != {exp}")
+def check(ctx, seed: int) -> Counter:
+    n: Counter = Counter()
+    rng = random.Random(seed)
+    expr, dt = gen_anchor(rng)
+    for _ in range(rng.randint(0, 6)):
+        unit = rng.choice(CANON)
+        alias = rng.choice(UNIT_ALIASES[unit])
+        if rng.random() < 0.4:
+            expr += f"/{alias}"
+            dt = mirror_round(dt, unit)
+        else:
+            sign = rng.choice("+-")
+            k = rng.choice([0, 1, 2, 7, 13, 25, 100])
+            expr += f"{sign}{k}{alias}"
+            dt = mirror_add(dt, k if sign == "+" else -k, unit)
+    try:
+        parse_date_math(expr, now=dt if "NOW" in expr else None)
+    except ValueError:
+        pass
+    # recompute with the true anchor (dt was mutated above)
+    _expr2, anchor = gen_anchor(random.Random(seed))
+    exp = anchor
+    i = len("NOW") if expr.startswith("NOW") else expr.index("Z") + 1
+    for m in re.finditer(r"/([A-Z]+)|([+-])(\d+)([A-Z]+)", expr[i:]):
+        if m.group(1):
+            cu = next(k for k, v in UNIT_ALIASES.items() if m.group(1) in v)
+            exp = mirror_round(exp, cu)
+        else:
+            cu = next(k for k, v in UNIT_ALIASES.items() if m.group(4) in v)
+            k = int(m.group(3))
+            exp = mirror_add(exp, k if m.group(2) == "+" else -k, cu)
+    got = parse_date_math(expr, now=anchor)
+    expect(n, "mirror", got == exp, lambda: f"{expr!r}: {got} != {exp}")
 
-        # adversarial rejects must raise ValueError
-        bad = rng.choice([
-            expr + "X", expr + "/", expr + "+", "now/DAY", "NOW/FOO",
-            "NOW+3FOO", "2024-1-1T00:00:00Z", expr + " ", "+1DAY",
-            expr.replace("NOW", "TOMORROW", 1) if "NOW" in expr else "T",
-        ])
-        try:
-            parse_date_math(bad, now=anchor)
-            if bad != expr:  # a mutation may be a no-op; only count real ones
-                n_fail += 1
-                print(f"seed {seed}: FAIL accepted {bad!r}")
-        except ValueError:
-            n_reject += 1
-    print(f"{N_SEEDS - n_fail}/{N_SEEDS} seeds clean "
-          f"({n_reject} adversarial rejects verified)")
-    return 1 if n_fail else 0
-
-
-if __name__ == "__main__":
-    raise SystemExit(main())
+    # adversarial rejects must raise ValueError
+    bad = rng.choice([
+        expr + "X", expr + "/", expr + "+", "now/DAY", "NOW/FOO",
+        "NOW+3FOO", "2024-1-1T00:00:00Z", expr + " ", "+1DAY",
+        expr.replace("NOW", "TOMORROW", 1) if "NOW" in expr else "T",
+    ])
+    try:
+        parse_date_math(bad, now=anchor)
+    except ValueError:
+        n["reject"] += 1
+    else:  # a mutation may be a no-op; only a real one must be rejected
+        if bad != expr:
+            raise Mismatch("reject", f"accepted {bad!r}")
+    return n

@@ -16,30 +16,23 @@ Mirrored surfaces:
   embedding_neardup_pairs, dup_clusters (vs union-find),
   semantic_dedup (vs a full numpy re-derivation of the deterministic
   integer-grid spherical k-means + the id-ordered removal rule).
-
-Usage: python scripts/dedup_fuzz_campaign.py [n_seeds] [seed0]
 """
 from __future__ import annotations
 
 import hashlib
 import math
-import os
 import random
 import re
-import sys
-from collections import defaultdict
+from collections import Counter, defaultdict
 
 import numpy as np
 import pandas as pd
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
+from scripts.fuzz import expect
+from sparklucene import dedup as D
 
-from sparklucene import dedup as D  # noqa: E402
-from sparklucene.session import get_spark  # noqa: E402
-
-N_SEEDS = int(sys.argv[1]) if len(sys.argv) > 1 else 15
-SEED0 = int(sys.argv[2]) if len(sys.argv) > 2 else 52_000
+SEEDS = (15, 52_000)
+SPARK = True
 
 TOKEN_RE = re.compile(r"[a-z0-9_]+")
 VOCAB = ["alpha", "bravo", "charlie", "delta", "echo", "foxtrot", "golf",
@@ -157,11 +150,6 @@ class UF:
             self.p[max(ra, rb)] = min(ra, rb)
 
 
-def check(name, cond, detail, fails):
-    if not cond:
-        fails.append(f"{name}: {detail}")
-
-
 def mirror_ivf(qg: np.ndarray, vec_ids: np.ndarray, n_centroids: int,
                iters: int):
     """numpy re-derivation of similarity.ivf_index's pinned k-means."""
@@ -208,12 +196,13 @@ def mirror_ivf(qg: np.ndarray, vec_ids: np.ndarray, n_centroids: int,
     return assign(), cents
 
 
-def run_seed(spark, seed: int) -> list[str]:
+def check(ctx, seed: int) -> Counter:
+    spark = ctx.spark
+    n_: Counter = Counter()
     rng = random.Random(seed)
     npr = np.random.default_rng(seed)
     pdf = gen_corpus(rng)
     docs = spark.createDataFrame(pdf).repartition(4)
-    fails: list[str] = []
     by_id = dict(zip((int(d) for d in pdf.doc_id), pdf.text))
 
     # ---- exact_dup_groups ----
@@ -224,7 +213,7 @@ def run_seed(spark, seed: int) -> list[str]:
         groups[hashlib.sha256(text.encode()).hexdigest()].append(did)
     exp = {(sha, len(ids), min(ids))
            for sha, ids in groups.items() if len(ids) > 1}
-    check("exact_dup_groups", got == exp, f"{got ^ exp}", fails)
+    expect(n_, "exact_dup_groups", got == exp, f"{got ^ exp}")
 
     # ---- minhash_signatures ----
     shingle = rng.choice([2, 3])
@@ -232,8 +221,8 @@ def run_seed(spark, seed: int) -> list[str]:
     got_sig = {int(r["doc_id"]): tuple(int(r[f"sig{i}"]) for i in
                                        range(len(D.MINHASH_COEFFS)))
                for r in D.minhash_signatures(docs, shingle).collect()}
-    check("minhash_signatures", got_sig == sigs,
-          f"docs {sorted(set(got_sig) ^ set(sigs))} or values", fails)
+    expect(n_, "minhash_signatures", got_sig == sigs,
+           f"docs {sorted(set(got_sig) ^ set(sigs))} or values")
 
     # ---- lsh_candidate_pairs ----
     rpb = rng.choice([2, 4])
@@ -246,8 +235,8 @@ def run_seed(spark, seed: int) -> list[str]:
                 exp_pairs.add((ms[i], ms[j]))
     got_pairs = {(r.doc_a, r.doc_b) for r in
                  D.lsh_candidate_pairs(docs, shingle, rpb).collect()}
-    check("lsh_candidate_pairs", got_pairs == exp_pairs,
-          f"{sorted(got_pairs ^ exp_pairs)}", fails)
+    expect(n_, "lsh_candidate_pairs", got_pairs == exp_pairs,
+           f"{sorted(got_pairs ^ exp_pairs)}")
 
     # ---- lsh_candidates_incremental ----
     cut = rng.randint(1, len(pdf) - 1)
@@ -263,16 +252,16 @@ def run_seed(spark, seed: int) -> list[str]:
                D.lsh_candidates_incremental(
                    spark.createDataFrame(new_pdf),
                    spark.createDataFrame(old_pdf), shingle, rpb).collect()}
-    check("lsh_incremental", got_inc == exp_inc,
-          f"{sorted(got_inc ^ exp_inc)}", fails)
+    expect(n_, "lsh_incremental", got_inc == exp_inc,
+           f"{sorted(got_inc ^ exp_inc)}")
 
     # ---- simhash + simhash_pairs (vs PURE hamming oracle) ----
     bits = rng.choice([16, 32, 64])
     sh = mirror_simhash(pdf, bits)
     got_sh = {int(r["doc_id"]): int(r["simhash"])
               for r in D.simhash(docs, bits).collect()}
-    check("simhash", got_sh == sh,
-          f"docs {sorted(set(got_sh) ^ set(sh))} or values", fails)
+    expect(n_, "simhash", got_sh == sh,
+           f"docs {sorted(set(got_sh) ^ set(sh))} or values")
     max_h = rng.choice([1, 2, 3])
     n_chunks = rng.choice([c for c in (2, 4, 8) if c > max_h and bits % c == 0])
     exp_sp = set()
@@ -284,8 +273,8 @@ def run_seed(spark, seed: int) -> list[str]:
                 exp_sp.add((ids[i], ids[j], ham))
     got_sp = {(r.doc_a, r.doc_b, r.hamming) for r in
               D.simhash_pairs(docs, bits, max_h, n_chunks).collect()}
-    check("simhash_pairs", got_sp == exp_sp,
-          f"{sorted(got_sp ^ exp_sp)}", fails)
+    expect(n_, "simhash_pairs", got_sp == exp_sp,
+           f"{sorted(got_sp ^ exp_sp)}")
 
     # ---- ngram_jaccard_pairs (uncapped and capped) ----
     sh_sets = {did: set(shingles_of(text, shingle))
@@ -321,8 +310,8 @@ def run_seed(spark, seed: int) -> list[str]:
         got_j = {(r.doc_a, r.doc_b): (r.n_inter, r.n_union)
                  for r in D.ngram_jaccard_pairs(
                      docs, shingle, minj, max_block).collect()}
-        check(f"jaccard(cap={max_block})", got_j == exp_j,
-              f"{sorted(set(got_j) ^ set(exp_j))}", fails)
+        expect(n_, f"jaccard(cap={max_block})", got_j == exp_j,
+               f"{sorted(set(got_j) ^ set(exp_j))}")
 
     # ---- dup_clusters over the LSH pairs (vs union-find) ----
     if exp_pairs:
@@ -333,9 +322,8 @@ def run_seed(spark, seed: int) -> list[str]:
         got_lab = {r.node: r.comp for r in
                    D.dup_clusters(D.lsh_candidate_pairs(
                        docs, shingle, rpb)).collect()}
-        check("dup_clusters", got_lab == exp_lab,
-              f"{ {k: (got_lab.get(k), exp_lab.get(k)) for k in set(got_lab) ^ set(exp_lab) or set()} }",
-              fails)
+        expect(n_, "dup_clusters", got_lab == exp_lab,
+               f"{ {k: (got_lab.get(k), exp_lab.get(k)) for k in set(got_lab) ^ set(exp_lab) or set()} }")
 
     # ---- embedding_neardup_pairs ----
     n, dim = rng.randint(12, 40), rng.choice([4, 8, 17])
@@ -366,10 +354,10 @@ def run_seed(spark, seed: int) -> list[str]:
                 exp_nd[(int(vec_ids[i]), int(vec_ids[j]))] = cos
     got_nd = {(r.vec_a, r.vec_b): r.cosine for r in
               D.embedding_neardup_pairs(edf, minc, n_planes).collect()}
-    check("embedding_neardup",
-          set(got_nd) == set(exp_nd)
-          and all(got_nd[k] == exp_nd[k] for k in exp_nd),
-          f"{sorted(set(got_nd) ^ set(exp_nd))}", fails)
+    expect(n_, "embedding_neardup",
+           set(got_nd) == set(exp_nd)
+           and all(got_nd[k] == exp_nd[k] for k in exp_nd),
+           f"{sorted(set(got_nd) ^ set(exp_nd))}")
 
     # ---- semantic_dedup (full numpy k-means + removal-rule mirror) ----
     k = rng.choice([2, 3, 5])
@@ -393,26 +381,7 @@ def run_seed(spark, seed: int) -> list[str]:
     got_rm = {r.vec_id: (r.centroid, r.dropped_by, r.cosine) for r in
               D.semantic_dedup(edf, n_clusters=k, iters=iters,
                                min_cosine=minc).collect()}
-    check("semantic_dedup", got_rm == exp_rm,
-          f"{ {kk: (got_rm.get(kk), exp_rm.get(kk)) for kk in set(got_rm) ^ set(exp_rm)} or 'value diff'}",
-          fails)
+    expect(n_, "semantic_dedup", got_rm == exp_rm,
+           f"{ {kk: (got_rm.get(kk), exp_rm.get(kk)) for kk in set(got_rm) ^ set(exp_rm)} or 'value diff'}")
 
-    return fails
-
-
-def main() -> int:
-    spark = get_spark(app_name="dedup-fuzz", cores=8, shuffle_partitions=8)
-    spark.sparkContext.setLogLevel("ERROR")
-    n_fail = 0
-    for i in range(N_SEEDS):
-        seed = SEED0 + i
-        fails = run_seed(spark, seed)
-        print(f"seed {seed}: {'OK' if not fails else 'FAIL'}"
-              + (f" {fails[:4]}" if fails else ""), flush=True)
-        n_fail += bool(fails)
-    print(f"\n{N_SEEDS - n_fail}/{N_SEEDS} seeds clean")
-    return 1 if n_fail else 0
-
-
-if __name__ == "__main__":
-    raise SystemExit(main())
+    return n_

@@ -10,45 +10,33 @@ pure-Python mirrors (round-5).
   - percentile_sketch(method="sampled"): deterministic md5-prefix
     sample membership re-derived with hashlib, exact interpolated
     percentile re-derived with numpy on the mirrored sample.
-
-Usage: python scripts/facets_fuzz_campaign.py [n_seeds] [seed0]
 """
 from __future__ import annotations
 
 import calendar
 import hashlib
 import math
-import os
 import random
-import sys
-from collections import defaultdict
+from collections import Counter, defaultdict
 from datetime import datetime, timedelta
 
 import numpy as np
+from pyspark.sql import functions as F
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
+from scripts.fuzz import expect
+from sparklucene.facets import (multiselect_facets, percentile_sketch,
+                                range_facet_date)
 
-from pyspark.sql import functions as F  # noqa: E402
-
-from sparklucene.facets import (multiselect_facets,  # noqa: E402
-                                percentile_sketch, range_facet_date)
-from sparklucene.session import get_spark  # noqa: E402
-
-N_SEEDS = int(sys.argv[1]) if len(sys.argv) > 1 else 15
-SEED0 = int(sys.argv[2]) if len(sys.argv) > 2 else 84_000
+SEEDS = (15, 84_000)
+SPARK = True
 
 FMT = "%Y-%m-%d %H:%M:%S"
 
 
-def check(name, cond, detail, fails):
-    if not cond:
-        fails.append(f"{name}: {detail}")
-
-
-def run_seed(spark, seed: int) -> list[str]:
+def check(ctx, seed: int) -> Counter:
+    spark = ctx.spark
+    n: Counter = Counter()
     rng = random.Random(seed)
-    fails: list[str] = []
 
     # ---- multiselect_facets ----
     langs = ["en", "de", "fr", None]
@@ -95,8 +83,8 @@ def run_seed(spark, seed: int) -> list[str]:
     # engine orders cnt desc, value asc (NULL first in Spark asc)
     exp_sorted = sorted(exp, key=lambda t: (t[0], -t[2], t[1] is not None,
                                             t[1] or ""))
-    check("multiselect", got == exp_sorted,
-          f"{[x for x in got if x not in exp_sorted][:4]}", fails)
+    expect(n, "multiselect", got == exp_sorted,
+           f"{[x for x in got if x not in exp_sorted][:4]}")
 
     # ---- range_facet_date ----
     t0 = datetime(2024, rng.randint(1, 6), rng.randint(1, 28),
@@ -136,9 +124,8 @@ def run_seed(spark, seed: int) -> list[str]:
         for i in range(n_buckets)]
     exp_rf += [("after", after), ("before", before), ("between", between)]
     exp_rf.sort()
-    check("range_facet_date", got_rf == exp_rf,
-          f"hardend={hardend}: {[x for x in got_rf if x not in exp_rf][:4]}",
-          fails)
+    expect(n, "range_facet_date", got_rf == exp_rf,
+           f"hardend={hardend}: {[x for x in got_rf if x not in exp_rf][:4]}")
 
     # ---- percentile_sketch (sampled) ----
     groups = ["a", "b", "c"]
@@ -164,27 +151,7 @@ def run_seed(spark, seed: int) -> list[str]:
         math.isclose(got_p[g][0], exp_p[g][0], rel_tol=1e-12)
         and math.isclose(got_p[g][1], exp_p[g][1], rel_tol=1e-12)
         and got_p[g][2] == exp_p[g][2] for g in exp_p)
-    check("percentile_sampled", ok,
-          f"{ {g: (got_p.get(g), exp_p.get(g)) for g in set(got_p) | set(exp_p)} }",
-          fails)
+    expect(n, "percentile_sampled", ok,
+           f"{ {g: (got_p.get(g), exp_p.get(g)) for g in set(got_p) | set(exp_p)} }")
 
-    return fails
-
-
-def main() -> int:
-    spark = get_spark(app_name="facets-fuzz", cores=8,
-                      shuffle_partitions=8)
-    spark.sparkContext.setLogLevel("ERROR")
-    n_fail = 0
-    for i in range(N_SEEDS):
-        seed = SEED0 + i
-        fails = run_seed(spark, seed)
-        print(f"seed {seed}: {'OK' if not fails else 'FAIL'}"
-              + (f" {fails[:4]}" if fails else ""), flush=True)
-        n_fail += bool(fails)
-    print(f"\n{N_SEEDS - n_fail}/{N_SEEDS} seeds clean")
-    return 1 if n_fail else 0
-
-
-if __name__ == "__main__":
-    raise SystemExit(main())
+    return n

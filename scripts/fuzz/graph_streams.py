@@ -7,30 +7,22 @@ convergence defect hid — this campaign drives them with random directed
 graphs (cycles, self-loops, diamonds, disconnected components, dangling
 roots) against from-scratch BFS mirrors, plus score_nodes, sessionize,
 and timeseries gap-fill against dict/loop re-derivations.
-
-Usage: python scripts/graph_streams_fuzz_campaign.py [n_seeds] [seed0]
 """
 from __future__ import annotations
 
 import math
-import os
 import random
-import sys
-from collections import defaultdict
+from collections import Counter, defaultdict
 from datetime import datetime, timedelta
 
 import numpy as np
+from pyspark.sql import functions as F
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
+from scripts.fuzz import expect
+from sparklucene import streams as S
 
-from pyspark.sql import functions as F  # noqa: E402
-
-from sparklucene import streams as S  # noqa: E402
-from sparklucene.session import get_spark  # noqa: E402
-
-N_SEEDS = int(sys.argv[1]) if len(sys.argv) > 1 else 15
-SEED0 = int(sys.argv[2]) if len(sys.argv) > 2 else 73_000
+SEEDS = (15, 73_000)
+SPARK = True
 
 
 def gen_graph(rng: random.Random) -> tuple[list[tuple[str, str]], list[str]]:
@@ -67,14 +59,10 @@ def bfs_levels(edges, roots) -> dict[str, int]:
     return level
 
 
-def check(name, cond, detail, fails):
-    if not cond:
-        fails.append(f"{name}: {detail}")
-
-
-def run_seed(spark, seed: int) -> list[str]:
+def check(ctx, seed: int) -> Counter:
+    spark = ctx.spark
+    n: Counter = Counter()
     rng = random.Random(seed)
-    fails: list[str] = []
     edges, nodes = gen_graph(rng)
     edf = spark.createDataFrame(edges, "src string, dst string") \
         .repartition(4)
@@ -87,9 +75,8 @@ def run_seed(spark, seed: int) -> list[str]:
     exp = {n: l for n, l in full.items() if l <= rounds}
     got = {r.node: r.level for r in
            S.gather_nodes(edf, rdf, rounds).collect()}
-    check("gather_nodes", got == exp,
-          f"{ {k: (got.get(k), exp.get(k)) for k in set(got) ^ set(exp)} }",
-          fails)
+    expect(n, "gather_nodes", got == exp,
+           f"{ {k: (got.get(k), exp.get(k)) for k in set(got) ^ set(exp)} }")
 
     # ---- graph_query (value-linked fixpoint over a doc table) ----
     # docs: (id, from_val, to_val, is_root); link rule: next docs are
@@ -125,9 +112,8 @@ def run_seed(spark, seed: int) -> list[str]:
     got = {r.id: r.level for r in
            S.graph_query(ddf, F.col("is_root") == 1, "id", "fv", "tv",
                          max_depth).collect()}
-    check("graph_query", got == lvl_map,
-          f"{ {k: (got.get(k), lvl_map.get(k)) for k in set(got) ^ set(lvl_map)} }",
-          fails)
+    expect(n, "graph_query", got == lvl_map,
+           f"{ {k: (got.get(k), lvl_map.get(k)) for k in set(got) ^ set(lvl_map)} }")
 
     # ---- shortest_path (all tied shortest paths) ----
     src, dst = rng.choice(nodes), rng.choice(nodes)
@@ -162,9 +148,8 @@ def run_seed(spark, seed: int) -> list[str]:
     got_lvls = {r.level for r in out}
     ok = got_paths == exp_paths and (
         not exp_paths or got_lvls == {exp_lvl})
-    check("shortest_path", ok,
-          f"{src}->{dst} d={max_depth}: {sorted(got_paths ^ exp_paths)}",
-          fails)
+    expect(n, "shortest_path", ok,
+           f"{src}->{dst} d={max_depth}: {sorted(got_paths ^ exp_paths)}")
 
     # ---- score_nodes ----
     terms = sorted({n for e in edges for n in e})
@@ -187,9 +172,8 @@ def run_seed(spark, seed: int) -> list[str]:
         or (got_rows[i].node_score == got_rows[i + 1].node_score
             and got_rows[i].node < got_rows[i + 1].node)
         for i in range(len(got_rows) - 1))
-    check("score_nodes", got_sc == exp_sc and order_ok,
-          f"{ {k: (got_sc.get(k), exp_sc.get(k)) for k in set(got_sc) ^ set(exp_sc)} or 'order'}",
-          fails)
+    expect(n, "score_nodes", got_sc == exp_sc and order_ok,
+           f"{ {k: (got_sc.get(k), exp_sc.get(k)) for k in set(got_sc) ^ set(exp_sc)} or 'order'}")
 
     # ---- sessionize ----
     users = [f"u{i}" for i in range(rng.randint(1, 4))]
@@ -227,8 +211,8 @@ def run_seed(spark, seed: int) -> list[str]:
                  r.sum_value)
                 for r in S.sessionize(evdf, "ts", "30 minutes",
                                       ("user_id",), "value").collect()}
-    check("sessionize", got_sess == exp_sess,
-          f"{sorted(got_sess ^ exp_sess)[:3]}", fails)
+    expect(n, "sessionize", got_sess == exp_sess,
+           f"{sorted(got_sess ^ exp_sess)[:3]}")
 
     # ---- timeseries gap-fill ----
     unit = rng.choice(["DAY", "HOUR", "MONTH"])
@@ -282,26 +266,7 @@ def run_seed(spark, seed: int) -> list[str]:
     exp_ts = [(s, agg[i][0] if i in agg else 0,
                agg[i][1] if i in agg else -1)
               for i, s in enumerate(starts)]
-    check("timeseries", got_ts == exp_ts,
-          f"{unit} gap={gap_n}: {[x for x in got_ts if x not in exp_ts][:3]}",
-          fails)
+    expect(n, "timeseries", got_ts == exp_ts,
+           f"{unit} gap={gap_n}: {[x for x in got_ts if x not in exp_ts][:3]}")
 
-    return fails
-
-
-def main() -> int:
-    spark = get_spark(app_name="graph-fuzz", cores=8, shuffle_partitions=8)
-    spark.sparkContext.setLogLevel("ERROR")
-    n_fail = 0
-    for i in range(N_SEEDS):
-        seed = SEED0 + i
-        fails = run_seed(spark, seed)
-        print(f"seed {seed}: {'OK' if not fails else 'FAIL'}"
-              + (f" {fails[:4]}" if fails else ""), flush=True)
-        n_fail += bool(fails)
-    print(f"\n{N_SEEDS - n_fail}/{N_SEEDS} seeds clean")
-    return 1 if n_fail else 0
-
-
-if __name__ == "__main__":
-    raise SystemExit(main())
+    return n

@@ -15,32 +15,25 @@ noise), and a random drange_size, builds a REAL index through
 
 (`analyze_flat` runs on both sides by design — the subject under test
 is invert + codec + merge + manifests, not the token stream itself.)
-
-Usage: python scripts/invert_fuzz_campaign.py [n_seeds] [seed0]
 """
 from __future__ import annotations
 
 import os
 import random
-import shutil
-import sys
 from collections import Counter
 
 import numpy as np
 import pandas as pd
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
+from scripts.fuzz import expect
+from sparklucene.analysis import (ENGLISH_STOP_WORDS, AnalyzerConfig,
+                                  analyze_flat)
+from sparklucene.build import build_index
+from sparklucene.checkindex import verify_index
+from sparklucene.search import Index, term_positions
 
-from sparklucene.analysis import ENGLISH_STOP_WORDS, AnalyzerConfig, analyze_flat  # noqa: E402
-from sparklucene.build import build_index  # noqa: E402
-from sparklucene.checkindex import verify_index  # noqa: E402
-from sparklucene.search import Index, term_positions  # noqa: E402
-from sparklucene.session import get_spark  # noqa: E402
-
-N_SEEDS = int(sys.argv[1]) if len(sys.argv) > 1 else 40
-SEED0 = int(sys.argv[2]) if len(sys.argv) > 2 else 40_000
-SCRATCH = os.path.join(REPO, ".cache", "invert-fuzz")
+SEEDS = (40, 40_000)
+SPARK = True
 
 VOC = ["the", "a", "of", "fast", "slow", "join", "merge", "hash", "scan",
        "key", "a_b", "the_who", "data", "who", "camelCaseToken",
@@ -102,57 +95,40 @@ def rand_corpus(rng: random.Random) -> pd.DataFrame:
         "doc_id": np.arange(n, dtype=np.int64)})
 
 
-def main() -> None:
-    spark = get_spark(app_name="invert-fuzz", cores=8, shuffle_partitions=8)
-    spark.sparkContext.setLogLevel("ERROR")
-    for seed in range(SEED0, SEED0 + N_SEEDS):
-        rng = random.Random(seed)
-        cfg = rand_config(rng)
-        pdf = rand_corpus(rng)
-        drange = rng.choice([1, 7, 16, 64])
-        d = os.path.join(SCRATCH, f"idx-{seed}")
-        shutil.rmtree(d, ignore_errors=True)
-        build_index(spark, spark.createDataFrame(pdf), d,
-                    drange_size=drange, analyzer=cfg)
-        idx = Index(spark, d)
+def check(ctx, seed: int) -> Counter:
+    spark = ctx.spark
+    n: Counter = Counter()
+    rng = random.Random(seed)
+    cfg = rand_config(rng)
+    pdf = rand_corpus(rng)
+    drange = rng.choice([1, 7, 16, 64])
+    d = os.path.join(ctx.tmp, "idx")
+    build_index(spark, spark.createDataFrame(pdf), d,
+                drange_size=drange, analyzer=cfg)
+    idx = Index(spark, d)
 
-        flat, docs, pos = analyze_flat(pd.Series(pdf["content"].tolist()),
-                                       pdf["doc_id"].to_numpy(), cfg)
-        cf = Counter(flat)
-        dfc = Counter(t for t, _d in set(zip(flat, docs)))
-        got = {r["term"]: (r["df"], r["cf"])
-               for r in idx.termstats().collect()}
-        want = {t: (dfc[t], cf[t]) for t in cf}
-        if got != want:
-            extra = {t: got[t] for t in set(got) - set(want)}
-            miss = {t: want[t] for t in set(want) - set(got)}
-            diff = {t: (got[t], want[t]) for t in set(got) & set(want)
-                    if got[t] != want[t]}
-            print(f"FAIL termstats seed={seed} cfg={cfg} drange={drange}\n"
-                  f"  extra={extra} missing={miss} diff={diff}", flush=True)
-            sys.exit(1)
+    flat, docs, pos = analyze_flat(pd.Series(pdf["content"].tolist()),
+                                   pdf["doc_id"].to_numpy(), cfg)
+    cf = Counter(flat)
+    dfc = Counter(t for t, _d in set(zip(flat, docs)))
+    got = {r["term"]: (r["df"], r["cf"]) for r in idx.termstats().collect()}
+    want = {t: (dfc[t], cf[t]) for t in cf}
+    def diff() -> str:
+        extra = {t: got[t] for t in set(got) - set(want)}
+        miss = {t: want[t] for t in set(want) - set(got)}
+        changed = {t: (got[t], want[t]) for t in set(got) & set(want)
+                   if got[t] != want[t]}
+        return (f"cfg={cfg} drange={drange}\n  extra={extra} "
+                f"missing={miss} diff={changed}")
+    expect(n, "termstats", got == want, diff)
 
-        for t in rng.sample(sorted(cf), min(3, len(cf))):
-            tp = term_positions(idx, t).toPandas()
-            exp = sorted((int(dd), int(pp))
-                         for tt, dd, pp in zip(flat, docs, pos) if tt == t)
-            if sorted(map(tuple, tp.to_numpy().tolist())) != exp:
-                print(f"FAIL positions seed={seed} term={t!r} cfg={cfg}",
-                      flush=True)
-                sys.exit(1)
+    for t in rng.sample(sorted(cf), min(3, len(cf))):
+        tp = term_positions(idx, t).toPandas()
+        exp = sorted((int(dd), int(pp))
+                     for tt, dd, pp in zip(flat, docs, pos) if tt == t)
+        expect(n, "positions", sorted(map(tuple, tp.to_numpy().tolist()))
+               == exp, lambda: f"term={t!r} cfg={cfg}")
 
-        nv = verify_index(idx).count()
-        if nv:
-            print(f"FAIL checkindex seed={seed} violations={nv} cfg={cfg}",
-                  flush=True)
-            sys.exit(1)
-        shutil.rmtree(d, ignore_errors=True)
-        if (seed - SEED0 + 1) % 10 == 0:
-            print(f"seed {seed}: green", flush=True)
-    print(f"INVERT CAMPAIGN GREEN: seeds {SEED0}..{SEED0 + N_SEEDS - 1}",
-          flush=True)
-    spark.stop()
-
-
-if __name__ == "__main__":
-    main()
+    nv = verify_index(idx).count()
+    expect(n, "checkindex", not nv, lambda: f"violations={nv} cfg={cfg}")
+    return n

@@ -10,30 +10,23 @@ set against a from-scratch Python matcher over the same token stream
 (regex tokenize + stopword drop with PRE-stop positions). Catches both
 false alerts (verify too loose) and MISSED alerts (anchor presearch too
 aggressive — the classic percolator failure mode).
-
-Usage: python scripts/monitor_fuzz_campaign.py [n_seeds] [seed0]
 """
 from __future__ import annotations
 
-import os
 import random
 import re
-import sys
+from collections import Counter
 
 import numpy as np
 import pandas as pd
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
+from scripts.fuzz import expect
+from sparklucene.analysis import ENGLISH_STOP_WORDS
+from sparklucene.monitor import monitor_match
+from sparklucene.query import And, MatchAllDocs, Not, Or, Phrase, Term
 
-from sparklucene.analysis import ENGLISH_STOP_WORDS  # noqa: E402
-from sparklucene.monitor import monitor_match  # noqa: E402
-from sparklucene.query import (And, MatchAllDocs, Not, Or, Phrase,  # noqa: E402
-                               Term)
-from sparklucene.session import get_spark  # noqa: E402
-
-N_SEEDS = int(sys.argv[1]) if len(sys.argv) > 1 else 20
-SEED0 = int(sys.argv[2]) if len(sys.argv) > 2 else 130_000
+SEEDS = (20, 130_000)
+SPARK = True
 
 VOC = ["spark", "merge", "join", "scan", "filter", "window", "table",
        "hash", "batch", "vector", "the", "a", "fast", "slow",
@@ -92,40 +85,26 @@ def rand_query(rng: random.Random, depth: int = 0):
     return Not(kids[0], kids[1])
 
 
-def main() -> None:
-    spark = get_spark(app_name="monitor-fuzz", cores=8,
-                      shuffle_partitions=8)
-    spark.sparkContext.setLogLevel("ERROR")
-    for seed in range(SEED0, SEED0 + N_SEEDS):
-        rng = random.Random(seed)
-        queries = {f"q{i}": rand_query(rng)
-                   for i in range(rng.randint(3, 12))}
-        n = rng.choice([30, 100])
-        texts = [" ".join(rng.choice(VOC[:-1])
-                          for _ in range(rng.randint(0, 25)))
-                 for _ in range(n)]
-        pdf = pd.DataFrame({"doc_id": np.arange(n, dtype=np.int64),
-                            "text": texts})
-        docs = spark.createDataFrame(pdf).repartition(4)
-        got = {(r["doc_id"], r["query_id"]) for r in
-               monitor_match(docs, queries).collect()}
-        want = set()
-        for did, text in enumerate(texts):
-            kept = tokenize(text)
-            for qid, q in queries.items():
-                if py_match(q, kept):
-                    want.add((did, qid))
-        if got != want:
-            missed, extra = want - got, got - want
-            print(f"MONITOR FUZZ FAILURE seed={seed}: missed={missed} "
-                  f"extra={extra}\nqueries={queries}", flush=True)
-            sys.exit(1)
-        if (seed - SEED0 + 1) % 5 == 0:
-            print(f"seed {seed}: green ({len(want)} alerts)", flush=True)
-    print(f"MONITOR CAMPAIGN GREEN: seeds {SEED0}..{SEED0 + N_SEEDS - 1}",
-          flush=True)
-    spark.stop()
-
-
-if __name__ == "__main__":
-    main()
+def check(ctx, seed: int) -> Counter:
+    n_: Counter = Counter()
+    rng = random.Random(seed)
+    queries = {f"q{i}": rand_query(rng) for i in range(rng.randint(3, 12))}
+    n = rng.choice([30, 100])
+    texts = [" ".join(rng.choice(VOC[:-1])
+                      for _ in range(rng.randint(0, 25)))
+             for _ in range(n)]
+    pdf = pd.DataFrame({"doc_id": np.arange(n, dtype=np.int64),
+                        "text": texts})
+    docs = ctx.spark.createDataFrame(pdf).repartition(4)
+    got = {(r["doc_id"], r["query_id"]) for r in
+           monitor_match(docs, queries).collect()}
+    want = set()
+    for did, text in enumerate(texts):
+        kept = tokenize(text)
+        for qid, q in queries.items():
+            if py_match(q, kept):
+                want.add((did, qid))
+    expect(n_, "alerts", got == want,
+           lambda: f"missed={want - got} extra={got - want}\n"
+           f"queries={queries}")
+    return n_

@@ -16,25 +16,20 @@ Two parsers, two invariants:
   soups of terms, operators, quotes and parens (including unbalanced
   everything) must never raise and must parse deterministically; the
   pinned spec tolerates all malformed input.
-
-Usage: python scripts/parser_fuzz_campaign.py [n_seeds] [seed0]
 """
 from __future__ import annotations
 
-import os
 import random
-import sys
+from collections import Counter
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
+from scripts.fuzz import Mismatch, expect
+from sparklucene.analysis import ENGLISH_STOP_WORDS
+from sparklucene.query import (And, Fuzzy, MatchNoDocs, Not, Or, Phrase,
+                               Prefix, Query, Term, TermRange, Wildcard,
+                               parse, parse_simple, rewrite)
 
-from sparklucene.analysis import ENGLISH_STOP_WORDS  # noqa: E402
-from sparklucene.query import (And, Fuzzy, MatchNoDocs, Not, Or,  # noqa: E402
-                               Phrase, Prefix, Query, Term, TermRange,
-                               Wildcard, parse, parse_simple, rewrite)
-
-N_SEEDS = int(sys.argv[1]) if len(sys.argv) > 1 else 300
-SEED0 = int(sys.argv[2]) if len(sys.argv) > 2 else 190_000
+SEEDS = (300, 190_000)
+SPARK = False
 
 WORDS = ["fast", "slow", "join", "merge", "hash", "scan", "key", "data",
          "index", "block", "codec", "shuffle", "gamma", "zz9"]
@@ -140,38 +135,23 @@ def gen_query(rng: random.Random):
 SOUP = list('ab +|()-"~*?:^[]{} ') + ["fast", "the", "TO", '"x y"', "(("]
 
 
-def main() -> None:
-    n_classic = n_simple = 0
-    for seed in range(SEED0, SEED0 + N_SEEDS):
-        rng = random.Random(seed)
-        for _ in range(10):
-            s, want = gen_query(rng)
-            got = parse(s)
-            if got != want:
-                print(f"FAIL classic seed={seed} s={s!r}\n got={got!r}\n"
-                      f" want={want!r}", flush=True)
-                sys.exit(1)
-            n_classic += 1
-        for _ in range(20):
-            soup = "".join(rng.choice(SOUP)
-                           for _ in range(rng.randint(0, 25)))
-            op = rng.choice(["or", "and"])
-            try:
-                q1 = parse_simple(soup, default_op=op)
-                q2 = parse_simple(soup, default_op=op)
-            except Exception as exc:                  # leniency violated
-                print(f"FAIL simple seed={seed} soup={soup!r}: "
-                      f"{type(exc).__name__}: {exc}", flush=True)
-                sys.exit(1)
-            assert isinstance(q1, Query) and q1 == q2, f"nondet: {soup!r}"
-            n_simple += 1
-        if (seed - SEED0 + 1) % 50 == 0:
-            print(f"seed {seed}: {n_classic} classic + {n_simple} "
-                  f"leniency checks green", flush=True)
-    print(f"PARSER CAMPAIGN GREEN: seeds {SEED0}..{SEED0 + N_SEEDS - 1} — "
-          f"{n_classic} classic generative + {n_simple} simple-leniency "
-          f"checks", flush=True)
-
-
-if __name__ == "__main__":
-    main()
+def check(ctx, seed: int) -> Counter:
+    n: Counter = Counter()
+    rng = random.Random(seed)
+    for _ in range(10):
+        s, want = gen_query(rng)
+        got = parse(s)
+        expect(n, "classic", got == want,
+               lambda: f"s={s!r}\n got={got!r}\n want={want!r}")
+    for _ in range(20):
+        soup = "".join(rng.choice(SOUP) for _ in range(rng.randint(0, 25)))
+        op = rng.choice(["or", "and"])
+        try:
+            q1 = parse_simple(soup, default_op=op)
+            q2 = parse_simple(soup, default_op=op)
+        except Exception as exc:                      # leniency violated
+            raise Mismatch("simple", f"soup={soup!r}: "
+                           f"{type(exc).__name__}: {exc}") from exc
+        expect(n, "simple", isinstance(q1, Query) and q1 == q2,
+               lambda: f"nondeterministic: {soup!r}")
+    return n

@@ -28,35 +28,28 @@ Checks per seed, every one bit-exact in mode="f64":
     triples of a sampled term == the mirror's raw stream.
   - PayloadScore composes as an ordinary SHOULD clause:
     Or(payload, term) == per-doc float32 sum of the clause scores.
-
-Usage: python scripts/payloads_fuzz_campaign.py [n_seeds] [seed0]
 """
 from __future__ import annotations
 
 import os
 import random
 import re
-import shutil
-import sys
+from collections import Counter
 
 import numpy as np
 import pandas as pd
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
+from scripts.fuzz import expect
+from sparklucene import bm25
+from sparklucene.analysis import ENGLISH_STOP_WORDS, AnalyzerConfig
+from sparklucene.build import build_index
+from sparklucene.norms import quantize_length
+from sparklucene.oracle import build_oracle_index
+from sparklucene.query import Or, PayloadCheck, PayloadScore, Term
+from sparklucene.search import Index, search, term_payloads
 
-from sparklucene import bm25  # noqa: E402
-from sparklucene.analysis import ENGLISH_STOP_WORDS, AnalyzerConfig  # noqa: E402
-from sparklucene.build import build_index  # noqa: E402
-from sparklucene.norms import quantize_length  # noqa: E402
-from sparklucene.oracle import build_oracle_index  # noqa: E402
-from sparklucene.query import Or, PayloadCheck, PayloadScore, Term  # noqa: E402
-from sparklucene.search import Index, search, term_payloads  # noqa: E402
-from sparklucene.session import get_spark  # noqa: E402
-
-N_SEEDS = int(sys.argv[1]) if len(sys.argv) > 1 else 25
-SEED0 = int(sys.argv[2]) if len(sys.argv) > 2 else 170_000
-SCRATCH = os.path.join(REPO, ".cache", "payload-fuzz")
+SEEDS = (25, 170_000)
+SPARK = True
 
 #: base vocabulary — word|N suffixes are attached by the generator
 VOC = ["the", "a", "of", "fast", "slow", "join", "merge", "hash", "scan",
@@ -163,129 +156,97 @@ def expected_topk(stream: pd.DataFrame, dlq: np.ndarray, doc_count: int,
             .head(k).reset_index(drop=True))
 
 
-def fail(seed: int, what: str, detail: str) -> None:
-    print(f"FAIL seed={seed} {what}: {detail}", flush=True)
-    sys.exit(1)
+def _ranked(df: pd.DataFrame) -> pd.DataFrame:
+    return (df.sort_values(["score", "doc_id"], ascending=[False, True])
+            .reset_index(drop=True))
 
 
-def check_engine(idx, seed: int, stream: pd.DataFrame, dlq: np.ndarray,
-                 doc_count: int, sum_dl: int, rng: random.Random) -> int:
-    n_checks = 0
+def check_engine(n: Counter, idx, stream: pd.DataFrame, dlq: np.ndarray,
+                 doc_count: int, sum_dl: int, rng: random.Random) -> None:
     terms = stream["term"].value_counts()
     if terms.empty:
-        return 0
+        return
     picks = rng.sample(list(terms.index), k=min(3, len(terms)))
     for term in picks:
-        for fn in ("max", "min", "avg", "sum"):
-            for include in (True, False):
-                q = PayloadScore(term, fn=fn, include_span_score=include)
-                got = (search(idx, q, k=10, mode="f64").toPandas()
-                       .sort_values(["score", "doc_id"],
-                                    ascending=[False, True])
-                       .reset_index(drop=True))
-                want = expected_topk(stream, dlq, doc_count, sum_dl, q, 10)
-                if got["doc_id"].tolist() != want["doc_id"].tolist() or \
-                        got["score"].tolist() != want["score"].tolist():
-                    fail(seed, f"PayloadScore({term},{fn},inc={include})",
-                         f"got={got.values.tolist()} "
-                         f"want={want.values.tolist()}")
-                n_checks += 1
+        queries = [PayloadScore(term, fn=fn, include_span_score=include)
+                   for fn in ("max", "min", "avg", "sum")
+                   for include in (True, False)]
         # PayloadCheck with a byte that exists and one that may not
         pays = stream.loc[stream["term"] == term, "pay"]
-        for b in {int(pays.iloc[0]), rng.randint(0, 255)}:
-            q = PayloadCheck(term, payload=b)
-            got = (search(idx, q, k=10, mode="f64").toPandas()
-                   .sort_values(["score", "doc_id"],
-                                ascending=[False, True])
-                   .reset_index(drop=True))
+        queries += [PayloadCheck(term, payload=b)
+                    for b in {int(pays.iloc[0]), rng.randint(0, 255)}]
+        for q in queries:
+            got = _ranked(search(idx, q, k=10, mode="f64").toPandas())
             want = expected_topk(stream, dlq, doc_count, sum_dl, q, 10)
-            if got["doc_id"].tolist() != want["doc_id"].tolist() or \
-                    got["score"].tolist() != want["score"].tolist():
-                fail(seed, f"PayloadCheck({term},{b})",
-                     f"got={got.values.tolist()} "
-                     f"want={want.values.tolist()}")
-            n_checks += 1
+            expect(n, type(q).__name__,
+                   got["doc_id"].tolist() == want["doc_id"].tolist()
+                   and got["score"].tolist() == want["score"].tolist(),
+                   lambda: f"{q!r} got={got.values.tolist()} "
+                   f"want={want.values.tolist()}")
     # codec round-trip: decoded (doc, pos, pay) == mirror stream
     term = picks[0]
     got = (term_payloads(idx, term).toPandas()
            .sort_values(["doc_id", "pos"]).reset_index(drop=True))
     want = (stream[stream["term"] == term][["doc_id", "pos", "pay"]]
             .sort_values(["doc_id", "pos"]).reset_index(drop=True))
-    if got["doc_id"].tolist() != want["doc_id"].tolist() or \
-            got["pos"].tolist() != want["pos"].tolist() or \
-            [int(x) for x in got["payload"]] != [int(x) for x in want["pay"]]:
-        fail(seed, f"term_payloads({term})",
-             f"got={got.values.tolist()} want={want.values.tolist()}")
-    n_checks += 1
+    expect(n, "term_payloads",
+           got["doc_id"].tolist() == want["doc_id"].tolist()
+           and got["pos"].tolist() == want["pos"].tolist()
+           and [int(x) for x in got["payload"]]
+           == [int(x) for x in want["pay"]],
+           lambda: f"{term} got={got.values.tolist()} "
+           f"want={want.values.tolist()}")
     # SHOULD composition: Or(payload, term) == float32 sum of clauses
     other = picks[-1]
     pq = PayloadScore(term, fn="avg")
-    full = search(idx, Or((pq, Term(other))), k=None,
-                  mode="f64").toPandas()
+    full = search(idx, Or((pq, Term(other))), k=None, mode="f64").toPandas()
     a = search(idx, pq, k=None, mode="f64").toPandas()
     b = search(idx, Term(other), k=None, mode="f64").toPandas()
     comb = pd.concat([a, b]).groupby("doc_id")["score"].agg(
         lambda s: float(np.float32(np.float32(s.iloc[0])
                                    + np.float32(s.iloc[1]))
                         if len(s) == 2 else s.iloc[0]))
-    if sorted(full["doc_id"]) != sorted(comb.index):
-        fail(seed, "Or(payload, term) doc set", "union mismatch")
-    got_s = full.set_index("doc_id")["score"].sort_index().to_numpy()
-    if not np.allclose(got_s, comb.sort_index().to_numpy(),
-                       rtol=1e-6, atol=0):
-        fail(seed, "Or(payload, term) scores", "sum mismatch")
-    return n_checks + 1
+    same_docs = sorted(full["doc_id"]) == sorted(comb.index)
+    expect(n, "Or(payload, term)", same_docs and np.allclose(
+        full.set_index("doc_id")["score"].sort_index().to_numpy(),
+        comb.sort_index().to_numpy(), rtol=1e-6, atol=0),
+        "sum mismatch" if same_docs else "union mismatch")
 
 
-def main() -> None:
-    spark = get_spark(app_name="payload-fuzz", cores=8,
-                      shuffle_partitions=8)
-    spark.sparkContext.setLogLevel("ERROR")
-    total = 0
-    for seed in range(SEED0, SEED0 + N_SEEDS):
-        rng = random.Random(seed)
-        d = os.path.join(SCRATCH, str(seed))
-        shutil.rmtree(d, ignore_errors=True)
-        if rng.random() < 0.5:
-            # ---- mode A: position_mix over the standard analyzer ----
-            sw = rng.choice([ENGLISH_STOP_WORDS, frozenset(),
-                             frozenset({"the", "a", "of"})])
-            pdf = rand_corpus(rng, delim=None)
-            corpus = spark.createDataFrame(pdf)
-            build_index(spark, corpus, d, drange_size=rng.choice([16, 64]),
-                        stopwords=sw, payloads="position_mix")
-            oidx = build_oracle_index(pdf, stopwords=sw)
-            stream = oidx.tp.copy()
-            lens = stream["term"].str.len().to_numpy(np.int64)
-            stream["pay"] = (1 + ((stream["pos"].to_numpy(np.int64) * 31
-                                   + lens) % 8)).astype(np.int64)
-            dl_by_doc = np.zeros(len(pdf), dtype=np.int64)
-            dl_by_doc[oidx.doc_ids] = oidx.dl
-            dlq = quantize_length(dl_by_doc)
-            doc_count, sum_dl = oidx.doc_count, oidx.sum_dl
-        else:
-            # ---- mode B: delimited in-band payloads, whitespace ----
-            delim = rng.choice(["|", "^"])
-            sw = rng.choice([frozenset(), frozenset({"the", "beta"})])
-            pdf = rand_corpus(rng, delim=delim)
-            corpus = spark.createDataFrame(pdf)
-            ana = AnalyzerConfig(tokenizer="whitespace", stopwords=sw)
-            build_index(spark, corpus, d, drange_size=rng.choice([16, 64]),
-                        analyzer=ana, payloads=f"delimited:{delim}")
-            stream = mirror_stream_delimited(list(pdf["content"]), sw,
-                                             delim)
-            dl = mirror_doclens_delimited(list(pdf["content"]), sw)
-            dlq = quantize_length(dl)
-            doc_count, sum_dl = int((dl >= 1).sum()), int(dl.sum())
-        idx = Index(spark, d)
-        total += check_engine(idx, seed, stream, dlq, doc_count, sum_dl,
-                              rng)
-        shutil.rmtree(d, ignore_errors=True)
-        if (seed - SEED0 + 1) % 5 == 0:
-            print(f"seed {seed}: {total} checks green", flush=True)
-    print(f"PAYLOAD CAMPAIGN GREEN: seeds {SEED0}..{SEED0 + N_SEEDS - 1} "
-          f"— {total} checks", flush=True)
-
-
-if __name__ == "__main__":
-    main()
+def check(ctx, seed: int) -> Counter:
+    spark = ctx.spark
+    n: Counter = Counter()
+    rng = random.Random(seed)
+    d = os.path.join(ctx.tmp, "idx")
+    if rng.random() < 0.5:
+        # ---- mode A: position_mix over the standard analyzer ----
+        sw = rng.choice([ENGLISH_STOP_WORDS, frozenset(),
+                         frozenset({"the", "a", "of"})])
+        pdf = rand_corpus(rng, delim=None)
+        corpus = spark.createDataFrame(pdf)
+        build_index(spark, corpus, d, drange_size=rng.choice([16, 64]),
+                    stopwords=sw, payloads="position_mix")
+        oidx = build_oracle_index(pdf, stopwords=sw)
+        stream = oidx.tp.copy()
+        lens = stream["term"].str.len().to_numpy(np.int64)
+        stream["pay"] = (1 + ((stream["pos"].to_numpy(np.int64) * 31
+                               + lens) % 8)).astype(np.int64)
+        dl_by_doc = np.zeros(len(pdf), dtype=np.int64)
+        dl_by_doc[oidx.doc_ids] = oidx.dl
+        dlq = quantize_length(dl_by_doc)
+        doc_count, sum_dl = oidx.doc_count, oidx.sum_dl
+    else:
+        # ---- mode B: delimited in-band payloads, whitespace ----
+        delim = rng.choice(["|", "^"])
+        sw = rng.choice([frozenset(), frozenset({"the", "beta"})])
+        pdf = rand_corpus(rng, delim=delim)
+        corpus = spark.createDataFrame(pdf)
+        ana = AnalyzerConfig(tokenizer="whitespace", stopwords=sw)
+        build_index(spark, corpus, d, drange_size=rng.choice([16, 64]),
+                    analyzer=ana, payloads=f"delimited:{delim}")
+        stream = mirror_stream_delimited(list(pdf["content"]), sw, delim)
+        dl = mirror_doclens_delimited(list(pdf["content"]), sw)
+        dlq = quantize_length(dl)
+        doc_count, sum_dl = int((dl >= 1).sum()), int(dl.sum())
+    check_engine(n, Index(spark, d), stream, dlq, doc_count, sum_dl, rng)
+    return n

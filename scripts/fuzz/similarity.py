@@ -19,33 +19,27 @@ independent brute-force oracle under:
 Every check demands identical doc ids AND bit-equal float32 scores.
 Pure pandas/numpy (the scorer runs in-process on oracle-derived cells
 — the same harness as tests/test_scorer.py), so seeds are cheap.
-
-Usage: python scripts/similarity_fuzz_campaign.py [n_seeds] [seed0]
 """
 from __future__ import annotations
 
-import os
 import random
-import sys
+from collections import Counter
 
 import numpy as np
 import pandas as pd
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
+from scripts.fuzz import expect
+from sparklucene.analysis import ENGLISH_STOP_WORDS
+from sparklucene.driver_queries import (_dfr_inl2_similarity,
+                                        _lm_dirichlet_similarity,
+                                        _lm_jelinek_mercer_similarity)
+from sparklucene.oracle import build_oracle_index, search_oracle
+from sparklucene.query import (And, DisMax, MatchNoDocs, Not, Or, Term,
+                               prune_missing, rewrite)
+from tests.test_scorer import _scorer_from_oracle
 
-from sparklucene.analysis import ENGLISH_STOP_WORDS  # noqa: E402
-from sparklucene.driver_queries import (  # noqa: E402
-    _dfr_inl2_similarity, _lm_dirichlet_similarity,
-    _lm_jelinek_mercer_similarity)
-from sparklucene.oracle import build_oracle_index, search_oracle  # noqa: E402
-from sparklucene.query import (And, DisMax, MatchNoDocs, Not, Or,  # noqa: E402
-                               Term, prune_missing, rewrite)
-
-from tests.test_scorer import _scorer_from_oracle  # noqa: E402
-
-N_SEEDS = int(sys.argv[1]) if len(sys.argv) > 1 else 100
-SEED0 = int(sys.argv[2]) if len(sys.argv) > 2 else 180_000
+SEEDS = (100, 180_000)
+SPARK = False
 
 VOC = ["the", "a", "of", "fast", "slow", "join", "merge", "hash", "scan",
        "key", "data", "index", "block", "term", "beta", "gamma", "zz",
@@ -97,45 +91,29 @@ def rand_tree(rng: random.Random, depth: int = 0):
     return DisMax(kids, tiebreak=rng.choice([0.0, 0.1, 0.5]))
 
 
-def fail(seed: int, q, detail: str) -> None:
-    print(f"FAIL seed={seed} q={q!r}: {detail}", flush=True)
-    sys.exit(1)
-
-
-def main() -> None:
-    total = 0
-    for seed in range(SEED0, SEED0 + N_SEEDS):
-        rng = random.Random(seed)
-        sw = rng.choice([ENGLISH_STOP_WORDS, frozenset(),
-                         frozenset({"the", "a", "of"})])
-        oidx = build_oracle_index(rand_corpus(rng), stopwords=sw)
-        present = set(oidx.tf["term"].unique())
-        sims = [("lm_dirichlet", _lm_dirichlet_similarity),
-                ("lm_jm", _lm_jelinek_mercer_similarity),
-                ("dfr_inl2", _dfr_inl2_similarity),
-                (f"dirichlet_mu", make_dirichlet(
-                    rng.choice([10.0, 500.0, 1e5]))),
-                (f"jm_lam", make_jm(rng.choice([0.3, 0.7, 0.9])))]
-        for _ in range(8):
-            q = prune_missing(rewrite(rand_tree(rng)), present)
-            if isinstance(q, MatchNoDocs):
-                continue
-            for name, fn in sims:
-                sc = _scorer_from_oracle(oidx, fn, prune=True)
-                for k in (3, 10):
-                    d, v = sc.topk(q, k)
-                    want = search_oracle(oidx, q, k, mode=fn)
-                    if d.tolist() != want["doc_id"].tolist() or \
-                            not (v == want["score"].to_numpy()).all():
-                        fail(seed, q, f"{name} k={k}: engine "
-                             f"({d.tolist()}, {v.tolist()}) != oracle "
-                             f"{want.values.tolist()}")
-                    total += 1
-        if (seed - SEED0 + 1) % 20 == 0:
-            print(f"seed {seed}: {total} checks green", flush=True)
-    print(f"SIMILARITY CAMPAIGN GREEN: seeds {SEED0}..{SEED0 + N_SEEDS - 1}"
-          f" — {total} checks", flush=True)
-
-
-if __name__ == "__main__":
-    main()
+def check(ctx, seed: int) -> Counter:
+    n: Counter = Counter()
+    rng = random.Random(seed)
+    sw = rng.choice([ENGLISH_STOP_WORDS, frozenset(),
+                     frozenset({"the", "a", "of"})])
+    oidx = build_oracle_index(rand_corpus(rng), stopwords=sw)
+    present = set(oidx.tf["term"].unique())
+    sims = [("lm_dirichlet", _lm_dirichlet_similarity),
+            ("lm_jm", _lm_jelinek_mercer_similarity),
+            ("dfr_inl2", _dfr_inl2_similarity),
+            ("dirichlet_mu", make_dirichlet(rng.choice([10.0, 500.0, 1e5]))),
+            ("jm_lam", make_jm(rng.choice([0.3, 0.7, 0.9])))]
+    for _ in range(8):
+        q = prune_missing(rewrite(rand_tree(rng)), present)
+        if isinstance(q, MatchNoDocs):
+            continue
+        for name, fn in sims:
+            sc = _scorer_from_oracle(oidx, fn, prune=True)
+            for k in (3, 10):
+                d, v = sc.topk(q, k)
+                want = search_oracle(oidx, q, k, mode=fn)
+                expect(n, name, d.tolist() == want["doc_id"].tolist()
+                       and (v == want["score"].to_numpy()).all(),
+                       lambda: f"k={k} q={q!r}: engine ({d.tolist()}, "
+                       f"{v.tolist()}) != oracle {want.values.tolist()}")
+    return n

@@ -8,31 +8,25 @@ hit the edge cases: empty docs, docs shorter than the n-gram/chunk size,
 heavy cross-doc repetition (boilerplate + duplicated spans), strata
 missing from allowlists, PII-bearing text, blank lines, exact-duplicate
 documents, and ragged chunk tails.
-
-Usage: python scripts/textops_fuzz_campaign.py [n_seeds] [seed0]
 """
 from __future__ import annotations
 
 import hashlib
 import math
-import os
 import random
 import re
-import sys
 from collections import Counter, defaultdict
 
 import numpy as np
 import pandas as pd
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
+from scripts.fuzz import expect
+from sparklucene import textops as T
+from sparklucene.analysis import ENGLISH_STOP_WORDS
 
-from sparklucene.analysis import ENGLISH_STOP_WORDS  # noqa: E402
-from sparklucene.session import get_spark  # noqa: E402
-from sparklucene import textops as T  # noqa: E402
+SEEDS = (20, 31_000)
+SPARK = True
 
-N_SEEDS = int(sys.argv[1]) if len(sys.argv) > 1 else 20
-SEED0 = int(sys.argv[2]) if len(sys.argv) > 2 else 31_000
 
 P61 = 2305843009213693951
 TOKEN_RE = re.compile(r"[a-z0-9_]+")
@@ -123,17 +117,13 @@ def gen_corpus(rng: random.Random) -> pd.DataFrame:
     return df
 
 
-def check(name: str, cond: bool, detail: str, fails: list) -> None:
-    if not cond:
-        fails.append(f"{name}: {detail}")
-
-
-def run_seed(spark, seed: int) -> list[str]:
+def check(ctx, seed: int) -> Counter:
+    spark = ctx.spark
+    n: Counter = Counter()
     rng = random.Random(seed)
     pdf = gen_corpus(rng)
     docs = spark.createDataFrame(pdf[["doc_id", "text", "lang", "source",
                                       "url", "n_chars"]])
-    fails: list[str] = []
     by_id = dict(zip(pdf.doc_id, pdf.text))
 
     # ---- token_stats ----
@@ -143,9 +133,9 @@ def run_seed(spark, seed: int) -> list[str]:
         exp = (len(WS_RE.findall(text)), len(tk), len(set(tk)),
                sum(math.ceil(len(t) / 4) for t in tk))
         g = got.loc[did]
-        check("token_stats",
-              (g.n_ws_tokens, g.n_tokens, g.n_terms, g.n_subwords) == exp,
-              f"doc {did}: {tuple(g)} != {exp}", fails)
+        expect(n, "token_stats",
+               (g.n_ws_tokens, g.n_tokens, g.n_terms, g.n_subwords) == exp,
+               f"doc {did}: {tuple(g)} != {exp}")
 
     # ---- quality_score ----
     got = T.quality_score(docs).toPandas().set_index("doc_id").sort_index()
@@ -163,7 +153,7 @@ def run_seed(spark, seed: int) -> list[str]:
                 and np.isclose(g.mean_token_len, n_tok_chars / len(tk))
         if text:
             ok = ok and np.isclose(g.alpha_ratio, n_alpha / len(text))
-        check("quality_score", ok, f"doc {did}", fails)
+        expect(n, "quality_score", ok, f"doc {did}")
 
     # ---- language_id ----
     got = T.language_id(docs).toPandas().set_index("doc_id").sort_index()
@@ -178,7 +168,7 @@ def run_seed(spark, seed: int) -> list[str]:
         gp = None if pd.isna(g.pred_lang) else g.pred_lang
         ok = gp == pred and all(
             g[f"score_{lg}"] == scores[lg] for lg in LANGS)
-        check("language_id", ok, f"doc {did}: {g.pred_lang} != {pred}", fails)
+        expect(n, "language_id", ok, f"doc {did}: {g.pred_lang} != {pred}")
 
     # ---- fingerprint ----
     sh = rng.choice([2, 3, 4])
@@ -190,8 +180,8 @@ def run_seed(spark, seed: int) -> list[str]:
         for g0 in gr:
             fp = (fp + hash60(g0) % P61) % P61
         g = got.loc[did]
-        check("fingerprint", g.n_shingles == len(gr) and g.fingerprint == fp,
-              f"doc {did} shingle={sh}", fails)
+        expect(n, "fingerprint", g.n_shingles == len(gr) and g.fingerprint == fp,
+               f"doc {did} shingle={sh}")
 
     # ---- duplicate_ngram_fraction ----
     nn = rng.choice([2, 3, 4])
@@ -201,10 +191,10 @@ def run_seed(spark, seed: int) -> list[str]:
         gr = grams_of(toks_of(text), nn)
         frac = (len(gr) - len(set(gr))) / len(gr) if gr else 0.0
         g = got.loc[did]
-        check("dup_ngram_frac",
-              g.n_ngrams == len(gr) and g.n_distinct == len(set(gr))
-              and np.isclose(g.dup_ngram_frac, frac),
-              f"doc {did} n={nn}", fails)
+        expect(n, "dup_ngram_frac",
+               g.n_ngrams == len(gr) and g.n_distinct == len(set(gr))
+               and np.isclose(g.dup_ngram_frac, frac),
+               f"doc {did} n={nn}")
 
     # ---- unigram_logppl (+ quality_filter) ----
     got = T.unigram_logppl(docs).toPandas().set_index("doc_id").sort_index()
@@ -216,16 +206,16 @@ def run_seed(spark, seed: int) -> list[str]:
     for did, text in by_id.items():
         tk = toks_of(text)
         if not tk:
-            check("unigram_logppl", did not in got.index,
-                  f"empty doc {did} present", fails)
+            expect(n, "unigram_logppl", did not in got.index,
+                   f"empty doc {did} present")
             continue
         h = sum(-math.log(cf[t] / total) for t in tk)
         lp = np.float64(np.float32(h / len(tk)))
         mirror_lp[did] = float(lp)
         g = got.loc[did]
-        check("unigram_logppl",
-              g.dl == len(tk) and np.isclose(g.logppl, lp, rtol=1e-6),
-              f"doc {did}: {g.logppl} != {lp}", fails)
+        expect(n, "unigram_logppl",
+               g.dl == len(tk) and np.isclose(g.logppl, lp, rtol=1e-6),
+               f"doc {did}: {g.logppl} != {lp}")
     # quality_filter with a band chosen from the mirror so it bites
     if mirror_lp:
         vals = sorted(mirror_lp.values())
@@ -250,9 +240,8 @@ def run_seed(spark, seed: int) -> list[str]:
             if (sha_keeper[s] == did and len(tk) >= min_dl
                     and lo <= mirror_lp[did] <= hi and sr >= min_sr):
                 exp.add(did)
-        check("quality_filter", surv == exp,
-              f"survivors {sorted(surv)^set(exp) if False else sorted(surv ^ exp)}",
-              fails)
+        expect(n, "quality_filter", surv == exp,
+               f"survivors {sorted(surv)^set(exp) if False else sorted(surv ^ exp)}")
 
     # ---- contamination_scores ----
     bench_pdf = pdf.sample(n=min(5, len(pdf)), random_state=seed)
@@ -266,16 +255,15 @@ def run_seed(spark, seed: int) -> list[str]:
     for did, text in by_id.items():
         gr = set(grams_of(toks_of(text), cn))
         if not gr:
-            check("contamination", did not in got.index,
-                  f"gram-less doc {did} present", fails)
+            expect(n, "contamination", did not in got.index,
+                   f"gram-less doc {did} present")
             continue
         hits = len(gr & bench_grams)
         g = got.loc[did]
-        check("contamination",
-              g.n_grams == len(gr) and g.n_hits == hits
-              and np.isclose(g.contamination, hits / len(gr)),
-              f"doc {did}: ({g.n_grams},{g.n_hits}) != ({len(gr)},{hits})",
-              fails)
+        expect(n, "contamination",
+               g.n_grams == len(gr) and g.n_hits == hits
+               and np.isclose(g.contamination, hits / len(gr)),
+               f"doc {did}: ({g.n_grams},{g.n_hits}) != ({len(gr)},{hits})")
 
     # ---- chunk_overlap ----
     size = rng.randint(2, 12)
@@ -286,8 +274,8 @@ def run_seed(spark, seed: int) -> list[str]:
     for did, text in by_id.items():
         tk = toks_of(text)
         if not tk:
-            check("chunk_overlap", did not in got_g,
-                  f"empty doc {did} chunked", fails)
+            expect(n, "chunk_overlap", did not in got_g,
+                   f"empty doc {did} chunked")
             continue
         last = max(math.ceil((len(tk) - size) / stride), 0) * stride
         starts = list(range(0, last + 1, stride))
@@ -299,8 +287,8 @@ def run_seed(spark, seed: int) -> list[str]:
                 ok = ok and row.start_token == st \
                     and row.n_tokens == len(ch) \
                     and row.chunk_text == " ".join(ch)
-        check("chunk_overlap", bool(ok),
-              f"doc {did} size={size} stride={stride}", fails)
+        expect(n, "chunk_overlap", bool(ok),
+               f"doc {did} size={size} stride={stride}")
 
     # ---- pack_sequences ----
     budget = rng.randint(3, 40)
@@ -316,8 +304,8 @@ def run_seed(spark, seed: int) -> list[str]:
               and g.first_seq == off // budget)
         if cost > 0:
             ok = ok and g.last_seq == (off + cost - 1) // budget
-        check("pack_sequences", bool(ok),
-              f"doc {did}: off {g.offset} != {off}", fails)
+        expect(n, "pack_sequences", bool(ok),
+               f"doc {did}: off {g.offset} != {off}")
         off += cost
 
     # ---- deterministic / stratified / mixture sampling ----
@@ -328,8 +316,8 @@ def run_seed(spark, seed: int) -> list[str]:
     thr = "g" if frac >= 1.0 else format(max(int(frac * 16 ** 8), 0), "08x")
     exp_ids = {did for did in by_id
                if hashlib.md5((salt + str(did)).encode()).hexdigest()[:8] < thr}
-    check("deterministic_sample", got_ids == exp_ids,
-          f"{sorted(got_ids ^ exp_ids)}", fails)
+    expect(n, "deterministic_sample", got_ids == exp_ids,
+           f"{sorted(got_ids ^ exp_ids)}")
 
     fracs = {lg: rng.choice([0.0, 0.5, 1.0]) for lg in rng.sample(LANGS, 3)}
     got_ids = set(T.stratified_sample(docs, fracs, salt=salt)
@@ -341,8 +329,8 @@ def run_seed(spark, seed: int) -> list[str]:
                  else format(max(int(fracs[lang] * 16 ** 8), 0), "08x"))
             if hashlib.md5((salt + str(did)).encode()).hexdigest()[:8] < t:
                 exp_ids.add(did)
-    check("stratified_sample", got_ids == exp_ids,
-          f"{sorted(got_ids ^ exp_ids)}", fails)
+    expect(n, "stratified_sample", got_ids == exp_ids,
+           f"{sorted(got_ids ^ exp_ids)}")
 
     weights = {lg: rng.randint(1, 5) for lg in rng.sample(LANGS + ["xx"], 2)}
     tb = rng.randint(10, 400)
@@ -362,8 +350,8 @@ def run_seed(spark, seed: int) -> list[str]:
         ki = int(hashlib.md5((salt + str(did)).encode()).hexdigest()[:8], 16)
         if ki < t:
             exp_rows.add(did)
-    check("mixture_sample", set(got.doc_id) == exp_rows,
-          f"{sorted(set(got.doc_id) ^ exp_rows)}", fails)
+    expect(n, "mixture_sample", set(got.doc_id) == exp_rows,
+           f"{sorted(set(got.doc_id) ^ exp_rows)}")
 
     # ---- remove_boilerplate_lines ----
     md = rng.choice([2, 3])
@@ -382,11 +370,11 @@ def run_seed(spark, seed: int) -> list[str]:
         kept = [ln for ln in lines
                 if not (ln.strip() and (bkt, ln.strip()) in boiler_keys)]
         g = got.loc[did]
-        check("boilerplate",
-              g.n_lines == len(lines)
-              and g.n_removed == len(lines) - len(kept)
-              and g.clean_text == "\n".join(kept),
-              f"doc {did}", fails)
+        expect(n, "boilerplate",
+               g.n_lines == len(lines)
+               and g.n_removed == len(lines) - len(kept)
+               and g.clean_text == "\n".join(kept),
+               f"doc {did}")
 
     # ---- remove_duplicate_spans ----
     dn = rng.choice([2, 3, 5])
@@ -405,10 +393,10 @@ def run_seed(spark, seed: int) -> list[str]:
                 covered.update(range(i, i + dn))
         kept = [t for i, t in enumerate(tk) if i not in covered]
         g = got.loc[did]
-        check("dup_spans",
-              g.n_tokens == len(tk) and g.n_removed == len(covered)
-              and g.clean_text == " ".join(kept),
-              f"doc {did} n={dn}", fails)
+        expect(n, "dup_spans",
+               g.n_tokens == len(tk) and g.n_removed == len(covered)
+               and g.clean_text == " ".join(kept),
+               f"doc {did} n={dn}")
 
     # ---- pii_scan ----
     got = T.pii_scan(docs).toPandas().set_index("doc_id").sort_index()
@@ -424,7 +412,7 @@ def run_seed(spark, seed: int) -> list[str]:
         # they reconcile with the emitted redaction tokens
         ok = (g.n_emails == len(em) and g.n_ipv4 == len(ip)
               and g.n_phones == len(ph) and g.redacted == red)
-        check("pii_scan", bool(ok), f"doc {did}", fails)
+        expect(n, "pii_scan", bool(ok), f"doc {did}")
 
     # ---- url_blocklist_filter ----
     bl = ("bad0.com", "bad1.com")
@@ -436,9 +424,9 @@ def run_seed(spark, seed: int) -> list[str]:
         host = m.group(1).lower() if m else ""
         exp = any(host == d or host.endswith("." + d) for d in bl)
         g = got.loc[did]
-        check("url_blocklist",
-              g.domain == host and bool(g.blocked) == exp,
-              f"doc {did}: {g.domain}/{g.blocked} != {host}/{exp}", fails)
+        expect(n, "url_blocklist",
+               g.domain == host and bool(g.blocked) == exp,
+               f"doc {did}: {g.domain}/{g.blocked} != {host}/{exp}")
 
     # ---- domain_cap_sample ----
     cap = rng.randint(1, 6)
@@ -451,8 +439,8 @@ def run_seed(spark, seed: int) -> list[str]:
             key=lambda d: (hashlib.md5(f"{csalt}:{d}".encode()).hexdigest(),
                            d))
         exp_keep.update(ranked[:cap])
-    check("domain_cap", set(got.doc_id) == exp_keep,
-          f"{sorted(set(got.doc_id) ^ exp_keep)}", fails)
+    expect(n, "domain_cap", set(got.doc_id) == exp_keep,
+           f"{sorted(set(got.doc_id) ^ exp_keep)}")
 
     # ---- url_blocklist_filter_table (round-5 table form: per-row equal
     # to the same independent mirror as the expression form) ----
@@ -476,9 +464,9 @@ def run_seed(spark, seed: int) -> list[str]:
         host = m.group(1).lower() if m else ""
         exp = any(host == d or host.endswith("." + d) for d in tbl_bl)
         g = got.loc[did]
-        check("url_blocklist_table",
-              g.domain == host and bool(g.blocked) == exp,
-              f"doc {did}: {g.domain}/{g.blocked} != {host}/{exp}", fails)
+        expect(n, "url_blocklist_table",
+               g.domain == host and bool(g.blocked) == exp,
+               f"doc {did}: {g.domain}/{g.blocked} != {host}/{exp}")
 
     # ---- contamination_scores_bloom (round-5: Bloom prefilter must be
     # invisible in the result at ANY fp_rate — exact verify) ----
@@ -495,32 +483,14 @@ def run_seed(spark, seed: int) -> list[str]:
     for did, text in by_id.items():
         gset = set(grams_of(toks_of(text), cn))
         if not gset:
-            check("bloom_contam", did not in got.index,
-                  f"doc {did} gramless but present", fails)
+            expect(n, "bloom_contam", did not in got.index,
+                   f"doc {did} gramless but present")
             continue
         nh = len(gset & bench_grams)
         g = got.loc[did]
-        check("bloom_contam",
-              g.n_grams == len(gset) and g.n_hits == nh
-              and g.contamination == nh / len(gset),
-              f"doc {did} fp={fp} n={cn}", fails)
+        expect(n, "bloom_contam",
+               g.n_grams == len(gset) and g.n_hits == nh
+               and g.contamination == nh / len(gset),
+               f"doc {did} fp={fp} n={cn}")
 
-    return fails
-
-
-def main() -> int:
-    spark = get_spark()
-    n_fail = 0
-    for i in range(N_SEEDS):
-        seed = SEED0 + i
-        fails = run_seed(spark, seed)
-        status = "OK" if not fails else "FAIL"
-        print(f"seed {seed}: {status}" + (f" {fails[:4]}" if fails else ""),
-              flush=True)
-        n_fail += bool(fails)
-    print(f"\n{N_SEEDS - n_fail}/{N_SEEDS} seeds clean")
-    return 1 if n_fail else 0
-
-
-if __name__ == "__main__":
-    raise SystemExit(main())
+    return n

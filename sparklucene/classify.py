@@ -86,7 +86,7 @@ def naive_bayes_classify(train: DataFrame, test: DataFrame,
     # doc whose text tokenizes to NOTHING (all stopwords/punctuation)
     # still classifies — by priors alone, dl=0 — like the reference's
     # SimpleNaiveBayesClassifier; deriving from test_tf silently dropped
-    # such docs (found by scripts/classify_fuzz_campaign.py seed 150111)
+    # such docs (found by the classify fuzz family, seed 150111)
     test_len = (test.select("doc_id")
                 .join(test_tf.groupBy("doc_id")
                       .agg(F.sum("tf").alias("_dl")), "doc_id", "left")

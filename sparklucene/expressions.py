@@ -125,7 +125,7 @@ def compile_expression(src: str, bindings: set[str]) -> CompiledExpression:
             # run scale-limited decimal arithmetic on Spark while
             # DuckDB promotes decimal division to DOUBLE — breaking the
             # cross-engine float64 determinism this module promises
-            # (found by scripts/expressions_fuzz_campaign.py seed 99102)
+            # (found by the expressions fuzz family, seed 99102)
             return f"CAST({v if '.' in v else f'{v}.0'} AS DOUBLE)"
         if k == "ident":
             take("ident")

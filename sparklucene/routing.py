@@ -23,9 +23,9 @@ this is the partition-pruning story: the scan reads 1/N of the postings
 bytes by directory layout alone, before any Spark filter runs. Fan-out
 unions the per-route k-bounded top-k frames (each one the ordinary
 two-phase plan) and takes the global top-k — candidate rows shipped to
-the driver stay <= n_routes * k. The global-stats mode adds ONE tiny
-aggregation over the per-route term DICTIONARIES (vocab-sized, never
-the postings) before the fan-out.
+the driver stay <= n_routes * k. The global-stats mode first sums the
+query terms' df/cf over the per-route driver-held term dictionaries
+(no Spark job, never the postings).
 
 CompositeId router: Solr splits the 32-bit murmur3 hash ring into
 ``n_shards`` contiguous ranges and routes ``shard_key!id`` by
@@ -157,29 +157,20 @@ def load_routes(base_dir: str) -> dict:
 def _merged_stats(spark: SparkSession, dirs: list[str],
                   terms: list[str]) -> GlobalStats:
     """ExactStatsCache merge: global doc_count/sum_dl from the per-shard
-    stats manifests (driver-side tiny), global per-term df/cf from ONE
-    union-read of the per-shard term DICTIONARIES filtered to the query
-    terms (vocab-sized parquet, term predicate pushed down; the result
-    is query-term-bounded). Never touches posting cells."""
-    from sparklucene.build import IndexPaths, load_stats
-
+    stats manifests, global per-term df/cf summed over each shard's
+    driver-held term dictionary (``Index.term_stats_for``). No Spark
+    job, never touches posting cells; a term absent from every shard
+    stays absent."""
     doc_count = 0
     sum_dl = 0
-    ts_paths = []
-    for d in dirs:
-        st = load_stats(d)
-        doc_count += int(st["doc_count"])
-        sum_dl += int(st["sum_dl"])
-        ts_paths.append(IndexPaths(d).termstats)
     merged: dict[str, TermStats] = {}
-    if terms:
-        rows = (spark.read.parquet(*ts_paths)
-                .filter(F.col("term").isin(list(terms)))
-                .groupBy("term")
-                .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
-                .collect())
-        merged = {r["term"]: TermStats(df=int(r["df"]), cf=int(r["cf"]))
-                  for r in rows}
+    for d in dirs:
+        idx = Index.shared(spark, d)
+        doc_count += int(idx.stats["doc_count"])
+        sum_dl += int(idx.stats["sum_dl"])
+        for t, ts in idx.term_stats_for(terms).items():
+            m = merged.get(t, TermStats(df=0, cf=0))
+            merged[t] = TermStats(df=m.df + ts.df, cf=m.cf + ts.cf)
     return GlobalStats(doc_count=doc_count, sum_dl=sum_dl,
                        term_stats=merged)
 
@@ -194,8 +185,7 @@ def _fanout(spark: SparkSession, base_dir: str, routes: dict, query, k: int,
             if info.get("dir") is not None}
     if not dirs:  # manifest where every shard is empty (dir=None):
         # same guard as routed_facet_field/routed_grouped_topk/
-        # routed_suggest — ThreadPoolExecutor(max_workers=0) raises,
-        # and _merged_stats cannot read zero parquet paths.
+        # routed_suggest — ThreadPoolExecutor(max_workers=0) raises.
         return spark.createDataFrame(
             [], "doc_id long, score double, route string")
     override = None

@@ -398,6 +398,7 @@ _EMPTY_HL = ("CAST(array() AS "
              "array<struct<term:string,positions:array<int>>>)")
 
 HL_SCHEMA = "doc_id long, term string, positions array<int>"
+_NO_HL_POSITIONS = "highlighting requires an index built with positions"
 
 
 def _cell_maker(batch: pa.RecordBatch):
@@ -437,52 +438,64 @@ def _cell_maker(batch: pa.RecordBatch):
     return make
 
 
-def _highlight_positions(index: Index, terms: list[str],
-                         winners: DataFrame) -> DataFrame:
-    """Matched-term token positions for the <= k winner docs — the
-    highlighting round of the two-phase plan (the user surface of Solr's
-    HighlightComponent, u8:solr/core/.../handler/component/
-    HighlightComponent.java; offsets here are token positions, already
-    indexed).
+def _positions(index: Index, terms: list[str], docs: DataFrame | None,
+               no_positions: str, payloads: bool = False) -> DataFrame:
+    """The one positions reader (Lucene's PostingsEnum with POSITIONS /
+    PAYLOADS): ``(doc_id, term, positions[, payloads])``, one row per
+    (doc, term) in stream order; ``ValueError(no_positions)`` on a cell
+    without a position stream. Feeds highlighting (the user surface of
+    Solr's HighlightComponent) and the term_positions/payloads readers.
 
-    Shape at scale: term-pruned postings scan, restricted to the WINNERS'
-    doc-ranges by a broadcast join against one (drange, winner ids) row
-    per range (<= k rows), positions decoded only for winner docs inside
-    each cell's Arrow batch — cost is O(query terms x winner ranges),
-    independent of corpus size, and no postings shuffle.
+    Shape at scale: term-pruned postings scan, cells decoded in their
+    Arrow batch by the scorer's own constructor, no postings shuffle.
+    ``docs`` (a doc_id frame, e.g. the <= k winners) restricts the scan
+    to their doc-ranges by a broadcast join against one (drange, ids)
+    row per range and emits only those docs: O(terms x ranges), not
+    corpus-sized.
     """
-    drs = int(index.stats["drange_size"])
-    want = (with_drange(winners.select("doc_id"), drs)
-            .groupBy("drange").agg(F.collect_list("doc_id").alias("want")))
-    cells = (index.postings()
-             .filter(F.col("term").isin(sorted(set(terms))))
-             .join(F.broadcast(want), "drange"))
+    cells = index.postings().filter(F.col("term").isin(sorted(set(terms))))
+    filtered = docs is not None  # the closure must not capture ``docs``
+    if filtered:
+        drs = int(index.stats["drange_size"])
+        want = (with_drange(docs.select("doc_id"), drs).groupBy("drange")
+                .agg(F.collect_list("doc_id").alias("want")))
+        cells = cells.join(F.broadcast(want), "drange")
 
     def emit(batches):
         for b in batches:
-            make, wants = _cell_maker(b), b.column("want")
-            out_d, out_t, out_p = [], [], []
+            make, parts, names = _cell_maker(b), [], []
             for r in range(b.num_rows):
                 term, cell = make(r)
                 if not cell.pos_bytes:
-                    raise ValueError("highlighting requires an index built "
-                                     "with positions")
-                docs, tfs = cell.decode()
-                pos = cell.positions()
-                cum = np.concatenate(([0], np.cumsum(tfs)))
-                want = np.unique(wants[r].values.to_numpy())
-                idx = np.searchsorted(docs, want)
-                for d, i in zip(want.tolist(), idx.tolist()):
-                    if i < docs.size and docs[i] == d:
-                        out_d.append(d)
-                        out_t.append(term)
-                        out_p.append(pos[cum[i]:cum[i + 1]].astype(np.int32))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out_d, pa.int64()), pa.array(out_t, pa.string()),
-                 pa.array(out_p, pa.list_(pa.int32()))],
-                names=["doc_id", "term", "positions"])
+                    raise ValueError(no_positions)
+                d, tfs = cell.decode()
+                p = cell.positions()
+                y = cell.payloads() if payloads else p
+                if y.size != p.size:
+                    raise ValueError(
+                        "payload stream misaligned with positions: "
+                        f"{y.size} payloads vs {p.size} positions")
+                if filtered:
+                    keep = np.isin(d, b.column("want")[r].values.to_numpy())
+                    occ = np.repeat(keep, tfs)
+                    d, tfs, p, y = d[keep], tfs[keep], p[occ], y[occ]
+                parts.append((d, tfs, p, y))
+                names += [term] * d.size
+            d, tfs, p, y = (np.concatenate([np.zeros(0, np.int64)]
+                                           + [x[i] for x in parts])
+                            for i in range(4))
+            off = pa.array(np.concatenate(([0], np.cumsum(tfs))), pa.int32())
+            cols = {"doc_id": pa.array(d, pa.int64()),
+                    "term": pa.array(names, pa.string()),
+                    "positions": pa.ListArray.from_arrays(
+                        off, pa.array(p, pa.int32()))}
+            if payloads:
+                cols["payloads"] = pa.ListArray.from_arrays(
+                    off, pa.array(y, pa.int32()))
+            yield pa.RecordBatch.from_pydict(cols)
 
-    return cells.mapInArrow(emit, HL_SCHEMA)
+    return cells.mapInArrow(
+        emit, HL_SCHEMA + (", payloads array<int>" if payloads else ""))
 
 
 def _as_query(query: str | Query) -> Query:
@@ -848,7 +861,7 @@ def search(index: Index, query: str | Query, k: int | None = 10,
     hterms = sorted({t for q in live.values() for t in q.terms()
                      if FIELD_SEP not in t})
     if highlight and hterms:
-        hl = _highlight_positions(index, hterms, out)
+        hl = _positions(index, hterms, out, _NO_HL_POSITIONS)
         agg = (hl.groupBy("doc_id")
                .agg(F.array_sort(F.collect_list(
                    F.struct("term", "positions"))).alias("highlights")))
@@ -896,7 +909,7 @@ def highlight_passages(index: Index, query: "str | Query", k: int = 10,
     n, ts = gstats.doc_count, gstats.term_stats
     wmap = F.create_map(*[x for t in hterms
                           for x in (F.lit(t), F.lit(_bm25_idf(ts[t].df, n)))])
-    hl = _highlight_positions(index, hterms, topk)
+    hl = _positions(index, hterms, topk, _NO_HL_POSITIONS)
     occ = (hl.select("doc_id", "term",
                      F.explode("positions").alias("pos"))
            .withColumn("w", wmap[F.col("term")]))
@@ -1613,38 +1626,20 @@ def explain_terms(index: Index, corpus: DataFrame, terms: "tuple[str, ...]",
 def _term_occurrences(index: Index, query_term: str,
                       doc_ids: "tuple[int, ...] | None",
                       payloads: bool) -> DataFrame:
-    """(doc_id, pos[, payload]) for every occurrence of one term, decoded
-    from the index: term pushdown on the postings scan, then each cell of
-    an Arrow batch decodes through the scorer's own cell constructor."""
-    schema = "doc_id long, pos long" + (", payload long" if payloads else "")
-
-    def gen(batches):
-        for b in batches:
-            make = _cell_maker(b)
-            for r in range(b.num_rows):
-                cell = make(r)[1]
-                if not cell.pos_bytes:
-                    raise ValueError(f"term {query_term!r} has no position "
-                                     "stream (index built without positions)")
-                docs, tfs = cell.decode()
-                cols = {"doc_id": np.repeat(docs, tfs),
-                        "pos": cell.positions()}
-                if payloads:
-                    pay = cell.payloads()
-                    if pay.size != cols["pos"].size:
-                        raise ValueError(
-                            "payload stream misaligned with positions: "
-                            f"{pay.size} payloads vs {cols['pos'].size} "
-                            "positions")
-                    cols["payload"] = pay.astype(np.int64)
-                yield pa.RecordBatch.from_pydict(cols)
-
-    out = (index.postings().filter(F.col("term") == query_term)
-           .mapInArrow(gen, schema))
-    if doc_ids is not None:
-        ids = sorted({int(d) for d in doc_ids})
-        out = out.filter(F.col("doc_id").isin(ids))
-    return out.orderBy("doc_id", "pos")
+    """(doc_id, pos[, payload]) for every occurrence of one term, in
+    ``doc_ids`` only when given: the positions reader, exploded."""
+    docs = None if doc_ids is None else index.spark.createDataFrame(
+        [(d,) for d in sorted({int(d) for d in doc_ids})], "doc_id long")
+    occ = _positions(index, [query_term], docs,
+                     f"term {query_term!r} has no position stream "
+                     "(index built without positions)", payloads)
+    cols = {"positions": "pos", **({"payloads": "payload"} if payloads
+                                   else {})}
+    o = F.explode(F.arrays_zip(*cols)).alias("o")
+    return (occ.select("doc_id", o)
+            .select("doc_id", *[F.col(f"o.{c}").cast("long").alias(a)
+                                for c, a in cols.items()])
+            .orderBy("doc_id", "pos"))
 
 
 def term_positions(index: Index, query_term: str,

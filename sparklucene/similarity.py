@@ -111,7 +111,7 @@ def cosine_topk(embeddings: DataFrame, query_ids: list[int], k: int = 5,
     # zero-norm vectors (failed encodes, padding rows) have undefined
     # cosine: excluded from candidates AND queries — under Spark's ANSI
     # mode the bare division would otherwise abort the whole job on one
-    # bad row (found by scripts/ann_fuzz_campaign.py)
+    # bad row (found by the ann fuzz family)
     pairs = pairs.filter((F.col("norm2") > 0) & (F.col("qnorm2") > 0))
     dot = F.aggregate(F.zip_with("qq", "q", lambda a, b: a * b),
                       F.lit(0).cast("long"), lambda acc, x: acc + x)

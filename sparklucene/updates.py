@@ -32,6 +32,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -130,6 +131,31 @@ def apply_atomic_updates(corpus: DataFrame, updates: DataFrame,
     return out.select(*merged)
 
 
+def _undelete(spark: SparkSession, dele_path: str,
+              doc_ids: list[int]) -> None:
+    """Drop ``doc_ids`` from the deletes table without ever leaving the
+    directory short of the other deletes: the kept rows are written to a
+    sibling temp dir and renamed INTO ``deletes/`` one file at a time,
+    and only then are the files listed before the write unlinked. A
+    reader (or a crash) at any point sees every delete outside
+    ``doc_ids``; rerunning completes the un-delete."""
+    old = sorted(os.listdir(dele_path))
+    dele = spark.read.parquet(*[os.path.join(dele_path, f) for f in old
+                                if f.endswith(".parquet")])
+    upd = spark.createDataFrame([(int(d),) for d in sorted(set(doc_ids))],
+                                "doc_id long")
+    kept = dele.join(F.broadcast(upd), "doc_id", "left_anti")
+    tmp = f"{dele_path}.tmp-{os.getpid()}"
+    kept.coalesce(max(1, kept.rdd.getNumPartitions() // 4)) \
+        .write.mode("overwrite").parquet(tmp)
+    for f in sorted(os.listdir(tmp)):
+        if f.endswith(".parquet"):
+            os.replace(os.path.join(tmp, f), os.path.join(dele_path, f))
+    for f in old:
+        os.unlink(os.path.join(dele_path, f))
+    shutil.rmtree(tmp)
+
+
 def update_index(spark: SparkSession, new_corpus: DataFrame,
                  index_dir: str, doc_ids: list[int],
                  stopwords=None, store_positions: bool = True,
@@ -138,7 +164,13 @@ def update_index(spark: SparkSession, new_corpus: DataFrame,
     """Reindex the doc-range segments containing ``doc_ids`` from the
     (already merged) ``new_corpus``, then re-merge. Analyzer/build
     options must match the original build (same contract as resume).
-    Returns the refreshed stats dict."""
+    Returns the refreshed stats dict.
+
+    Un-deleting the updated docs never leaves ``deletes/`` without the
+    other deletes (see :func:`_undelete`), so a crash midway loses none
+    and a rerun completes it. A handle that already listed the old
+    deletes files still fails its next query, until the index has a
+    commit point (ROADMAP direction 4)."""
     from sparklucene.analysis import ENGLISH_STOP_WORDS
 
     paths = IndexPaths(index_dir)
@@ -178,15 +210,7 @@ def update_index(spark: SparkSession, new_corpus: DataFrame,
     # 3. updated docs are re-added under their ids -> no longer deleted
     dele_path = os.path.join(index_dir, "deletes")
     if os.path.isdir(dele_path):
-        dele = spark.read.parquet(dele_path)
-        upd = spark.createDataFrame([(int(d),) for d in sorted(set(doc_ids))],
-                                    "doc_id long")
-        kept = dele.join(F.broadcast(upd), "doc_id", "left_anti")
-        kept.coalesce(max(1, kept.rdd.getNumPartitions() // 4)) \
-            .write.mode("overwrite").parquet(dele_path + ".tmp")
-        import shutil
-        shutil.rmtree(dele_path)
-        os.replace(dele_path + ".tmp", dele_path)
+        _undelete(spark, dele_path, doc_ids)
     # 4. commit: re-bucket partials + refresh stats
     return merge(spark, paths, drs,
                  extra_meta={"payloads": payloads} if payloads else None)

@@ -95,8 +95,8 @@ def test_ngram_duplicate_positions_verify_clean(spark):
     """NGramTokenFilter legitimately emits the same gram twice within one
     source token, all at the token's position ('an' twice in 'banana') —
     verify_index must treat equal positions as healthy (Lucene CheckIndex
-    allows posInc=0 repeats; found by scripts/invert_fuzz_campaign.py
-    seed 41001)."""
+    allows posInc=0 repeats; found by the invert fuzz family, seed
+    41001)."""
     import numpy as np
     import pandas as pd
 

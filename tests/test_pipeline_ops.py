@@ -1127,7 +1127,7 @@ def test_cosine_topk_tolerates_zero_norm_vectors(spark):
     """A zero embedding (failed encode / padding) has undefined cosine:
     it must be EXCLUDED from candidates and queries, not abort the job
     (Spark 4 ANSI mode turns the bare division into DIVIDE_BY_ZERO —
-    found by scripts/ann_fuzz_campaign.py). Applies to exact, int8,
+    found by the ann fuzz family). Applies to exact, int8,
     LSH, IVF and filtered variants; exact + int8 pinned here."""
     from sparklucene.similarity import cosine_topk, cosine_topk_int8
 

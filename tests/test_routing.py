@@ -69,6 +69,62 @@ def test_fanout_merges_per_shard_topk(spark, routed):
     assert got["route"].tolist() == want["route"].tolist()
 
 
+def test_global_stats_fanout_equals_unrouted_index(spark, routed, tmp_path):
+    """stats="global" (ExactStatsCache): the fan-out ranks and scores
+    exactly like one index over the whole corpus — same ids, same score
+    bits — including a term some shards lack and one every shard lacks."""
+    from sparklucene.build import build_index
+    from sparklucene.query import And
+
+    corpus, _ = routed
+    d = str(tmp_path / "whole")
+    build_index(spark, corpus, d, drange_size=128)
+    whole = Index(spark, d)
+    for q in (Or((Term("merge"), Term("spark"))),
+              Or((Term("join"), Term("zzqx_absent"), Term("hash"))),
+              And((Term("merge"), Term("join"))), Term("spark")):
+        got = routed_search(spark, BASE, q, route=None, k=20, mode="f64",
+                            stats="global").toPandas()
+        want = search(whole, q, k=20, mode="f64").toPandas()
+        assert got["doc_id"].tolist() == want["doc_id"].tolist(), str(q)
+        assert got["score"].to_numpy().tobytes() == \
+            want["score"].to_numpy().tobytes(), str(q)
+
+
+def test_global_stats_merge_runs_no_spark_job(spark, routed):
+    """The per-term df/cf merge sums each shard's driver-held term
+    dictionary: no Spark job, the same integers as the shards'
+    termstats files, and a term absent from every shard stays absent."""
+    import uuid
+
+    import pyarrow.parquet as pq
+
+    from sparklucene.routing import _merged_stats
+
+    dirs = [os.path.join(BASE, info["dir"])
+            for info in load_routes(BASE)["routes"].values()]
+    terms = ["merge", "spark", "zzqx_absent"]
+    sc = spark.sparkContext
+    group = f"routed-stats-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "routed stats probe")
+    try:
+        got = _merged_stats(spark, dirs, terms)
+    finally:
+        sc.setJobGroup(None, None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    want: dict[str, list[int]] = {}
+    for d in dirs:
+        for r in pq.read_table(Index(spark, d).paths.termstats).to_pylist():
+            if r["term"] in terms:
+                acc = want.setdefault(r["term"], [0, 0])
+                acc[0] += r["df"]
+                acc[1] += r["cf"]
+    assert {t: [s.df, s.cf] for t, s in got.term_stats.items()} == want
+    assert "zzqx_absent" not in got.term_stats
+    assert got.doc_count == sum(
+        Index(spark, d).stats["doc_count"] for d in dirs)
+
+
 def test_unknown_route_raises(spark, routed):
     with pytest.raises(KeyError, match="unknown route"):
         routed_search(spark, BASE, Term("merge"), route="xx")

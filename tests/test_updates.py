@@ -3,6 +3,8 @@ half (update_index == full rebuild on the merged corpus)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -120,3 +122,62 @@ def test_duplicate_update_ids_rejected(spark):
                                "doc_id long, title string")
     with pytest.raises(ValueError, match="multiple rows"):
         apply_atomic_updates(corpus, up, {"title": "set"})
+
+
+def test_interrupted_update_index_keeps_other_deletes(spark, tmp_path,
+                                                     monkeypatch):
+    """update_index un-deletes the updated docs without ever leaving
+    deletes/ short of the other deletes: a crash right after the first
+    removal of old delete data still hides every deleted doc outside the
+    update batch from a fresh Index, and rerunning update_index
+    completes the un-delete."""
+    import shutil
+
+    from sparklucene.build import build_index
+    from sparklucene.query import Term
+    from sparklucene.search import Index, delete_docs, search
+
+    corpus = load_corpus(spark, SF)
+    d = str(tmp_path / "idx")
+    build_index(spark, corpus, d, drange_size=128)
+    v0, v1, v2 = [int(r["doc_id"]) for r in search(
+        Index(spark, d), Term("merge"), k=3, mode="f64").collect()]
+    delete_docs(Index(spark, d), [v0, v1])
+    delete_docs(Index(spark, d), [v2])
+    updates = spark.createDataFrame([(v0, "zebra quagga unique_upd_token")],
+                                    "doc_id long, content string")
+    merged = apply_atomic_updates(corpus, updates, {"content": "set"})
+
+    class Crash(Exception):
+        pass
+
+    def deleted(p) -> bool:
+        return os.path.basename(os.path.normpath(p)) == "deletes"
+
+    real_unlink, real_rmtree = os.unlink, shutil.rmtree
+
+    def unlink(p, *a, **kw):  # crash after the first old deletes file
+        real_unlink(p, *a, **kw)
+        if deleted(os.path.dirname(p)) and str(p).endswith(".parquet"):
+            raise Crash(p)
+
+    def rmtree(p, *a, **kw):  # ... or after the whole old directory
+        real_rmtree(p, *a, **kw)
+        if deleted(p):
+            raise Crash(p)
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "unlink", unlink)
+        m.setattr(shutil, "rmtree", rmtree)
+        with pytest.raises(Crash):
+            update_index(spark, merged, d, [v0])
+
+    hits = {r["doc_id"] for r in search(Index(spark, d), Term("merge"),
+                                        k=None, mode="f64").collect()}
+    assert not hits & {v1, v2}, "deletes outside the batch came back"
+
+    update_index(spark, merged, d, [v0])
+    idx = Index(spark, d)
+    assert {r["doc_id"] for r in idx.deletes_df().collect()} == {v1, v2}
+    assert {r["doc_id"] for r in search(idx, Term("unique_upd_token"),
+                                        k=5).collect()} == {v0}
