@@ -6,7 +6,7 @@ Default mode (driver contract): runs at $SPARK_GRAFT_SF_DIR (default
    "queries": {name: sec, ...}, "sf": ...,
    "index": {docs, docs_per_sec, build_sec, ...},
    "latency": {p50_sec, p99_sec},
-   "floor": {empty_job_sec, udf_job_sec}}
+   "floor": {empty_job_sec, udf_job_sec, udf_first_batch_sec}}
 
 Scaling mode (BASELINE.md two-cluster-size criterion): SCALING=1 python
 bench.py re-runs the same build at two parallelism levels (default
@@ -191,24 +191,44 @@ def spark_floor(spark) -> dict:
     """Spark's fixed per-job cost, median of QUERY_REPS warm runs each:
     a JVM-only job and a 1-partition no-op Arrow UDF job whose worker
     imports the engine (as every engine UDF does). Every search pays at
-    least the UDF job."""
+    least the UDF job. ``udf_first_batch_sec`` is the part of a UDF job
+    spent inside the worker waiting for its first input batch, from the
+    UDF body's start (a no-op over ``spark.range(3).repartition(1)``,
+    timed in the worker); over loopback TCP it read ~0.04 s."""
     def noop(batches):
         import sparklucene  # noqa: F401
         yield from batches
 
-    udf_job = spark.range(0, 1, 1, 1).mapInArrow(noop, "id long")
+    def first_batch_wait(batches):
+        import pyarrow as pa
 
-    def median_sec(action) -> float:
-        action()  # warm
-        ts = []
-        for _ in range(QUERY_REPS):
+        import sparklucene  # noqa: F401
+        t0 = time.time()
+        next(batches, None)
+        wait = time.time() - t0
+        for _ in batches:
+            pass
+        yield pa.RecordBatch.from_pydict({"wait": [wait]})
+
+    udf_job = spark.range(0, 1, 1, 1).mapInArrow(noop, "id long")
+    wait_job = spark.range(3).repartition(1).mapInArrow(first_batch_wait,
+                                                        "wait double")
+
+    def median(sample) -> float:
+        sample()  # warm
+        return round(float(np.median([sample()
+                                      for _ in range(QUERY_REPS)])), 4)
+
+    def wall(action):
+        def sample() -> float:
             t0 = time.perf_counter()
             action()
-            ts.append(time.perf_counter() - t0)
-        return round(float(np.median(ts)), 4)
+            return time.perf_counter() - t0
+        return sample
 
-    return {"empty_job_sec": median_sec(lambda: spark.range(1).count()),
-            "udf_job_sec": median_sec(udf_job.collect)}
+    return {"empty_job_sec": median(wall(lambda: spark.range(1).count())),
+            "udf_job_sec": median(wall(udf_job.collect)),
+            "udf_first_batch_sec": median(lambda: wait_job.collect()[0][0])}
 
 
 def run_wand_ablation(spark, index_dir: str) -> dict:

@@ -100,7 +100,9 @@ def run(families: dict[str, ModuleType], n_seeds: int | None = None,
             run_family(name, fam, ctx, dn if n_seeds is None else n_seeds,
                        ds if seed0 is None else seed0)
     except Failure as exc:
-        print(exc, flush=True)
+        # Spark's progress bar ends in "\r", not a newline: start a line
+        # of our own so the failure reads at the start of one
+        print(f"\n{exc}", flush=True)
         return 1
     finally:
         if ctx._spark is not None:

@@ -47,7 +47,13 @@ def main(argv: list[str] | None = None) -> int:
 
     from sparklucene import dedup, textops
 
-    spark = SparkSession.builder.getOrCreate()
+    # Python workers over Unix domain sockets: over loopback TCP every
+    # Python task waits ~40 ms for its first input batch (see
+    # sparklucene/session.py). No socket dir: each executor's own
+    # java.io.tmpdir applies, and a driver-side path may not exist there.
+    spark = (SparkSession.builder
+             .config("spark.python.unix.domain.socket.enabled", "true")
+             .getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
     t0 = time.time()
     docs = spark.read.parquet(f"{args.corpus}/documents.parquet")

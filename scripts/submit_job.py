@@ -43,7 +43,13 @@ def main(argv: list[str] | None = None) -> int:
 
     from pyspark.sql import SparkSession
 
-    spark = SparkSession.builder.appName(f"sparklucene-{args.cmd}").getOrCreate()
+    # Python workers over Unix domain sockets: over loopback TCP every
+    # Python task waits ~40 ms for its first input batch (see
+    # sparklucene/session.py). No socket dir: each executor's own
+    # java.io.tmpdir applies, and a driver-side path may not exist there.
+    spark = (SparkSession.builder.appName(f"sparklucene-{args.cmd}")
+             .config("spark.python.unix.domain.socket.enabled", "true")
+             .getOrCreate())
 
     from sparklucene.build import build_index
     from sparklucene.corpus import load_corpus

@@ -5,13 +5,45 @@ knob here is the one you'd set at 100 TB: AQE on (runtime re-plan + skew
 join splitting), Arrow transfers on (all our UDFs are pandas/Arrow
 vectorized), shuffle partitions sized to cores locally (cluster: 2-3x
 total cores), and broadcast join threshold left to AQE.
+
+JVM <-> Python-worker traffic goes over Unix domain sockets
+(``spark.python.unix.domain.socket.enabled``). Over loopback TCP, every
+Python task with a small input waited a fixed ~41 ms between the start of
+its UDF body and the arrival of its first Arrow batch: the worker socket
+leaves Nagle's algorithm on, and a small write then waits for Linux's
+delayed-ACK timer. Over UDS that wait is under 1 ms. On a 4-core host,
+the execution of a warm query on a 100k-doc serve index fell from
+92-93 ms to 52-54 ms, and a 1-task no-op ``mapInArrow`` job from
+60-68 ms to 18-28 ms. Large transfers (dense queries, builds) never
+stalled. The same flag moves ``createDataFrame``, collect /
+``toPandas`` / ``toArrow`` and the accumulator server onto UDS as well.
+
+The socket dir is set explicitly (``_socket_dir``). Left unset, Spark
+uses ``java.io.tmpdir``, and a socket path longer than AF_UNIX's 107
+bytes kills session start with ``OSError: AF_UNIX path too long`` (raised
+by the accumulator server in ``SparkContext.__init__``), e.g. whenever a
+benchmark points ``java.io.tmpdir`` into a deep checkout.
 """
 
 from __future__ import annotations
 
 import os
+import tempfile
 
 from pyspark.sql import SparkSession
+
+# AF_UNIX sun_path holds 107 bytes plus the NUL; Spark names each socket
+# ``<dir>/.<uuid4>.sock``, which is len(dir) + 43 bytes
+_SUN_PATH_MAX = 107
+_SOCK_NAME_LEN = 43
+
+
+def _socket_dir(tmp: str) -> str:
+    """The dir for the Python-worker sockets: ``tmp`` when a socket path
+    under it fits AF_UNIX's limit, else ``/tmp``."""
+    if len(os.fsencode(tmp)) + _SOCK_NAME_LEN <= _SUN_PATH_MAX:
+        return tmp
+    return "/tmp"
 
 
 def get_spark(app_name: str = "sparklucene", cores: int | None = None,
@@ -38,6 +70,9 @@ def get_spark(app_name: str = "sparklucene", cores: int | None = None,
         .config("spark.driver.memory", os.environ.get("SPARKLUCENE_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.python.unix.domain.socket.enabled", "true")
+        .config("spark.python.unix.domain.socket.dir",
+                _socket_dir(tempfile.gettempdir()))
     )
     spark = builder.getOrCreate()
     if serving:

@@ -26,6 +26,8 @@ def test_no_spark_family_runs_green(family, capsys):
 
 def test_failing_family_exits_1_naming_family_seed_check(capsys):
     def check(ctx, seed):
+        # a Spark progress bar sharing stdout leaves the line unended
+        print("\r[Stage 7:>          (0 + 1) / 1]", end="")
         n: Counter = Counter()
         expect(n, "parity", seed != 11, lambda: f"seed {seed} diverged")
         return n
@@ -35,4 +37,5 @@ def test_failing_family_exits_1_naming_family_seed_check(capsys):
     out = capsys.readouterr().out
     assert "FUZZ FAILURE family=fake seed=11 check=parity: seed 11 " \
         "diverged" in out
+    assert re.search(r"^FUZZ FAILURE family=", out, re.M)
     assert "FUZZ GREEN fake" not in out
