@@ -51,8 +51,11 @@ def main(argv: list[str] | None = None) -> int:
     # Python task waits ~40 ms for its first input batch (see
     # sparklucene/session.py). No socket dir: each executor's own
     # java.io.tmpdir applies, and a driver-side path may not exist there.
+    # 1,024-row cache batches, as get_spark: a term's cells are one short
+    # run per postings segment, and the cache skips the other batches.
     spark = (SparkSession.builder
              .config("spark.python.unix.domain.socket.enabled", "true")
+             .config("spark.sql.inMemoryColumnarStorage.batchSize", "1024")
              .getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
     t0 = time.time()

@@ -2,9 +2,9 @@
 
 A from-scratch, Spark-first reimplementation of the capabilities of the
 reference Lucene/Solr system (see SURVEY.md): StandardAnalyzer-equivalent
-analysis, per-partition inverted-index build, term-range segment merge with
-delta-gap + variable-byte posting compression, and top-k BM25 (k1=1.2,
-b=0.75) query execution with block-max WAND / MAXSCORE pruning — all
+analysis, per-doc-range inverted-index segments with a term-range-merged
+dictionary, delta-gap + variable-byte posting compression, and top-k BM25
+(k1=1.2, b=0.75) query execution with block-max WAND / MAXSCORE pruning — all
 expressed as DataFrame transformations + vectorized Arrow/pandas UDFs.
 
 Reference semantics (public Apache Lucene 8.x knowledge):

@@ -2,11 +2,14 @@
 
 Spark-first redesign of Lucene's indexing chain (SURVEY.md §2.3, §3.3):
 
-  Lucene DWPT thread-local invert  -> per-doc-range ``applyInPandas`` invert
-  segment flush                    -> one posting-partial parquet per range,
+  Lucene DWPT thread-local invert  -> per-doc-range ``mapInArrow`` invert
+  segment flush                    -> one term-sorted postings segment per
+                                      range (``postings/postings-<dr>.parquet``),
                                       written atomically + manifest row
-  SegmentMerger k-way term merge   -> ``repartitionByRange("term")`` +
-                                      term-sorted final postings table
+  SegmentMerger k-way term merge   -> none for postings: the segments ARE
+                                      the postings table; only the term
+                                      dictionary (termstats) is merged by
+                                      term range
   docID remap at merge             -> unnecessary: doc_ids are global up
                                       front (deliberate Spark simplification)
   tlog / commit point              -> per-partition manifest JSON with
@@ -20,13 +23,17 @@ Scale design (the 100 TB story):
     is ~10^4 rows of ~10^6 docs each. Queries re-group by ``drange`` so
     scoring is embarrassingly parallel across ranges, and AND/OR/WAND
     combine *locally* within a range (doc ranges are disjoint).
-  * The invert stage is doc-partitioned (`groupBy(drange)`) — uniform by
-    construction (dense doc_ids), immune to term skew; the only term-keyed
-    shuffle carries packed binary cells, so shuffle volume ~ index size.
-  * Global term stats use a two-stage (optionally salted) aggregation.
+  * The invert stage is doc-partitioned (``repartition(drange)``) —
+    uniform by construction (dense doc_ids), immune to term skew. Each
+    range's segment is written once by its task and never rewritten, so
+    a build or a streaming commit moves no posting bytes through a
+    shuffle; a query finds a term's cells inside each range by the
+    cache's per-batch (min, max) term stats.
+  * Global term stats use a two-stage (optionally salted) aggregation over
+    vocab-sized per-range termstats partials, range-partitioned by term.
 
 The index directory must be on a shared filesystem (S3A/HDFS/NFS) in a
-real cluster; tasks write their own partial files (pyarrow) so checkpoint
+real cluster; tasks write their own segment files (pyarrow) so checkpoint
 granularity is one doc-range, not one job.
 """
 
@@ -36,7 +43,6 @@ import hashlib
 import json
 import os
 import time
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 import numpy as np
@@ -55,15 +61,10 @@ from sparklucene.query import FIELD_SEP
 
 #: bump when the on-disk postings layout changes (stale-cache guard)
 #: v4: per-range termstats-*.parquet partials (vocab-sized stats source)
-FORMAT_VERSION = 4
+#: v5: the per-range segments in postings/ are the postings table (no
+#: term-range rewrite); v4 kept them in partials/ and merged a copy
+FORMAT_VERSION = 5
 
-POSTINGS_SCHEMA = (
-    "term string, drange int, df_part long, cf_part long, doc_bytes binary, "
-    "tf_bytes binary, norm_bytes binary, pos_bytes binary, "
-    "pay_bytes binary, "
-    "block_last array<long>, block_max_tf array<int>, block_min_norm binary"
-)
-DOCMETA_SCHEMA = "drange int, doc_id long, dl long, norm int"
 MANIFEST_SCHEMA = ("drange int, status string, n_docs long, n_terms long, "
                    "n_postings long, sum_dl long, sha string")
 
@@ -83,10 +84,6 @@ class IndexPaths:
     @property
     def postings(self) -> str:
         return os.path.join(self.root, "postings")
-
-    @property
-    def docmeta(self) -> str:
-        return os.path.join(self.root, "docmeta")
 
     @property
     def termstats(self) -> str:
@@ -348,9 +345,25 @@ def _invert_one_range(data, drange: int, stopwords,
 
 
 def _atomic_write(table: pa.Table, path: str) -> None:
-    tmp = f"{path}.tmp-{os.getpid()}"
+    # the "." prefix hides the half-written file from Spark and pyarrow
+    # readers of the directory until the rename publishes it
+    head, name = os.path.split(path)
+    tmp = os.path.join(head, f".{name}.tmp-{os.getpid()}")
     pq.write_table(table, tmp, compression="zstd")
     os.replace(tmp, path)
+
+
+def _require_current_format(paths: IndexPaths) -> None:
+    """Refuse to write into an index of an older layout. Before format 5
+    the segments lived in ``partials/`` and ``postings/`` held a merged
+    copy, so writing new segments next to it would mix the two."""
+    if os.path.isdir(paths.partials) and any(
+            f.startswith("postings-") for f in os.listdir(paths.partials)):
+        raise ValueError(
+            f"{paths.root} is an index of format 4 or older (its postings "
+            f"are a merged copy); format {FORMAT_VERSION} cannot add to "
+            "it — rebuild the index into a fresh directory. Reading it "
+            "still works.")
 
 
 #: single-file manifest log written by compaction (the "_" prefix keeps it
@@ -444,13 +457,16 @@ def invert(corpus: DataFrame, paths: IndexPaths, drange_size: int,
     agg; it only tunes task granularity, never correctness.
     Returns the manifest (one row per range, status built|skipped).
     """
+    _require_current_format(paths)
     os.makedirs(paths.manifest_dir, exist_ok=True)
+    os.makedirs(paths.postings, exist_ok=True)
     done = _completed_dranges(paths) if resume else set()
     cols = ["doc_id", "content"] + sorted(
         {f.source for f in extra_fields} - {"doc_id", "content"})
     sharded = with_drange(corpus.select(*cols), drange_size)
     todo = sharded.filter(~F.col("drange").isin(sorted(done))) if done else sharded
     partials_dir, manifest_dir = paths.partials, paths.manifest_dir
+    postings_dir = paths.postings
     stop = frozenset(stopwords)
 
     man_schema = pa.schema([
@@ -465,7 +481,9 @@ def invert(corpus: DataFrame, paths: IndexPaths, drange_size: int,
                                                    extra_fields, payload_mode)
         if lineage:
             man.update(lineage)
-        _atomic_write(postings, os.path.join(partials_dir, f"postings-{dr:06d}.parquet"))
+        # the range's segment IS its slice of the postings table: written
+        # once here, replaced in place by a re-invert, never merged
+        _atomic_write(postings, os.path.join(postings_dir, f"postings-{dr:06d}.parquet"))
         _atomic_write(docmeta, os.path.join(partials_dir, f"docmeta-{dr:06d}.parquet"))
         # vocab-sized stats partial (term, df_part, cf_part): the merge
         # stage aggregates global term stats from THESE instead of
@@ -541,60 +559,24 @@ def invert(corpus: DataFrame, paths: IndexPaths, drange_size: int,
 
 
 def merge(spark: SparkSession, paths: IndexPaths, drange_size: int,
-          n_term_buckets: int | None = None, salt: int = 0,
-          extra_meta: dict | None = None) -> dict:
-    """Stage B: term-range segment merge + global stats.
+          salt: int = 0, extra_meta: dict | None = None) -> dict:
+    """Stage B: commit — global term stats + the stats.json fold.
 
-    Final postings are range-partitioned and sorted by (term, drange):
-    Parquet row-group min/max stats on the sorted ``term`` column give
-    Lucene-FST-style term seeks for free via predicate pushdown.
+    The postings need no merge: invert's per-range segments are the
+    postings table. This stage aggregates the term dictionary from the
+    vocab-sized ``termstats-*`` partials (term, drange, df_part, cf_part
+    — ~0.1% of the index bytes) and writes it range-partitioned and
+    sorted by term, so Parquet row-group min/max stats give term seeks
+    via predicate pushdown.
 
     ``salt`` > 0 demonstrates skew-safe two-stage stats aggregation
     (identical results, asserted in tests); partial aggregation already
     makes the plain groupBy safe, so salting is a belt-and-braces knob
     for pathological single-term skew.
     """
-    postings = (spark.read
-                .option("pathGlobFilter", "postings-*.parquet")
-                .parquet(paths.partials))
-
-    if n_term_buckets is None:
-        # size buckets by DATA VOLUME (~128 MB of packed postings each),
-        # not by core count: bucket count then grows with the corpus and
-        # the job shape is identical at any parallelism (scaling fairness;
-        # at 100 TB this yields thousands of buckets automatically).
-        # The constant floor of 16 (same at EVERY cluster size, so it
-        # never skews an N-vs-4N comparison) keeps the final term-range
-        # write parallel for small indexes — with 1 bucket the merge is a
-        # single serial task, a fixed cost that poisons scaling numbers
-        # and wastes an idle cluster.
-        total_bytes = sum(
-            os.path.getsize(os.path.join(paths.partials, f))
-            for f in os.listdir(paths.partials)
-            if f.startswith("postings-") and f.endswith(".parquet"))
-        n_term_buckets = max(16, -(-total_bytes // (128 << 20)))
-
-    def write_postings() -> None:
-        (postings
-         .repartitionByRange(n_term_buckets, "term", "drange")
-         .sortWithinPartitions("term", "drange")
-         .write.mode("overwrite").parquet(paths.postings))
-
-    # global term stats aggregate from the vocab-sized termstats-* partials
-    # (term, drange, df_part, cf_part — no posting bytes), so this pass
-    # reads ~0.1% of the index; fall back to the postings table when
-    # resuming a partial dir written before FORMAT_VERSION 4
-    names = os.listdir(paths.partials)
-    n_post = sum(1 for f in names
-                 if f.startswith("postings-") and f.endswith(".parquet"))
-    n_tsp = sum(1 for f in names
-                if f.startswith("termstats-") and f.endswith(".parquet"))
-    if n_tsp == n_post and n_tsp > 0:
-        stats_src = (spark.read
-                     .option("pathGlobFilter", "termstats-*.parquet")
-                     .parquet(paths.partials))
-    else:
-        stats_src = postings.select("term", "drange", "df_part", "cf_part")
+    stats_src = (spark.read
+                 .option("pathGlobFilter", "termstats-*.parquet")
+                 .parquet(paths.partials))
     if salt > 0:
         pre = (stats_src
                .withColumn("_salt", F.pmod(F.col("drange"), F.lit(salt)))
@@ -605,24 +587,15 @@ def merge(spark: SparkSession, paths: IndexPaths, drange_size: int,
     else:
         stats_df = stats_src.groupBy("term").agg(F.sum("df_part").alias("df"),
                                                  F.sum("cf_part").alias("cf"))
-
-    def write_termstats() -> None:
-        (stats_df.repartitionByRange(max(1, n_term_buckets // 4), "term")
-         .sortWithinPartitions("term")
-         .write.mode("overwrite").parquet(paths.termstats))
-
-    # the two writes read disjoint partial files and target disjoint
-    # output dirs — submit both from separate threads so their fixed
-    # per-job overheads (range-boundary sampling, scheduling, commit)
-    # overlap; Spark's scheduler interleaves the task sets on the same
-    # executors, and the tiny termstats job rides the postings job's
-    # idle slots (on a cluster this also keeps 1000 executors busy
-    # instead of serialising a vocab-sized shuffle after a data-sized
-    # one)
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        futs = [pool.submit(write_postings), pool.submit(write_termstats)]
-        for f in futs:
-            f.result()
+    # the aggregation runs at shuffle parallelism; only the write of the
+    # vocab-sized result is 4 tasks, the same at every cluster size
+    (stats_df.repartitionByRange(4, "term")
+     .sortWithinPartitions("term")
+     .write.mode("overwrite").parquet(paths.termstats))
+    # the segments were written by pyarrow, outside Spark: drop any
+    # cached scan of postings/ so a handle opened after this commit reads
+    # the new file listing (a Spark-side overwrite would do this itself)
+    spark.catalog.refreshByPath(paths.postings)
 
     # global stats come from the per-range manifests (segment metadata) —
     # no extra pass over the data, exactly like Lucene's SegmentInfos;
@@ -642,8 +615,7 @@ def merge(spark: SparkSession, paths: IndexPaths, drange_size: int,
     compact_manifests(paths)
     stats = {"n_docs": n_docs, "doc_count": doc_count,
              "sum_dl": sum_dl, "drange_size": drange_size,
-             "n_term_buckets": n_term_buckets, "format": FORMAT_VERSION,
-             "ts": time.time()}
+             "format": FORMAT_VERSION, "ts": time.time()}
     if field_acc:
         stats["fields"] = field_acc
     if extra_meta:

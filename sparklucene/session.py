@@ -18,6 +18,16 @@ the execution of a warm query on a 100k-doc serve index fell from
 stalled. The same flag moves ``createDataFrame``, collect /
 ``toPandas`` / ``toArrow`` and the accumulator server onto UDS as well.
 
+Cached tables are built in batches of 1,024 rows
+(``spark.sql.inMemoryColumnarStorage.batchSize``; Spark's default is
+10,000). The postings table is one term-sorted segment per doc range, so
+a query term's cells sit in one batch per range, and the cache skips the
+other batches by their (min, max) term stats. Smaller batches mean fewer
+rows decoded per range: on a 4-core host, in one process over a 100k-doc
+serve index (7 ranges), the warm ``search()`` p50 was 0.132 s with
+10,000-row batches and 0.110 s with 1,024 (medians of 4 alternating
+rounds of 50 queries).
+
 The socket dir is set explicitly (``_socket_dir``). Left unset, Spark
 uses ``java.io.tmpdir``, and a socket path longer than AF_UNIX's 107
 bytes kills session start with ``OSError: AF_UNIX path too long`` (raised
@@ -67,6 +77,7 @@ def get_spark(app_name: str = "sparklucene", cores: int | None = None,
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.parquet.compression.codec", "zstd")
+        .config("spark.sql.inMemoryColumnarStorage.batchSize", "1024")
         .config("spark.driver.memory", os.environ.get("SPARKLUCENE_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")

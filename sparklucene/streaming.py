@@ -6,12 +6,14 @@ TopicStream incremental pull — SURVEY.md §2.12) maps onto Structured
 Streaming:
 
   micro-batch            == one new index "generation": per-doc-range
-                            posting partials + manifest rows (a segment
+                            postings segments + manifest rows (a segment
                             flush), written through the same checkpointed
                             invert path as the batch build
-  commit / visibility    == compact() (the merge/compaction job) publishes
-                            a fresh term-range postings table + stats —
-                            Lucene's commit point / TieredMergePolicy merge
+  commit / visibility    == merge() folds the new ranges' manifests into
+                            stats.json and rebuilds the term dictionary —
+                            Lucene's commit point. Segments are never
+                            rewritten, so a commit costs the dictionary,
+                            not the index
   UpdateLog / replay     == Spark streaming checkpointDir: exactly-once
                             per-batch file sink semantics; a crashed batch
                             re-runs and idempotently overwrites its ranges
@@ -42,9 +44,9 @@ def start_incremental_index(stream: DataFrame, index_dir: str,
     """Start a streaming query that indexes arriving docs incrementally.
 
     ``stream`` — a streaming DataFrame with the corpus shape (must include
-    doc_id + content). Every micro-batch flushes segment partials; every
-    ``compact_every`` batches, compaction publishes a fresh searchable
-    postings generation.
+    doc_id + content). Every micro-batch flushes its ranges' segments;
+    every ``compact_every`` batches, a commit folds them into the global
+    stats and the term dictionary.
 
     The one-generation-per-range constraint (module docstring) is ENFORCED,
     not just documented: each batch's manifests record its ``batch_id``,
@@ -97,7 +99,7 @@ def index_stream_once(spark: SparkSession, source_dir: str, schema: str,
                       checkpoint_dir: str, analyzer=None,
                       extra_fields: tuple = ()) -> None:
     """Drain a file-source stream with availableNow (TopicStream-style
-    catch-up pull), then compact so readers see one fresh generation."""
+    catch-up pull), then commit so readers see one fresh generation."""
     stream = (spark.readStream.schema(schema).parquet(source_dir))
     q = start_incremental_index(stream, index_dir, drange_size,
                                 checkpoint_dir, compact_every=0,

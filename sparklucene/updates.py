@@ -13,19 +13,20 @@ update). This module pins the same two halves:
    the engine's stored-fields store, so this IS the stored-doc fetch +
    merge. ``add``/``remove`` (multivalued) are rejected: the corpus
    model has no multivalued fields (documented scope limit).
-2. :func:`update_index` — the reindex half: invalidate exactly the
-   doc-range segments containing updated docs (partials + manifest
-   entries), re-invert only those ranges from the updated corpus, and
-   re-merge. Updated docs also leave the deletions table (the reference
-   re-adds the merged doc under the same id, which un-hides it).
+2. :func:`update_index` — the reindex half: drop the manifest entries
+   of exactly the doc-range segments containing updated docs, re-invert
+   only those ranges from the updated corpus (each segment, docmeta and
+   termstats file is replaced in place by an atomic rename, so every
+   range stays readable throughout), and commit. Updated
+   docs also leave the deletions table (the reference re-adds the merged
+   doc under the same id, which un-hides it).
 
 Scale shape: the update batch is request-scale (the reference processes
 updates per request too) — the merged corpus costs one broadcast join;
 the re-invert reads ONLY the affected ranges (narrow drange predicate
-pushed into the corpus scan); the re-merge re-buckets the partials,
-which is the engine's commit/compaction cost (the reference pays the
-analogous segment-merge). Affected-range discovery never scans data —
-it is doc_id integer arithmetic on the request batch.
+pushed into the corpus scan); the commit re-aggregates the vocab-sized
+term dictionary and touches no posting bytes. Affected-range discovery
+never scans data — it is doc_id integer arithmetic on the request batch.
 """
 
 from __future__ import annotations
@@ -38,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sparklucene.build import (IndexPaths, _COMPACTED_MANIFESTS, invert,
-                               load_stats, merge)
+                               _require_current_format, load_stats, merge)
 
 _OPS = ("set", "inc", "add", "add-distinct", "remove")
 
@@ -162,7 +163,7 @@ def update_index(spark: SparkSession, new_corpus: DataFrame,
                  analyzer=None, extra_fields: tuple = (),
                  payloads: str | None = None) -> dict:
     """Reindex the doc-range segments containing ``doc_ids`` from the
-    (already merged) ``new_corpus``, then re-merge. Analyzer/build
+    (already merged) ``new_corpus``, then commit. Analyzer/build
     options must match the original build (same contract as resume).
     Returns the refreshed stats dict.
 
@@ -179,12 +180,10 @@ def update_index(spark: SparkSession, new_corpus: DataFrame,
     dranges = sorted({int(d) // drs for d in doc_ids})
     if not dranges:
         return stats
-    # 1. invalidate the affected segments: partial files + manifests
+    _require_current_format(paths)
+    # 1. forget the affected ranges' manifests, so the re-invert below
+    # rebuilds them; their files stay readable until it replaces them
     for dr in dranges:
-        for kind in ("postings", "docmeta", "termstats"):
-            p = os.path.join(paths.partials, f"{kind}-{dr:06d}.parquet")
-            if os.path.exists(p):
-                os.unlink(p)
         mp = os.path.join(paths.manifest_dir, f"part-{dr:06d}.json")
         if os.path.exists(mp):
             os.unlink(mp)
@@ -203,14 +202,24 @@ def update_index(spark: SparkSession, new_corpus: DataFrame,
     # doc_id arithmetic, so it pushes into the corpus scan
     sub = new_corpus.filter(
         (F.col("doc_id") / F.lit(drs)).cast("int").isin(dranges))
-    invert(sub, paths, drs,
-           stopwords if stopwords is not None else ENGLISH_STOP_WORDS,
-           resume=True, store_positions=store_positions, analyzer=analyzer,
-           extra_fields=extra_fields, payload_mode=payloads)
+    built = invert(sub, paths, drs,
+                   stopwords if stopwords is not None else ENGLISH_STOP_WORDS,
+                   resume=True, store_positions=store_positions,
+                   analyzer=analyzer, extra_fields=extra_fields,
+                   payload_mode=payloads)
+    # a range the new corpus no longer has docs in got no new files:
+    # remove its old ones
+    rebuilt = {int(d) for d in built.loc[built["status"] == "built", "drange"]}
+    for dr in set(dranges) - rebuilt:
+        for p in (os.path.join(paths.postings, f"postings-{dr:06d}.parquet"),
+                  os.path.join(paths.partials, f"docmeta-{dr:06d}.parquet"),
+                  os.path.join(paths.partials, f"termstats-{dr:06d}.parquet")):
+            if os.path.exists(p):
+                os.unlink(p)
     # 3. updated docs are re-added under their ids -> no longer deleted
     dele_path = os.path.join(index_dir, "deletes")
     if os.path.isdir(dele_path):
         _undelete(spark, dele_path, doc_ids)
-    # 4. commit: re-bucket partials + refresh stats
+    # 4. commit: term dictionary + stats
     return merge(spark, paths, drs,
                  extra_meta={"payloads": payloads} if payloads else None)
